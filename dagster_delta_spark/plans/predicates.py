@@ -1,14 +1,11 @@
 """Partition-predicate mini-compiler (reference §2.4, P1-P6).
 
 Compiles partition dimensions into DNF conjunctions and lowers them to
-two dialects:
-
-- a PySpark ``Column`` expression (read path — Catalyst pushes it into
-  the parquet scan; our table layer additionally uses it for
-  driver-side file pruning against logged partition values), and
-- a SQL predicate string (write path ``replaceWhere`` semantics and
-  MERGE-condition narrowing; also rendered in DuckDB-compatible form
-  for oracles).
+one Spark SQL predicate string: the write path's ``replaceWhere``
+scope, MERGE-condition narrowing, and (parsed by ``F.expr``) the read
+path's ``Column``, which Catalyst pushes into the parquet scan.  The
+table layer prunes files against logged partition values with the
+same DNF.
 
 Reference behaviors re-expressed (dd/dagster_delta/handler.py):
 
@@ -26,7 +23,9 @@ read path uses ``Column`` expressions rather than pyarrow compute.
 
 from __future__ import annotations
 
+import re
 from datetime import date, datetime
+from decimal import Decimal
 from typing import Any, Optional, Sequence, Union
 
 from pyspark.sql import Column
@@ -278,45 +277,48 @@ def _value_dnf(
 # ---------------------------------------------------------------------------
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted Spark SQL identifier.
+
+    The table layer builds its per-operation plans (MERGE projections
+    and markers, scan projections, partition predicates) as SQL text
+    quoted with this helper instead of ``F.col``/``Column`` chains:
+    each ``Column`` call is at least one py4j round trip (several with
+    PySpark's default DataFrame call-site capture), while one
+    ``selectExpr``/``F.expr`` string is parsed in the JVM in one."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+_PLAIN_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+_DNF_OPS = ("=", "in", ">=", ">", "<", "<=")
+
+
 def dnf_to_column(dnf: Sequence[DnfFilter]) -> Column:
     """DNF -> PySpark ``Column`` (replaces reference P5
-    ``filters_to_expression``, handler.py:543-544).  Catalyst pushes
-    the resulting predicate into the file scan."""
-    col: Optional[Column] = None
-    for name, op, value in dnf:
-        c = F.col(name)
-        if op == "=":
-            expr = c == F.lit(value)
-        elif op == "in":
-            expr = c.isin(list(value))
-        elif op == ">=":
-            expr = c >= F.lit(value)
-        elif op == ">":
-            expr = c > F.lit(value)
-        elif op == "<":
-            expr = c < F.lit(value)
-        elif op == "<=":
-            # full op set of the sibling consumers (dnf_to_sql and
-            # table._file_matches) — the three lowerings must agree
-            expr = c <= F.lit(value)
-        else:
-            raise ValueError(f"unsupported DNF op {op!r}")
-        col = expr if col is None else (col & expr)
-    if col is None:
+    ``filters_to_expression``, handler.py:543-544): the SQL lowering,
+    parsed once, so the read path and the MERGE/overwrite scope can
+    never disagree.  Catalyst pushes the predicate into the file
+    scan."""
+    if not dnf:
         raise ValueError("empty DNF")
-    return col
+    for _name, op, _value in dnf:
+        if op not in _DNF_OPS:
+            raise ValueError(f"unsupported DNF op {op!r}")
+    return F.expr(dnf_to_sql(dnf))
 
 
 def _sql_literal(value: Any) -> str:
     """Literal rendering (reference P4 ``_create_predicate``,
     handler.py:47-67) with typed datetime literals instead of µs epoch
-    ints; dialect-neutral (valid Spark SQL and DuckDB alike).
-    Sub-second precision is preserved — truncating it would make
-    dnf_to_sql's executed scope (the MERGE predicate) disagree with
-    dnf_to_column/pruned_files on the same DNF."""
+    ints, in Spark SQL: a string escapes ``\\`` (Spark's escape
+    character) and doubles ``'``.  Sub-second precision is preserved —
+    truncating it would make the executed scope (the MERGE predicate)
+    disagree with pruned_files on the same DNF."""
+    if value is None:
+        return "NULL"
     if isinstance(value, bool):
         return "TRUE" if value else "FALSE"
-    if isinstance(value, (int, float)):
+    if isinstance(value, (int, float, Decimal)):
         return str(value)
     if isinstance(value, datetime):
         v = _strip_tz(value)
@@ -325,23 +327,26 @@ def _sql_literal(value: Any) -> str:
     if isinstance(value, date):
         return f"DATE '{value.strftime(DELTA_DATE_FORMAT)}'"
     if isinstance(value, str):
-        escaped = value.replace("'", "''")
+        escaped = value.replace("\\", "\\\\").replace("'", "''")
         return f"'{escaped}'"
     raise TypeError(f"cannot render SQL literal for {type(value)!r}")
 
 
 def dnf_to_sql(dnf: Sequence[DnfFilter], *, qualifier: str = "") -> str:
     """DNF -> SQL predicate string (reference P4/P7): used for
-    ``replaceWhere``-style overwrite scoping and MERGE-condition
-    narrowing (M5, handler.py:92-98)."""
+    ``replaceWhere``-style overwrite scoping, MERGE-condition
+    narrowing (M5, handler.py:92-98) and, through ``dnf_to_column``,
+    the read path.  Names that are not plain identifiers are
+    backtick-quoted."""
     parts = []
     q = f"{qualifier}." if qualifier else ""
     for name, op, value in dnf:
+        col = q + (name if _PLAIN_IDENT.match(name) else sql_ident(name))
         if op == "in":
             lits = ", ".join(_sql_literal(v) for v in value)
-            parts.append(f"{q}{name} IN ({lits})")
+            parts.append(f"{col} IN ({lits})")
         else:
-            parts.append(f"{q}{name} {op} {_sql_literal(value)}")
+            parts.append(f"{col} {op} {_sql_literal(value)}")
     return " AND ".join(parts)
 
 

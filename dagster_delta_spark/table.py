@@ -40,6 +40,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     BinaryType,
     BooleanType,
     ByteType,
@@ -50,6 +51,7 @@ from pyspark.sql.types import (
     FloatType,
     IntegerType,
     LongType,
+    MapType,
     NumericType,
     ShortType,
     StringType,
@@ -59,7 +61,7 @@ from pyspark.sql.types import (
 )
 
 from .config import MergeConfig, MergeType, SchemaMode, WriteMode
-from .plans.predicates import DnfFilter, dnf_to_column, dnf_to_sql
+from .plans.predicates import DnfFilter, dnf_to_column, dnf_to_sql, sql_ident
 from . import delta_interop, tablelog
 from .tablelog import (
     AddFile,
@@ -1295,14 +1297,27 @@ def _merge_schemas(table_schema: StructType, df_schema: StructType) -> StructTyp
     return StructType(fields)
 
 
+def _sql_type(dt: DataType) -> str:
+    """``dt`` as a SQL type, with struct field names quoted."""
+    if isinstance(dt, StructType):
+        return "struct<" + ",".join(
+            f"{sql_ident(f.name)}:{_sql_type(f.dataType)}" for f in dt.fields
+        ) + ">"
+    if isinstance(dt, ArrayType):
+        return f"array<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, MapType):
+        return f"map<{_sql_type(dt.keyType)},{_sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
 def _conform(df: DataFrame, schema: StructType) -> DataFrame:
     """Project ``df`` onto ``schema`` order, null-filling absent columns."""
     have = set(df.columns)
-    cols = [
-        F.col(f.name) if f.name in have else F.lit(None).cast(f.dataType).alias(f.name)
+    return df.selectExpr(*[
+        sql_ident(f.name) if f.name in have
+        else f"CAST(NULL AS {_sql_type(f.dataType)}) AS {sql_ident(f.name)}"
         for f in schema.fields
-    ]
-    return df.select(*cols)
+    ])
 
 
 class DeltaSparkTable:
@@ -1410,9 +1425,9 @@ class DeltaSparkTable:
                 df = reader.parquet(
                     *[os.path.join(root, a.path) for a in sub])
                 if with_metadata or dv_sub:
-                    df = df.select(
-                        F.col("_metadata.file_path").alias("__path"),
-                        F.col("_metadata.row_index").alias("__ri"),
+                    df = df.selectExpr(
+                        "_metadata.file_path AS __path",
+                        "_metadata.row_index AS __ri",
                         "*",
                     )
                 if dv_sub:
@@ -1425,10 +1440,10 @@ class DeltaSparkTable:
             out = out.unionByName(f)
         if mapping:
             pre = ["__path", "__ri"] if with_metadata else []
-            out = out.select(
+            out = out.selectExpr(
                 *pre,
-                *[F.col(mapping.get(f.name, f.name)).alias(f.name)
-                  for f in schema.fields],
+                *[f"{sql_ident(mapping.get(f.name, f.name))} AS "
+                  f"{sql_ident(f.name)}" for f in schema.fields],
             )
         return out
 
@@ -2487,9 +2502,9 @@ class DeltaSparkTable:
                 return None
             aggs = []
             for i, (_tc, sc) in enumerate(eq):
-                aggs += [F.min(sc).alias(f"__lo{i}"),
-                         F.max(sc).alias(f"__hi{i}")]
-            bounds = source.agg(*aggs).first()
+                aggs += [f"min({sql_ident(sc)}) AS __lo{i}",
+                         f"max({sql_ident(sc)}) AS __hi{i}"]
+            bounds = source.selectExpr(*aggs).first()
             rng: list[DnfFilter] = []
             for i, (tc, _sc) in enumerate(eq):
                 lo, hi = bounds[f"__lo{i}"], bounds[f"__hi{i}"]
@@ -2515,7 +2530,7 @@ class DeltaSparkTable:
                     ]
                 except TypeError:
                     pass  # incomparable stat/bound types: no pruning
-        src = source.withColumn("__s_m", F.lit(1))
+        src = source.selectExpr("*", "1 AS __s_m")
         cond = F.expr(pred)
 
         mtype = merge_config.merge_type
@@ -2533,29 +2548,14 @@ class DeltaSparkTable:
             # silently duplicate).  Keys are FULL file paths — a
             # partitioned write names files identically across partition
             # dirs, so basenames collide and would both mis-scope the
-            # rewrite and false-trigger the cardinality error.  Driver
-            # traffic stays bounded by file count, streamed
-            # partition-by-partition.
+            # rewrite and false-trigger the cardinality error.  The
+            # result is one row per touched file, collected.
             tgt = self._read_files(snap, candidates, with_metadata=True)
-            matches = tgt.alias(ta).join(src.alias(sa), cond)
-            if needs_update:
-                per_file = (
-                    matches.groupBy(F.col(f"{ta}.__path"), F.col(f"{ta}.__ri"))
-                    .agg(F.count(F.lit(1)).alias("__n"))
-                    .groupBy("__path")
-                    .agg(F.max("__n").alias("__max_n"))
-                )
-            else:
-                # insert-only merges discard the cardinality count —
-                # skip its extra aggregation level
-                per_file = (
-                    matches.select(F.col(f"{ta}.__path").alias("__path"))
-                    .distinct()
-                    .withColumn("__max_n", F.lit(1))
-                )
+            per_file = self._merge_discovery(
+                tgt.alias(ta).join(src.alias(sa), cond), ta, needs_update)
             touched_paths = set()
             max_matches = 0
-            for r in per_file.toLocalIterator():
+            for r in per_file.collect():
                 touched_paths.add(r["__path"])
                 max_matches = max(max_matches, r["__max_n"])
             if needs_update and max_matches > 1:
@@ -2598,54 +2598,41 @@ class DeltaSparkTable:
         else:
             rewrite_scope = touched_adds
 
-        t_scope = self._read_files(snap, rewrite_scope).withColumn("__t_m", F.lit(1))
+        t_scope = self._read_files(snap, rewrite_scope).selectExpr(
+            "*", "1 AS __t_m")
         joined = t_scope.alias(ta).join(src.alias(sa), cond, "full_outer")
-        matched = F.col(f"{ta}.__t_m").isNotNull() & F.col(f"{sa}.__s_m").isNotNull()
-        s_only = F.col(f"{ta}.__t_m").isNull() & F.col(f"{sa}.__s_m").isNotNull()
-
+        T, S = sql_ident(ta), sql_ident(sa)
         src_cols = set(source.columns)
 
-        def updated_row() -> list:
-            # when_matched_update_all: take source value for columns the
-            # source has; keep target value otherwise
-            return [
-                (F.col(f"{sa}.{f.name}") if f.name in src_cols else F.col(f"{ta}.{f.name}"))
-                .alias(f.name)
-                for f in table_schema.fields
-            ]
+        def row(source_value) -> list[str]:
+            # the target schema as one SQL projection: a column the
+            # source has renders ``source_value``, the rest keep the
+            # target value
+            out = []
+            for f in table_schema.fields:
+                c = sql_ident(f.name)
+                v = source_value(c) if f.name in src_cols else f"{T}.{c}"
+                out.append(f"{v} AS {c}")
+            return out
 
-        def inserted_row() -> list:
-            return [
-                (
-                    F.col(f"{sa}.{f.name}")
-                    if f.name in src_cols
-                    else F.lit(None).cast(f.dataType)
-                ).alias(f.name)
-                for f in table_schema.fields
-            ]
-
-        def folded_row() -> list:
-            # ONE projection covering matched-update, target-only and
-            # (when reachable) source-only rows at once: on a
-            # FULL-OUTER join the missing side's columns are NULL, so
-            # "take source when the source side is present, else
-            # target" reproduces updated_row() on matched rows, the
-            # plain target row on target-only rows, and inserted_row()
-            # on source-only rows (target side all-NULL) — exactly the
-            # branch semantics, without re-executing the join once per
-            # branch (r15, guide §2.4: unionByName of per-branch
-            # filters re-runs the join's sort+merge+project per
-            # branch; only the Exchanges are reused).
-            return [
-                (
-                    F.when(F.col(f"{sa}.__s_m").isNotNull(),
-                           F.col(f"{sa}.{f.name}"))
-                    .otherwise(F.col(f"{ta}.{f.name}"))
-                    if f.name in src_cols else F.col(f"{ta}.{f.name}")
-                )
-                .alias(f.name)
-                for f in table_schema.fields
-            ]
+        # when_matched_update_all on matched rows; on source-only rows
+        # the target side is all NULL, so the same projection is the
+        # inserted row
+        updated_row = row(lambda c: f"{S}.{c}")
+        # ONE projection covering matched-update, target-only and
+        # (when reachable) source-only rows at once: on a FULL-OUTER
+        # join the missing side's columns are NULL, so "take source
+        # when the source side is present, else target" reproduces
+        # updated_row on matched rows, the plain target row on
+        # target-only rows, and the inserted row on source-only rows
+        # (target side all-NULL) — exactly the branch semantics,
+        # without re-executing the join once per branch (r15, guide
+        # §2.4: unionByName of per-branch filters re-runs the join's
+        # sort+merge+project per branch; only the Exchanges are
+        # reused).
+        folded_row = row(
+            lambda c: f"CASE WHEN {S}.__s_m IS NOT NULL THEN {S}.{c} "
+                      f"ELSE {T}.{c} END")
 
         # the insert branch folds into the carried projection only when
         # no identity column needs per-branch allocation
@@ -2653,25 +2640,27 @@ class DeltaSparkTable:
         branches: list[DataFrame] = []
         if mtype == MergeType.replace_delete_unmatched:
             # matched -> updated; not-matched-by-source -> deleted
-            branches.append(joined.where(matched).select(*updated_row()))
+            branches.append(joined.where(
+                f"{T}.__t_m IS NOT NULL AND {S}.__s_m IS NOT NULL"
+            ).selectExpr(*updated_row))
         elif needs_update and fold_insert:
             # upsert without identity: every full-outer row lands in
             # exactly one branch, so no filter and no union at all
-            branches.append(joined.select(*folded_row()))
+            branches.append(joined.selectExpr(*folded_row))
         elif needs_update:
             # matched + target-only in one pass (within target-present
             # rows, "source side present" IS the matched predicate)
             branches.append(
-                joined.where(F.col(f"{ta}.__t_m").isNotNull())
-                .select(*folded_row())
-            )
+                joined.where(f"{T}.__t_m IS NOT NULL").selectExpr(*folded_row))
         else:
             # M2: target rows never rewritten
             pass
         merge_id_assumed: dict[str, Optional[str]] = {}
         merge_id_updates: dict[str, str] = {}
         if needs_insert and not fold_insert:
-            ins_b = joined.where(s_only).select(*inserted_row())
+            ins_b = joined.where(
+                f"{T}.__t_m IS NULL AND {S}.__s_m IS NOT NULL"
+            ).selectExpr(*updated_row)
             # identity allocation for merge-inserts: the same
             # prefix-sum allocator as write(), on the insert branch
             # only (matched/carried rows keep their target ids); the
@@ -2892,6 +2881,28 @@ class DeltaSparkTable:
         if partition_dnf:
             cond = cond & dnf_to_column(partition_dnf)
         return cond.eqNullSafe(F.lit(True))
+
+    @staticmethod
+    def _merge_discovery(
+        matches: DataFrame, ta: str, needs_update: bool
+    ) -> DataFrame:
+        """One row per file touched by a MERGE discovery join:
+        ``__path`` and ``__max_n``, the most source rows matching one
+        target row (1 for insert-only merges, which discard the
+        count).  One shuffle: hash-partitioning on ``__path`` also
+        satisfies the ``(__path, __ri)`` grouping, so both aggregation
+        levels run without a second Exchange, and one file's matched
+        rows aggregate in one task."""
+        keyed = matches.selectExpr(f"{sql_ident(ta)}.__path AS __path",
+                                   f"{sql_ident(ta)}.__ri AS __ri")
+        if not needs_update:
+            return keyed.select("__path").distinct().selectExpr(
+                "__path", "1 AS __max_n")
+        return (
+            keyed.repartition("__path")
+            .groupBy("__path", "__ri").agg(F.expr("count(1) AS __n"))
+            .groupBy("__path").agg(F.expr("max(__n) AS __max_n"))
+        )
 
     def _per_file_hits(
         self, snap: Snapshot, candidates: Sequence[AddFile], match

@@ -125,15 +125,18 @@ def test_pruning_invariant_random_predicates(spark, tmp_path):
 
 
 def test_sql_and_column_lowering_agree(spark):
-    """Property: dnf_to_sql and dnf_to_column select identical rows."""
+    """Property: dnf_to_sql and dnf_to_column select identical rows,
+    the ones the DNF means (string values hold quotes and backslashes)."""
     from datetime import datetime
+    import operator
     import random
 
     from dagster_delta_spark.plans.predicates import dnf_to_column, dnf_to_sql
 
     rnd = random.Random(11)
+    strs = ["x", "o'x", "y", "C:\\data", "a\\'b", "\\"]
     rows = [
-        (i, rnd.choice(["x", "o'x", "y"]), datetime(2020, 1, 1 + rnd.randint(0, 20)))
+        (i, rnd.choice(strs), datetime(2020, 1, 1 + rnd.randint(0, 20)))
         for i in range(200)
     ]
     df = spark.createDataFrame(rows, "n bigint, s string, ts timestamp")
@@ -142,14 +145,22 @@ def test_sql_and_column_lowering_agree(spark):
         [("n", ">=", 100)],
         [("s", "=", "o'x")],
         [("s", "in", ["x", "y"])],
+        [("s", "=", "C:\\data")],
+        [("s", "=", "a\\'b")],
+        [("s", "in", ["\\", "o'x"])],
+        [("s", ">=", "C:\\")],
         [("ts", "<", datetime(2020, 1, 10))],
         [("n", ">=", 50), ("ts", ">=", datetime(2020, 1, 5))],
     ]
+    ops = {"=": operator.eq, ">=": operator.ge, "<": operator.lt,
+           "in": lambda v, vs: v in vs}
+    pos = {"n": 0, "s": 1, "ts": 2}
     for dnf in cases:
         a = df.where(dnf_to_column(dnf)).count()
         b = spark.sql(f"SELECT count(*) c FROM prop_t WHERE {dnf_to_sql(dnf)}") \
             .collect()[0]["c"]
-        assert a == b, dnf
+        want = sum(all(ops[op](r[pos[c]], v) for c, op, v in dnf) for r in rows)
+        assert a == b == want, dnf
 
 
 def test_write_time_clustering(spark, tmp_table):

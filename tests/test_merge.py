@@ -242,3 +242,86 @@ def test_merge_not_predicate_disables_pruning(spark, tmp_table):
     out = t.read()
     assert out.count() == n
     assert out.where("y < 1000000").count() == 0  # every row updated
+
+
+def test_merge_backslash_partition_value_updates_in_place(spark, tmp_table):
+    """A partition-scoped upsert into a partition whose value holds a
+    backslash (or a quote after one) updates the existing row: the
+    scope's SQL literal must escape Spark's escape character, or the
+    narrowed condition matches nothing and the row is duplicated."""
+    t = DeltaSparkTable(spark, tmp_table)
+    parts = ["C:\\data", "a\\'b"]
+    t.write(spark.createDataFrame([(p, 1, 10) for p in parts],
+                                  "p string, k bigint, v bigint"),
+            WriteMode.overwrite, partition_columns=["p"])
+    cfg = MergeConfig(MergeType.upsert, predicate="s.k = t.k")
+    for p in parts:
+        src = spark.createDataFrame([(p, 1, 20)], "p string, k bigint, v bigint")
+        t.merge(src, cfg, partition_dnf=[("p", "=", p)])
+    assert sorted((r.p, r.k, r.v) for r in t.read().collect()) == \
+        sorted((p, 1, 20) for p in parts)
+    assert [r.v for r in t.read(dnf=[("p", "=", "C:\\data")]).collect()] == [20]
+
+
+def test_merge_spark_work_is_pinned(spark, tmp_table, monkeypatch):
+    """A partition-scoped matched-update merge runs at most 6 Spark
+    jobs, and its discovery plan shuffles once (on the file path)."""
+    import re
+
+    t = DeltaSparkTable(spark, tmp_table)
+    df = spark.createDataFrame(
+        [(p, k, k) for p in ("x", "y") for k in range(20)],
+        "p string, k bigint, v bigint")
+    t.write(df.repartition(2), WriteMode.overwrite, partition_columns=["p"])
+    src = spark.createDataFrame([("x", k, -k) for k in range(0, 20, 3)],
+                                "p string, k bigint, v bigint")
+    shuffles: list[int] = []
+    discovery = DeltaSparkTable._merge_discovery
+
+    def spy(matches, ta, needs_update):
+        out = discovery(matches, ta, needs_update)
+        # the plan before execution; BroadcastExchange is not a shuffle
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        shuffles.append(len(re.findall(r"(?<![A-Za-z])Exchange ", plan)))
+        return out
+
+    monkeypatch.setattr(DeltaSparkTable, "_merge_discovery", staticmethod(spy))
+    sc = spark.sparkContext
+    sc.setJobGroup("merge-pin", "partition-scoped matched-update merge")
+    try:
+        t.merge(src, MergeConfig(MergeType.upsert, predicate="s.k = t.k"),
+                partition_dnf=[("p", "=", "x")])
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("merge-pin")
+    assert len(jobs) <= 6, sorted(jobs)
+    assert shuffles == [1]
+    got = {(r.p, r.k): r.v for r in t.read().collect()}
+    assert got == {(p, k): (-k if p == "x" and k % 3 == 0 else k)
+                   for p in ("x", "y") for k in range(20)}
+
+
+def test_merge_multi_match_keyed_by_file_and_row(spark, tmp_table):
+    """The cardinality check counts matches per (file, row_index):
+    rows at the same row_index of two files in one partition, each
+    matched once, merge cleanly; one row matched twice still raises."""
+    import pytest
+
+    from dagster_delta_spark import MergeMultipleMatchesError
+
+    t = DeltaSparkTable(spark, tmp_table)
+    schema = "p string, k bigint, v bigint"
+    for k in (1, 2):  # two one-row files: both rows at row_index 0
+        t.write(spark.createDataFrame([("a", k, 0)], schema),
+                WriteMode.append, partition_columns=["p"])
+    assert len(t.snapshot().files) == 2
+    cfg = MergeConfig(MergeType.upsert, predicate="s.k = t.k")
+    scope = [("p", "=", "a")]
+    t.merge(spark.createDataFrame([("a", 1, 10), ("a", 2, 20)], schema),
+            cfg, partition_dnf=scope)
+    assert sorted((r.k, r.v) for r in t.read().collect()) == [(1, 10), (2, 20)]
+    with pytest.raises(MergeMultipleMatchesError):
+        t.merge(spark.createDataFrame([("a", 1, 11), ("a", 1, 12)], schema),
+                cfg, partition_dnf=scope)
