@@ -24,6 +24,7 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import dataclasses
 import hashlib
 import json
 import os
@@ -34,8 +35,8 @@ import uuid
 from datetime import date, datetime, timedelta
 from functools import lru_cache
 from decimal import Decimal
-from typing import Any, Optional, Sequence
-from urllib.parse import unquote
+from typing import Any, Callable, Iterable, Optional, Sequence
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1320,6 +1321,295 @@ def _conform(df: DataFrame, schema: StructType) -> DataFrame:
     ])
 
 
+# -- optimistic transaction -----------------------------------------------------
+
+#: A declared conflict check: called on every commit attempt with
+#: ``(read, fresh)`` -- the snapshot the operation planned against and
+#: the head it is about to commit on top of (each None while there is
+#: no table) -- and raises to abort the commit.
+Check = Callable[[Optional[Snapshot], Optional[Snapshot]], None]
+
+
+class CommitSkipped(Exception):
+    """Raised by a check when the fresh head already holds this
+    operation's effect (a replayed micro-batch; ``WriteMode.ignore``
+    on a table created meanwhile).  Nothing is committed."""
+
+    def __init__(self, fresh: Snapshot):
+        super().__init__(f"already committed as of version {fresh.version}")
+        self.fresh = fresh
+
+
+def _head_snapshot(table_uri: str) -> Optional[Snapshot]:
+    """The head snapshot, or None when there is no table: one log
+    listing (``load_snapshot`` lists the log to find its head)."""
+    try:
+        return tablelog.load_snapshot(table_uri)
+    except TableNotFoundError:
+        if tablelog.latest_version(table_uri) < 0:
+            return None
+        return tablelog.load_snapshot(table_uri)  # created meanwhile
+
+
+class Transaction:
+    """One optimistic commit, after Delta's OptimisticTransaction.
+
+    ``read`` is the snapshot the operation planned against (None when
+    it found no table).  The caller declares its conflict ``checks``
+    and hands its staged files to :meth:`commit`.  Each attempt reads
+    the head once, re-runs every check against it, folds removes
+    before adds into the post-commit snapshot (carrying the txn ledger
+    and protocol forward) and publishes head + 1 through
+    ``tablelog.commit``.  A lost race backs off exponentially and
+    tries again on the new head.  ``operationMetrics`` records
+    ``executionTimeMs`` (since the transaction started) and
+    ``attempts``."""
+
+    def __init__(
+        self,
+        table_uri: str,
+        read: Optional[Snapshot],
+        operation: str,
+        parameters: Optional[dict[str, Any]] = None,
+        user_metadata: Optional[dict[str, str]] = None,
+    ):
+        if read is not None:
+            # the writer-protocol gate runs at start, before the caller
+            # stages a byte: a future-writer table must refuse up
+            # front, not strand staged files per attempt
+            # (tablelog.commit re-checks at publish time)
+            tablelog.check_write_support(read.protocol, table_uri)
+        self.table_uri = table_uri
+        self.read = read
+        self.operation = operation
+        self.parameters = dict(parameters or {})
+        self.user_metadata = user_metadata
+        self.checks: list[Check] = []
+        self.metrics: dict[str, Any] = {}
+        self._started = time.monotonic()
+
+    def commit(
+        self,
+        adds: Sequence[AddFile] = (),
+        removes: Any = (),
+        metadata: Any = None,
+        *,
+        metrics: Optional[dict[str, Any]] = None,
+        txns: Optional[dict[str, int]] = None,
+    ) -> Snapshot:
+        """Publish and return the committed snapshot.  ``removes`` and
+        ``metadata`` may be callables of the fresh head (None when
+        there is no table): a full overwrite removes whatever is live
+        at commit time, and a metadata change rebuilds on top of a
+        concurrent writer's.  ``metadata=None`` keeps the head's
+        metadata and writes no metaData action.  ``txns`` are
+        SetTransaction entries, folded the way log replay folds
+        them."""
+        for attempt in range(_COMMIT_RETRIES + 1):
+            fresh = _head_snapshot(self.table_uri)
+            if fresh is None and self.read is not None:
+                raise TableNotFoundError(
+                    f"the table at {self.table_uri} was deleted during "
+                    f"{self.operation}")
+            for check in self.checks:
+                check(self.read, fresh)
+            rm = list(removes(fresh) if callable(removes) else removes)
+            meta = metadata(fresh) if callable(metadata) else metadata
+            version = fresh.version + 1 if fresh else 0
+            now = int(time.time() * 1000)
+            self.metrics = {
+                **(metrics or {}),
+                "num_added_files": len(adds),
+                "num_removed_files": len(rm),
+                "executionTimeMs": int(
+                    (time.monotonic() - self._started) * 1000),
+                "attempts": attempt + 1,
+            }
+            actions: list[dict[str, Any]] = [CommitInfo(
+                self.operation, self.parameters, self.metrics,
+                self.user_metadata, now).to_action()]
+            if meta is not None:
+                actions.append(meta.to_action())
+            actions += [{"txn": {"appId": k, "version": v}}
+                        for k, v in sorted((txns or {}).items())]
+            # removes BEFORE adds: log replay applies actions in order,
+            # so a rewrite that re-adds a removed log_key (deletion
+            # vectors re-add the same data file with a new DV) must not
+            # have its add popped by its own remove
+            actions += [r.remove_action(now) for r in rm]
+            actions += [a.to_action() for a in adds]
+            files = {a.log_key: a for a in (fresh.files if fresh else [])}
+            for r in rm:
+                files.pop(r.log_key, None)
+            for a in adds:
+                files[a.log_key] = a
+            ledger = dict(fresh.app_versions) if fresh else {}
+            for k, v in (txns or {}).items():
+                ledger[k] = (v if k.startswith(tablelog.COPY_INTO_APP_PREFIX)
+                             else max(ledger.get(k, -1), v))
+            snap = Snapshot(version, meta or fresh.metadata,
+                            list(files.values()), now, app_versions=ledger,
+                            protocol=fresh.protocol if fresh
+                            else tablelog.Protocol())
+            try:
+                tablelog.commit(self.table_uri, version, actions, snap)
+                return snap
+            except VersionConflictError:
+                if attempt >= _COMMIT_RETRIES:
+                    raise
+                time.sleep(_COMMIT_BACKOFF_BASE * (2**attempt) + _jitter())
+        raise AssertionError("unreachable")
+
+
+def _table_absent(table_uri: str, mode: WriteMode) -> Check:
+    """``WriteMode.error``/``ignore``: a table created since planning
+    raises, or skips the write."""
+    def check(read, fresh):
+        if fresh is not None:
+            if mode == WriteMode.ignore:
+                raise CommitSkipped(fresh)
+            raise TableExistsError(f"table already exists at {table_uri}")
+    return check
+
+
+def _not_append_only(table_uri: str, op: str) -> Check:
+    """A concurrent SET dds.appendOnly=true must not race a
+    row-removing commit past the freeze."""
+    def check(read, fresh):
+        if fresh is not None:
+            _refuse_append_only(table_uri, fresh.metadata.configuration, op)
+    return check
+
+
+def _identity_marks_unchanged(assumed: dict[str, Optional[str]],
+                              what: str) -> Check:
+    """A concurrent writer that advanced an identity high-water mark
+    invalidates this commit's allocation: the staged ids would
+    duplicate the winner's.  Refuse (a rerun re-allocates) -- never
+    mint duplicate ids."""
+    def check(read, fresh):
+        for ikey, iassumed in assumed.items():
+            mark = fresh.metadata.configuration.get(ikey) if fresh else None
+            if mark != iassumed:
+                raise ConcurrentAppendError(
+                    f"identity mark {ikey} advanced concurrently "
+                    f"({iassumed} -> {mark}); rerun the {what} to "
+                    "re-allocate ids")
+    return check
+
+
+def _copy_ledger_unchanged(expected: dict[str, Optional[int]]) -> Check:
+    """A racing COPY INTO that loaded one of this write's source files
+    between discovery and commit would land the file twice -- refuse;
+    the rerun's discovery skips it (exactly-once per file)."""
+    def check(read, fresh):
+        for key, want in expected.items():
+            got = fresh.app_versions.get(key) if fresh else None
+            if got != want:
+                raise ConcurrentAppendError(
+                    f"copy_into source file ledger entry {key} changed "
+                    f"concurrently ({want} -> {got}); rerun copy_into to "
+                    "re-discover")
+    return check
+
+
+def _same_layout(pcols: Sequence[str],
+                 schema: Optional[StructType] = None) -> Check:
+    """Files staged under one partition layout (and, for the exact-
+    schema streaming sink, one schema) must not be committed under
+    another: a table created or repartitioned since planning refuses
+    rather than publish rows that read back wrong or not at all."""
+    def check(read, fresh):
+        if fresh is None:
+            return
+        if list(fresh.partition_columns) != list(pcols):
+            raise ConcurrentAppendError(
+                f"the table's partition columns changed concurrently "
+                f"({list(pcols)} staged, {list(fresh.partition_columns)} "
+                "committed); rerun the write to restage")
+        if schema is not None and (
+                {f.name: f.dataType for f in schema.fields}
+                != {f.name: f.dataType for f in StructType.fromJson(
+                    _json_loads(fresh.schema_json)).fields}):
+            raise ConcurrentAppendError(
+                "the table's schema changed concurrently; rerun the "
+                "write to restage")
+    return check
+
+
+def _removes_live(op: str, removes: Sequence[AddFile]) -> Check:
+    """Every file this commit removes must still be live: committing
+    over a concurrent removal would resurrect or lose rows (Delta's
+    ConcurrentDeleteReadException)."""
+    keys = {r.log_key for r in removes}
+
+    def check(read, fresh):
+        missing = keys - {a.log_key for a in fresh.files}
+        if missing:
+            raise ConcurrentDeleteError(
+                f"{op}: {len(missing)} file(s) this commit replaces were "
+                f"removed concurrently (e.g. {sorted(missing)[0]})")
+    return check
+
+
+def _appended_since(table_uri: str, read: Snapshot,
+                    fresh: Snapshot) -> list[AddFile]:
+    """Files added by the commits between ``read`` and ``fresh``,
+    except compactions: OPTIMIZE re-adds existing rows under new paths
+    (Delta's dataChange=false), so no new data arrived."""
+    added: list[AddFile] = []
+    for v in range(read.version + 1, fresh.version + 1):
+        operation, adds_v = "", []
+        for action in tablelog.read_version_actions(table_uri, v):
+            if "commitInfo" in action:
+                operation = action["commitInfo"].get("operation", "")
+            elif "add" in action:
+                adds_v.append(AddFile.from_action(action["add"]))
+        if tablelog.classify_commit(operation) != "compaction":
+            added += adds_v
+    return added
+
+
+def _commit_mapping(configuration: dict[str, str], schema: StructType,
+                    staged: dict[str, str]) -> dict[str, str]:
+    """The column mapping to commit for files staged under ``staged``,
+    re-validated against the fresh ``configuration``: a concurrent
+    RENAME/DROP (or a racing writer re-adding the same dropped name)
+    can invalidate the physical names the files were written under.
+    Staged assignments are pinned (the parquet files exist under those
+    names); only conflicts raise."""
+    base = _column_mapping(configuration)
+    taken = set(base.values()) | set(_json_loads(
+        configuration.get(_DROPPED_KEY) or "[]"))
+    out = dict(base)
+    for f in schema.fields:
+        phys = staged.get(f.name, f.name)
+        if f.name in base:
+            if base[f.name] != phys:
+                raise ConcurrentAppendError(
+                    f"column mapping for {f.name!r} changed concurrently "
+                    "(rename/drop or a racing re-add); rerun the write to "
+                    "restage")
+        elif phys != f.name:
+            # staged under a minted physical: keep it, unless a
+            # concurrent writer reserved it meanwhile
+            if phys in taken:
+                raise ConcurrentAppendError(
+                    f"physical name {phys!r} was reserved concurrently; "
+                    "rerun the write")
+            out[f.name] = phys
+            taken.add(phys)
+        elif f.name in taken:
+            # staged under the bare logical name, but a concurrent
+            # drop/rename reserved that physical -- committing would
+            # resurrect the old column's data
+            raise ConcurrentAppendError(
+                f"column {f.name!r}'s physical name was reserved "
+                "concurrently (drop/rename raced this write); rerun the "
+                "write to restage")
+    return out
+
+
 class DeltaSparkTable:
     """Handle to one transactional table (reference: ``DeltaTable``
     via delta-rs; here log + Spark)."""
@@ -1488,7 +1778,7 @@ class DeltaSparkTable:
         scan side joins on raw ``__path`` — no per-row computation.
         Paths with URI-encodable characters (or a non-prefix runtime
         format) fall back to per-row normalization, the Spark twin of
-        the ``unquote(urlparse(p).path)`` rule ``_per_file_hits``
+        the ``unquote(urlparse(p).path)`` rule ``_scanned_files``
         uses.  The mapping frame is one row per DV'd file and the DV
         rows are bounded by ``sum(dv_count)`` — both broadcast-sized
         by construction."""
@@ -1627,8 +1917,6 @@ class DeltaSparkTable:
         carry the full union mask), read back from the untouched data
         files — the exact row-level DELETE/preimage feed.  Cost ∝ the
         masked files' rows, never the table."""
-        import dataclasses
-
         fk = self.spark.createDataFrame(
             [(os.path.abspath(a.base or self.table_uri), a.path)
              for a in re_adds],
@@ -1867,22 +2155,11 @@ class DeltaSparkTable:
         staging so per-file min/max stats are tight on those columns
         (write-time layout optimization; see also optimize(cluster_by)).
         """
-        head = tablelog.latest_version(self.table_uri)
-        exists = head >= 0
-
-        if mode == WriteMode.error and exists:
+        snap = _head_snapshot(self.table_uri)
+        if mode == WriteMode.error and snap is not None:
             raise TableExistsError(f"table already exists at {self.table_uri}")
-        if mode == WriteMode.ignore and exists:
-            return {"mode": "ignore", "version": head, "skipped": True}
-
-        snap = tablelog.load_snapshot(self.table_uri) if exists else None
-        if snap is not None:
-            # writer-protocol gate BEFORE the distributed staging job
-            # (the pre-staging-validation rule): a future-writer table
-            # must refuse up front, not strand a full set of staged
-            # files per attempt.  tablelog.commit re-checks at publish
-            # time as the exactness backstop.
-            tablelog.check_write_support(snap.protocol, self.table_uri)
+        if mode == WriteMode.ignore and snap is not None:
+            return {"mode": "ignore", "version": snap.version, "skipped": True}
         table_schema = (
             StructType.fromJson(_json_loads(snap.schema_json)) if snap else None
         )
@@ -1915,12 +2192,34 @@ class DeltaSparkTable:
 
         if mode == WriteMode.create_or_replace:
             return self._create_or_replace(
-                df.schema, pcols, table_configuration, commit_metadata
+                snap, df.schema, pcols, table_configuration, commit_metadata
             )
+
+        op_params: dict[str, Any] = {"mode": mode.value}
+        if partition_dnf:
+            op_params["predicate"] = dnf_to_sql(partition_dnf)
+        if pcols:
+            op_params["partitionBy"] = pcols
+        txn = Transaction(self.table_uri, snap, f"WRITE {mode.value}",
+                          op_params, commit_metadata)
+        if mode in (WriteMode.error, WriteMode.ignore):
+            txn.checks.append(_table_absent(self.table_uri, mode))
+        if mode == WriteMode.overwrite:
+            # the append-only freeze: both full and partition-scoped
+            # overwrite remove live rows
+            txn.checks.append(_not_append_only(self.table_uri, "overwrite"))
+        if _copy_txns_expected:
+            txn.checks.append(_copy_ledger_unchanged(_copy_txns_expected))
+        # a full unscoped overwrite replaces every file, so it may also
+        # replace the partitioning; any other write's files must land
+        # under the layout they were staged for
+        replaces_all = mode == WriteMode.overwrite and partition_dnf is None
+        if not replaces_all:
+            txn.checks.append(_same_layout(pcols))
 
         # identity columns: GENERATED ALWAYS — allocate dense values
         # from the persisted high-water mark; the mark advances in the
-        # same commit as the data (conflict-checked in the commit loop)
+        # same commit as the data (conflict-checked at commit)
         identity_assumed: dict[str, Optional[str]] = {}
         identity_updates: dict[str, str] = {}
         for c, ispec in _identity_columns(merged_cfg).items():
@@ -1954,8 +2253,8 @@ class DeltaSparkTable:
         # scoped overwrite may only reference real partition columns —
         # validated BEFORE the distributed write so a plain user error
         # doesn't strand a full set of staged-and-moved orphan files
-        # (the same check re-runs inside the commit loop against the
-        # fresh snapshot, which is the exactness guarantee)
+        # (the same checks re-run at commit against the fresh head,
+        # which is the exactness guarantee)
         if mode == WriteMode.overwrite and snap is not None:
             # the append-only freeze: both full and partition-scoped
             # overwrite remove live rows
@@ -2027,7 +2326,7 @@ class DeltaSparkTable:
             # partition value, not one per task per partition
             out = out.repartition(*[F.col(c) for c in pcols])
         # planning-time mapping for STAGING only; the committed updates
-        # re-derive against the fresh head inside the retry loop
+        # re-derive against the fresh head at commit
         stage_mapping, _ = _evolve_mapping(
             snap.metadata.configuration if snap else {}, final_schema)
         adds = _stage_dataframe(out, self.table_uri, pcols, final_schema,
@@ -2035,271 +2334,101 @@ class DeltaSparkTable:
                                 mapping=stage_mapping,
                                 bloom_spec=_bloom_columns(merged_cfg))
         rows_written = sum(a.num_records for a in adds)
+        if identity_assumed:
+            txn.checks.append(_identity_marks_unchanged(identity_assumed,
+                                                        "write"))
 
-        for attempt in range(_COMMIT_RETRIES + 1):
-            head = tablelog.latest_version(self.table_uri)
-            exists = head >= 0
-            if mode == WriteMode.error and exists:
-                raise TableExistsError(f"table already exists at {self.table_uri}")
-            if mode == WriteMode.ignore and exists:
-                return {"mode": "ignore", "version": head, "skipped": True}
-            snap = tablelog.load_snapshot(self.table_uri) if exists else None
+        def fresh_cfg(fresh: Optional[Snapshot]) -> dict[str, str]:
+            return dict(fresh.metadata.configuration if fresh else {},
+                        **(table_configuration or {}))
 
-            # a concurrent writer that advanced an identity high-water
-            # mark invalidates this write's allocation: the staged ids
-            # would duplicate the winner's.  Refuse (rerun re-allocates
-            # against the fresh mark) — never mint duplicate ids.
-            for ikey, iassumed in identity_assumed.items():
-                fresh_mark = (snap.metadata.configuration.get(ikey)
-                              if snap else None)
-                if fresh_mark != iassumed:
-                    raise ConcurrentAppendError(
-                        f"identity mark {ikey} advanced concurrently "
-                        f"({iassumed} -> {fresh_mark}); rerun the write "
-                        "to re-allocate ids"
-                    )
+        # column mapping re-validates against the FRESH configuration
+        txn.checks.append(lambda read, fresh: _commit_mapping(
+            fresh_cfg(fresh), final_schema, stage_mapping))
 
-            # copy_into file-ledger guard: a racing COPY INTO that
-            # loaded one of this write's source files between discovery
-            # and commit would make the file land twice — refuse, the
-            # rerun's discovery pass skips it (exactly-once per file)
-            for ckey, expected in (_copy_txns_expected or {}).items():
-                fresh_rec = (snap.app_versions.get(ckey)
-                             if snap else None)
-                if fresh_rec != expected:
-                    raise ConcurrentAppendError(
-                        f"copy_into source file ledger entry {ckey} "
-                        f"changed concurrently ({expected} -> "
-                        f"{fresh_rec}); rerun copy_into to re-discover"
-                    )
+        def overwritten(fresh: Optional[Snapshot]) -> list[AddFile]:
+            if mode != WriteMode.overwrite or fresh is None:
+                return []
+            if not partition_dnf:
+                return list(fresh.files)
+            # scoped overwrite may only reference real partition
+            # columns: stats-based (min/max) file matching is a
+            # *pruning* heuristic — deleting whole files on it would
+            # drop rows that don't satisfy the predicate.  Read-path
+            # pruning keeps stats matching; the write path must be exact.
+            bad = [name for name, _op, _v in partition_dnf
+                   if name not in fresh.partition_columns]
+            if bad:
+                raise ValueError(
+                    f"overwrite partition_dnf references non-partition "
+                    f"column(s) {sorted(set(bad))}; table is partitioned "
+                    f"by {list(fresh.partition_columns)}"
+                )
+            return self.pruned_files(fresh, partition_dnf)
 
-            removes: list[AddFile] = []
-            if mode == WriteMode.overwrite and snap is not None:
-                # re-checked against the FRESH head (the colmap/
-                # identity-mark convention): a concurrent
-                # SET dds.appendOnly=true must not race an in-flight
-                # overwrite past the freeze
-                _refuse_append_only(
-                    self.table_uri, snap.metadata.configuration,
-                    "overwrite")
-                if partition_dnf:
-                    # scoped overwrite may only reference real partition
-                    # columns: stats-based (min/max) file matching is a
-                    # *pruning* heuristic — deleting whole files on it
-                    # would drop rows that don't satisfy the predicate.
-                    # Read-path pruning keeps stats matching; the write
-                    # path must be exact.
-                    bad = [
-                        name
-                        for name, _op, _v in partition_dnf
-                        if name not in snap.partition_columns
-                    ]
-                    if bad:
-                        raise ValueError(
-                            f"overwrite partition_dnf references non-partition "
-                            f"column(s) {sorted(set(bad))}; table is partitioned "
-                            f"by {list(snap.partition_columns)}"
-                        )
-                    removes = self.pruned_files(snap, partition_dnf)
-                else:
-                    removes = list(snap.files)
-
+        def committed_metadata(fresh: Optional[Snapshot]) -> Metadata:
             # re-merge against the FRESH table schema: a concurrent
             # commit may have evolved it while this writer staged, and
             # committing the stale final_schema would silently drop the
-            # concurrently-added columns from Metadata (their data files
-            # stay live but every read would project without them).
-            # A full schema-replacing overwrite skips this by design.
-            committed_schema = final_schema
-            if snap is not None and not (
-                mode == WriteMode.overwrite
-                and schema_mode == SchemaMode.overwrite
-                and partition_dnf is None
-            ):
-                committed_schema = _merge_schemas(
-                    StructType.fromJson(_json_loads(snap.schema_json)),
-                    final_schema,
-                )
-            # column mapping re-validates against the FRESH
-            # configuration: a concurrent RENAME/DROP (or a racing
-            # writer re-adding the same dropped name) can invalidate
-            # the physicals this write already STAGED under — refuse
-            # rather than resurrect old columns or alias two logicals
-            # onto one physical.  Staged assignments are pinned (the
-            # parquet files exist under those names); only conflicts
-            # raise.
-            fresh_cfg = dict(
-                (snap.metadata.configuration if snap else {}),
-                **(table_configuration or {}),
-            )
-            fresh_base = _column_mapping(fresh_cfg)
-            fresh_dropped = set(_json_loads(
-                fresh_cfg.get(_DROPPED_KEY) or "[]"))
-            taken = set(fresh_base.values()) | fresh_dropped
-            commit_map = dict(fresh_base)
-            for f in final_schema.fields:
-                staged_phys = stage_mapping.get(f.name, f.name)
-                if f.name in fresh_base:
-                    if fresh_base[f.name] != staged_phys:
-                        raise ConcurrentAppendError(
-                            f"column mapping for {f.name!r} changed "
-                            "concurrently (rename/drop or a racing "
-                            "re-add); rerun the write to restage")
-                elif staged_phys != f.name:
-                    # staged under a minted physical: keep it, unless a
-                    # concurrent writer reserved it meanwhile
-                    if staged_phys in taken:
-                        raise ConcurrentAppendError(
-                            f"physical name {staged_phys!r} was "
-                            "reserved concurrently; rerun the write")
-                    commit_map[f.name] = staged_phys
-                    taken.add(staged_phys)
-                elif f.name in taken:
-                    # staged under the bare logical name, but a
-                    # concurrent drop/rename reserved that physical —
-                    # committing would resurrect the old column's data
-                    raise ConcurrentAppendError(
-                        f"column {f.name!r}'s physical name was "
-                        "reserved concurrently (drop/rename raced this "
-                        "write); rerun the write to restage")
-            fresh_colmap_updates = (
-                {_COLMAP_KEY: json.dumps(commit_map, sort_keys=True)}
-                if commit_map != fresh_base else {}
-            )
-            meta = Metadata(
-                schema_json=committed_schema.json(),
+            # concurrently-added columns from Metadata (their data
+            # files stay live but every read would project without
+            # them).  A full schema-replacing overwrite skips this.
+            schema = final_schema
+            if fresh is not None and not (
+                    replaces_all and schema_mode == SchemaMode.overwrite):
+                schema = _merge_schemas(
+                    StructType.fromJson(_json_loads(fresh.schema_json)),
+                    final_schema)
+            cfg = fresh_cfg(fresh)
+            commit_map = _commit_mapping(cfg, final_schema, stage_mapping)
+            if commit_map != _column_mapping(cfg):
+                cfg[_COLMAP_KEY] = json.dumps(commit_map, sort_keys=True)
+            return Metadata(
+                schema_json=schema.json(),
                 partition_columns=pcols,
-                configuration=dict(
-                    fresh_cfg,
-                    **fresh_colmap_updates,
-                    **identity_updates,
-                ),
-                table_id=snap.metadata.table_id if snap else "",
-                created_time=snap.metadata.created_time if snap else 0,
+                configuration={**cfg, **identity_updates},
+                table_id=fresh.metadata.table_id if fresh else "",
+                created_time=fresh.metadata.created_time if fresh else 0,
             )
-            op_params: dict[str, Any] = {"mode": mode.value}
-            if partition_dnf:
-                op_params["predicate"] = dnf_to_sql(partition_dnf)
-            if pcols:
-                op_params["partitionBy"] = pcols
-            actions: list[dict[str, Any]] = [
-                CommitInfo(
-                    operation=f"WRITE {mode.value}",
-                    operation_parameters=op_params,
-                    operation_metrics={
-                        "num_output_rows": rows_written,
-                        "num_added_files": len(adds),
-                        "num_removed_files": len(removes),
-                    },
-                    user_metadata=commit_metadata,
-                ).to_action(),
-                meta.to_action(),
-            ]
-            actions += [a.to_action() for a in adds]
-            if _copy_txns:
-                actions += [
-                    {"txn": {"appId": k, "version": v}}
-                    for k, v in sorted(_copy_txns.items())
-                ]
-            now = int(time.time() * 1000)
-            actions += [r.remove_action(now) for r in removes]
-            new_files = {a.log_key: a for a in (snap.files if snap else [])}
-            for r in removes:
-                new_files.pop(r.log_key, None)
-            for a in adds:
-                new_files[a.log_key] = a
-            app_versions = dict(snap.app_versions) if snap else {}
-            # copy_into ledger entries set directly (not max-folded):
-            # a FORCE reload records the file's new mtime even when it
-            # moved backwards
-            app_versions.update(_copy_txns or {})
-            new_version = head + 1
-            try:
-                tablelog.commit(
-                    self.table_uri,
-                    new_version,
-                    actions,
-                    # carry the txn ledger forward: a checkpoint
-                    # written at this version must not wipe streaming
-                    # exactly-once state (same rule for every commit
-                    # path below)
-                    Snapshot(new_version, meta, list(new_files.values()),
-                             now,
-                             app_versions=app_versions,
-                             protocol=snap.protocol
-                             if snap else tablelog.Protocol()),
-                )
-                res = {
-                    "mode": mode.value,
-                    "version": new_version,
-                    "num_output_rows": rows_written,
-                    "num_added_files": len(adds),
-                    "num_removed_files": len(removes),
-                }
-                ac = self._maybe_auto_compact(meta.configuration)
-                if ac:
-                    res["auto_compacted_files"] = ac.get(
-                        "rewritten_files", 0)
-                    res["auto_compact_version"] = ac.get("version")
-                return res
-            except VersionConflictError:
-                if attempt >= _COMMIT_RETRIES:
-                    raise
-                # exponential backoff + jitter (reference O5 shape,
-                # ddp lakefs handler:23-61)
-                time.sleep(_COMMIT_BACKOFF_BASE * (2**attempt) + _jitter())
-        raise AssertionError("unreachable")
+
+        try:
+            committed = txn.commit(
+                adds, overwritten, committed_metadata,
+                metrics={"num_output_rows": rows_written}, txns=_copy_txns)
+        except CommitSkipped as skip:
+            return {"mode": "ignore", "version": skip.fresh.version,
+                    "skipped": True}
+        return self._dml_compacting({
+            "mode": mode.value,
+            "version": committed.version,
+            "num_output_rows": rows_written,
+            "num_added_files": len(adds),
+            "num_removed_files": txn.metrics["num_removed_files"],
+        }, committed.metadata.configuration)
 
     def _create_or_replace(
         self,
+        snap: Optional[Snapshot],
         schema: StructType,
         pcols: Sequence[str],
         table_configuration: Optional[dict[str, str]],
         commit_metadata: Optional[dict[str, str]],
     ) -> dict[str, Any]:
         """W5: recreate metadata + schema only; removes all data files,
-        writes none (reference handler.py:226-235).  Same optimistic
-        rebase-and-retry as every other commit path — a lost race must
-        not fail an otherwise-valid metadata-only operation."""
-        meta = Metadata(
-            schema_json=schema.json(),
-            partition_columns=list(pcols),
-            configuration=dict(table_configuration or {}),
-        )
-        for attempt in range(_COMMIT_RETRIES + 1):
-            head = tablelog.latest_version(self.table_uri)
-            snap = tablelog.load_snapshot(self.table_uri) if head >= 0 else None
-            if snap is not None:
-                _refuse_append_only(
-                    self.table_uri, snap.metadata.configuration,
-                    "create_or_replace")
-            now = int(time.time() * 1000)
-            actions: list[dict[str, Any]] = [
-                CommitInfo(
-                    operation="CREATE OR REPLACE",
-                    operation_parameters={"partitionBy": list(pcols)},
-                    user_metadata=commit_metadata,
-                ).to_action(),
-                meta.to_action(),
-            ]
-            if snap:
-                actions += [a.remove_action(now) for a in snap.files]
-            v = head + 1
-            try:
-                tablelog.commit(
-                    self.table_uri, v, actions,
-                    Snapshot(v, meta, [], now,
-                             app_versions=dict(snap.app_versions)
-                             if snap else {},
-                             protocol=snap.protocol
-                             if snap else tablelog.Protocol()))
-                return {"mode": "create_or_replace", "version": v,
-                        "num_output_rows": 0}
-            except VersionConflictError:
-                if attempt >= _COMMIT_RETRIES:
-                    raise
-                time.sleep(_COMMIT_BACKOFF_BASE * (2**attempt) + _jitter())
-        raise AssertionError("unreachable")
+        writes none (reference handler.py:226-235)."""
+        txn = Transaction(self.table_uri, snap, "CREATE OR REPLACE",
+                          {"partitionBy": list(pcols)}, commit_metadata)
+        txn.checks.append(
+            _not_append_only(self.table_uri, "create_or_replace"))
+        committed = txn.commit(
+            removes=lambda fresh: fresh.files if fresh else [],
+            metadata=Metadata(
+                schema_json=schema.json(),
+                partition_columns=list(pcols),
+                configuration=dict(table_configuration or {}),
+            ))
+        return {"mode": "create_or_replace", "version": committed.version,
+                "num_output_rows": 0}
 
     # -- MERGE (M1-M6, W6) ------------------------------------------------------
 
@@ -2347,12 +2476,14 @@ class DeltaSparkTable:
             }
 
         snap = self.snapshot()
-        tablelog.check_write_support(snap.protocol, self.table_uri)
+        txn = Transaction(self.table_uri, snap, "MERGE", {},
+                          commit_metadata)
         if merge_config.merge_type != MergeType.deduplicate_insert:
             # only the insert-only strategy leaves existing rows alone
+            op = f"merge({merge_config.merge_type.value})"
             _refuse_append_only(
-                self.table_uri, snap.metadata.configuration,
-                f"merge({merge_config.merge_type.value})")
+                self.table_uri, snap.metadata.configuration, op)
+            txn.checks.append(_not_append_only(self.table_uri, op))
         merge_idcols = _identity_columns(snap.metadata.configuration)
         if merge_idcols:
             # GENERATED ALWAYS: the source may never provide the
@@ -2567,29 +2698,7 @@ class DeltaSparkTable:
             # empty target (or fully-pruned): nothing to touch; merge
             # degenerates to the insert branches
             touched_paths = set()
-        # _metadata.file_path is a URI (file:/...); normalize both sides
-        # to absolute filesystem paths for an exact match
-        from urllib.parse import urlparse as _urlparse
-
-        abs_by_path = {
-            os.path.abspath(
-                os.path.join(a.base or self.table_uri, a.path)): a
-            for a in candidates
-        }
-        touched_adds = []
-        for p in touched_paths:
-            norm = os.path.abspath(unquote(_urlparse(p).path))
-            add = abs_by_path.get(norm)
-            if add is None:
-                # every touched path is by construction a candidate, so
-                # a miss means the normalization broke (e.g. non-local
-                # URI scheme) — failing loudly beats silently skipping
-                # the rewrite and duplicating every matched row
-                raise AssertionError(
-                    f"merge: touched file {p!r} did not map back to a "
-                    "candidate AddFile (path normalization mismatch)"
-                )
-            touched_adds.append(add)
+        touched_adds = self._scanned_files(candidates, touched_paths)
 
         # rows that participate in the rewrite join: touched files only
         # (for M4 all candidate files are rewritten/deleted)
@@ -2665,7 +2774,7 @@ class DeltaSparkTable:
             # prefix-sum allocator as write(), on the insert branch
             # only (matched/carried rows keep their target ids); the
             # mark advances in the SAME merge commit, and a racing
-            # allocator fails the commit loudly (checked per retry)
+            # allocator fails the commit loudly (checked per attempt)
             for c, ispec in merge_idcols.items() if merge_idcols else ():
                 ins_b, assumed, new_next = _assign_identity(
                     ins_b, c, ispec, snap.metadata.configuration)
@@ -2697,173 +2806,74 @@ class DeltaSparkTable:
             )
 
         rows_written = sum(a.num_records for a in adds)
-        now = int(time.time() * 1000)
-        for attempt in range(_COMMIT_RETRIES + 1):
-            head = tablelog.latest_version(self.table_uri)
-            cur = tablelog.load_snapshot(self.table_uri)
-            if merge_config.merge_type != MergeType.deduplicate_insert:
-                # re-checked per retry (the colmap convention): a
-                # concurrent SET dds.appendOnly=true must not race a
-                # row-modifying merge past the freeze
-                _refuse_append_only(
-                    self.table_uri, cur.metadata.configuration,
-                    f"merge({merge_config.merge_type.value})")
-            if head != snap.version:
-                # write-conflict check: the merge was planned against
-                # ``snap``; if a concurrent commit removed any file this
-                # merge rewrites, committing would resurrect/lose rows
-                # (same rule as Delta's ConcurrentDeleteReadException)
-                live = {a.log_key for a in cur.files}
-                gone = [r.log_key for r in removes if r.log_key not in live]
-                if gone:
-                    raise ConcurrentDeleteError(
-                        f"merge conflicts with a concurrent commit: files "
-                        f"{gone[:3]}{'...' if len(gone) > 3 else ''} were removed"
-                    )
-                # read-set conflict (Delta's ConcurrentAppendException
-                # analogue): files ADDED since the planning snapshot may
-                # hold rows matching the merge keys — rows this merge
-                # classified as not-matched (duplicate-key insert) or
-                # never saw (lost update / wrongly-surviving M4 rows).
-                # Stats narrow the check: a new file disjoint from the
-                # source's key range (and outside the partition scope)
-                # cannot conflict.  M4 conflicts on ANY in-scope add —
-                # its delete semantics consider every target row.
-                # COMPACTION commits are exempt (Delta's
-                # dataChange=false): optimize()/zorder re-add existing
-                # rows under new paths — their key stats overlap almost
-                # anything, but no new data arrived, so aborting a merge
-                # that races the engine's own maintenance would be an
-                # unrecoverable failure for a no-op interleaving.
-                fresh = []
-                for v in range(snap.version + 1, head + 1):
-                    operation = ""
-                    adds_v: list[AddFile] = []
-                    for action in tablelog.read_version_actions(
-                            self.table_uri, v):
-                        if "commitInfo" in action:
-                            operation = action["commitInfo"].get(
-                                "operation", "")
-                        elif "add" in action:
-                            adds_v.append(
-                                AddFile.from_action(action["add"]))
-                    if tablelog.classify_commit(operation) != "compaction":
-                        fresh.extend(adds_v)
-                if partition_dnf and fresh:
-                    fresh = [
-                        a for a in fresh
-                        if _file_matches(
-                            a, partition_dnf, table_schema,
-                            cur.metadata.partition_columns,
-                            _column_mapping(cur.metadata.configuration))
-                    ]
-                if fresh:
-                    if mtype == MergeType.replace_delete_unmatched:
-                        conflict = True
-                    else:
-                        # memoized: re-running the source's min/max agg
-                        # per retry would re-execute the whole source
-                        # plan (and a non-deterministic source could
-                        # yield different bounds than discovery used)
-                        if not rng_memo:
-                            rng_memo.append(source_key_ranges())
-                        rng = rng_memo[0]
-                        if rng is None:
-                            conflict = True  # no keys to narrow by
-                        else:
-                            try:
-                                conflict = any(
-                                    _file_matches(
-                                        a, rng, table_schema,
-                                        cur.metadata.partition_columns,
-                                        _column_mapping(
-                                            cur.metadata.configuration))
-                                    for a in fresh
-                                )
-                            except TypeError:
-                                conflict = True
-                    if conflict:
-                        raise ConcurrentAppendError(
-                            "merge conflicts with a concurrent commit: "
-                            f"{len(fresh)} file(s) added since the planning "
-                            "snapshot may contain matching keys; re-run the "
-                            "merge against the new table state"
-                        )
-            # identity conflict check — same contract as write(): a
-            # concurrent writer that advanced the mark invalidates
-            # this merge's insert allocation
-            for ikey, iassumed in merge_id_assumed.items():
-                fresh_mark = cur.metadata.configuration.get(ikey)
-                if fresh_mark != iassumed:
-                    raise ConcurrentAppendError(
-                        f"identity mark {ikey} advanced concurrently "
-                        f"({iassumed} -> {fresh_mark}); rerun the "
-                        "merge to re-allocate ids"
-                    )
-            new_meta = snap.metadata if evolved else cur.metadata
-            if merge_id_updates:
-                new_meta = Metadata(
-                    schema_json=new_meta.schema_json,
-                    partition_columns=new_meta.partition_columns,
-                    configuration=dict(new_meta.configuration,
-                                       **merge_id_updates),
-                    table_id=new_meta.table_id,
-                    created_time=new_meta.created_time,
-                )
-            actions: list[dict[str, Any]] = [
-                CommitInfo(
-                    operation="MERGE",
-                    operation_parameters={
-                        "predicate": pred,
-                        "mergeType": mtype.value,
-                    },
-                    operation_metrics={
-                        "num_output_rows": rows_written,
-                        "num_added_files": len(adds),
-                        "num_removed_files": len(removes),
-                    },
-                    user_metadata=commit_metadata,
-                ).to_action(),
-            ]
-            if evolved or merge_id_updates:
-                actions.append(new_meta.to_action())
-            # removes BEFORE adds: log replay applies actions in order,
-            # so a rewrite that re-adds a removed log_key (deletion
-            # vectors re-add the same data file with a new DV) must not
-            # have its add popped by its own remove
-            actions += [r.remove_action(now) for r in removes]
-            actions += [a.to_action() for a in adds]
-            new_files = {a.log_key: a for a in cur.files}
-            for r in removes:
-                new_files.pop(r.log_key, None)
-            for a in adds:
-                new_files[a.log_key] = a
-            v = head + 1
-            try:
-                tablelog.commit(
-                    self.table_uri, v, actions,
-                    Snapshot(v, new_meta, list(new_files.values()), now,
-                             app_versions=dict(cur.app_versions),
-                             protocol=cur.protocol),
-                )
-                res = {
-                    "mode": "merge",
-                    "version": v,
-                    "num_output_rows": rows_written,
-                    "num_added_files": len(adds),
-                    "num_removed_files": len(removes),
-                }
-                ac = self._maybe_auto_compact(new_meta.configuration)
-                if ac:
-                    res["auto_compacted_files"] = ac.get(
-                        "rewritten_files", 0)
-                    res["auto_compact_version"] = ac.get("version")
-                return res
-            except VersionConflictError:
-                if attempt >= _COMMIT_RETRIES:
-                    raise
-                time.sleep(_COMMIT_BACKOFF_BASE * (2**attempt) + _jitter())
-        raise AssertionError("unreachable")
+        txn.parameters.update({"predicate": pred, "mergeType": mtype.value})
+        txn.checks += [_removes_live("merge", removes),
+                       _same_layout(snap.partition_columns)]
+
+        def no_matching_appends(read: Snapshot, fresh: Snapshot) -> None:
+            """Read-set conflict (Delta's ConcurrentAppendException):
+            files added since planning may hold rows matching the merge
+            keys — rows this merge classified as not-matched
+            (duplicate-key insert) or never saw (lost update,
+            wrongly-surviving M4 rows).  Stats narrow the check: a new
+            file disjoint from the source's key range (and outside the
+            partition scope) cannot conflict.  M4 conflicts on ANY
+            in-scope add — its delete semantics consider every target
+            row."""
+            fresh_files = _appended_since(self.table_uri, read, fresh)
+            mapping = _column_mapping(fresh.metadata.configuration)
+            if partition_dnf:
+                fresh_files = [
+                    a for a in fresh_files
+                    if _file_matches(a, partition_dnf, table_schema,
+                                     fresh.partition_columns, mapping)]
+            if not fresh_files:
+                return
+            conflict = True
+            if mtype != MergeType.replace_delete_unmatched:
+                # memoized: re-running the source's min/max agg per
+                # retry would re-execute the whole source plan (and a
+                # non-deterministic source could yield different bounds
+                # than discovery used)
+                if not rng_memo:
+                    rng_memo.append(source_key_ranges())
+                rng = rng_memo[0]
+                if rng is not None:
+                    try:
+                        conflict = any(
+                            _file_matches(a, rng, table_schema,
+                                          fresh.partition_columns, mapping)
+                            for a in fresh_files)
+                    except TypeError:
+                        pass
+            if conflict:
+                raise ConcurrentAppendError(
+                    "merge conflicts with a concurrent commit: "
+                    f"{len(fresh_files)} file(s) added since the planning "
+                    "snapshot may contain matching keys; re-run the merge "
+                    "against the new table state")
+
+        txn.checks.append(no_matching_appends)
+        if merge_id_assumed:
+            txn.checks.append(_identity_marks_unchanged(merge_id_assumed,
+                                                        "merge"))
+
+        def merged_metadata(fresh: Snapshot) -> Optional[Metadata]:
+            if not (evolved or merge_id_updates):
+                return None
+            base = snap.metadata if evolved else fresh.metadata
+            return dataclasses.replace(base, configuration={
+                **base.configuration, **merge_id_updates})
+
+        committed = txn.commit(adds, removes, merged_metadata,
+                               metrics={"num_output_rows": rows_written})
+        return self._dml_compacting({
+            "mode": "merge",
+            "version": committed.version,
+            "num_output_rows": rows_written,
+            "num_added_files": len(adds),
+            "num_removed_files": len(removes),
+        }, committed.metadata.configuration)
 
     # -- stats (O3/A1/A2/J1) ----------------------------------------------------
 
@@ -2904,37 +2914,40 @@ class DeltaSparkTable:
             .groupBy("__path").agg(F.expr("max(__n) AS __max_n"))
         )
 
+    def _scanned_files(
+        self, candidates: Sequence[AddFile], paths: Iterable[str]
+    ) -> list[AddFile]:
+        """The candidate ``AddFile`` behind each scanned
+        ``_metadata.file_path``.  That path is a (possibly
+        percent-encoded) URI, so both sides normalize to absolute
+        filesystem paths.  Every scanned path is by construction a
+        candidate: a miss means the normalization broke (e.g. a
+        non-local URI scheme), and failing loudly beats silently
+        skipping a rewrite and duplicating every matched row."""
+        by_abs = {
+            os.path.abspath(os.path.join(a.base or self.table_uri, a.path)): a
+            for a in candidates
+        }
+        out = []
+        for p in paths:
+            add = by_abs.get(os.path.abspath(unquote(urlparse(p).path)))
+            if add is None:
+                raise AssertionError(
+                    f"scanned file {p!r} did not map back to a candidate "
+                    "AddFile (path normalization mismatch)")
+            out.append(add)
+        return out
+
     def _per_file_hits(
         self, snap: Snapshot, candidates: Sequence[AddFile], match
     ) -> dict[str, int]:
         """ONE distributed scan: per-file count of rows matching
-        ``match``, keyed by the candidate's log_key.  Driver traffic is
-        bounded by file count (same scheme as merge discovery)."""
-        from urllib.parse import urlparse as _urlparse
-
-        # filter BEFORE the aggregate: the predicate pushes into the
-        # parquet scan (row-group skipping) and only matching rows
-        # shuffle; files absent from the result simply have 0 hits
-        tgt = self._read_files(snap, candidates, with_metadata=True)
-        per_file = tgt.where(match).groupBy("__path").agg(
-            F.count(F.lit(1)).alias("__hits")
-        )
-        key_by_abs = {
-            os.path.abspath(os.path.join(a.base or self.table_uri, a.path)):
-                a.log_key
-            for a in candidates
-        }
-        hits: dict[str, int] = {}
-        for r in per_file.toLocalIterator():
-            norm = os.path.abspath(unquote(_urlparse(r["__path"]).path))
-            key = key_by_abs.get(norm)
-            if key is None:
-                raise AssertionError(
-                    f"scanned file {r['__path']!r} did not map back to a "
-                    "candidate AddFile (path normalization mismatch)"
-                )
-            hits[key] = r["__hits"]
-        return hits
+        ``match``, keyed by the candidate's log_key.  Filtering BEFORE
+        the aggregate pushes the predicate into the parquet scan
+        (row-group skipping); files absent from the result have 0
+        hits."""
+        return self._hits_from_frame(candidates, self._read_files(
+            snap, candidates, with_metadata=True).where(match))
 
     def delete(
         self,
@@ -3136,28 +3149,13 @@ class DeltaSparkTable:
     def _hits_from_frame(
         self, candidates: Sequence[AddFile], frame: DataFrame,
     ) -> dict[str, int]:
-        """Per-file hit counts keyed by log_key from a (materialized)
-        frame carrying ``__path`` — one tiny aggregate, no rescan."""
-        from urllib.parse import urlparse as _urlparse
-
-        key_by_abs = {
-            os.path.abspath(os.path.join(a.base or self.table_uri, a.path)):
-                a.log_key
-            for a in candidates
-        }
-        hits: dict[str, int] = {}
-        per_file = frame.groupBy("__path").agg(
-            F.count(F.lit(1)).alias("__hits"))
-        for r in per_file.toLocalIterator():
-            norm = os.path.abspath(unquote(_urlparse(r["__path"]).path))
-            key = key_by_abs.get(norm)
-            if key is None:
-                raise AssertionError(
-                    f"scanned file {r['__path']!r} did not map back to a "
-                    "candidate AddFile (path normalization mismatch)"
-                )
-            hits[key] = r["__hits"]
-        return hits
+        """Per-file hit counts keyed by log_key from a frame carrying
+        ``__path`` — one aggregate, collected (one row per file, the
+        same scheme as merge discovery)."""
+        rows = frame.groupBy("__path").agg(
+            F.count(F.lit(1)).alias("__hits")).collect()
+        files = self._scanned_files(candidates, [r["__path"] for r in rows])
+        return {a.log_key: r["__hits"] for a, r in zip(files, rows)}
 
     def replace_where(
         self,
@@ -3338,8 +3336,6 @@ class DeltaSparkTable:
         (from ``_dml_discovery_positions``) — skips the second scan of
         the candidate files; rows belonging to non-partial files fall
         out in the mapping join below."""
-        import dataclasses
-
         rel = os.path.join("_dv", f"dv-{uuid.uuid4().hex}")
         out_dir = os.path.join(self.table_uri, rel)
         # sidecar identity is (root, path) — clone-stable, see
@@ -3684,20 +3680,14 @@ class DeltaSparkTable:
         (Delta's ``txn``/SetTransaction protocol — what makes
         ``foreachBatch`` sinks exactly-once across restarts: a
         replayed micro-batch sees its version already recorded and
-        no-ops).  The already-committed check runs INSIDE the commit
-        retry loop against the head snapshot, so two workers racing
+        no-ops).  The already-committed check runs on every commit
+        attempt against the head snapshot, so two workers racing
         the same batch cannot double-append.  Creates the table on the
         first batch; schema must match exactly afterwards (a streaming
         sink is not the place for silent evolution)."""
-        exists = self.exists()
-        snap = self.snapshot() if exists else None
-        if snap is not None:
-            # writer-protocol gate BEFORE staging (the pre-staging-
-            # validation rule every other data-writing path follows):
-            # a future-writer table must refuse up front, not strand a
-            # full micro-batch file set per replay until vacuum.
-            # tablelog.commit re-checks at publish time as backstop.
-            tablelog.check_write_support(snap.protocol, self.table_uri)
+        snap = _head_snapshot(self.table_uri)
+        txn = Transaction(self.table_uri, snap, "STREAMING UPDATE",
+                          {"appId": app_id, "epochId": batch_version})
         if (snap is not None
                 and snap.app_versions.get(app_id, -1) >= batch_version):
             return {"version": snap.version, "skipped": True,
@@ -3762,89 +3752,42 @@ class DeltaSparkTable:
             bloom_spec=_bloom_columns(meta.configuration),
         )
         rows = sum(a.num_records for a in adds)
-        now = int(time.time() * 1000)
-        for attempt in range(_COMMIT_RETRIES + 1):
-            head = tablelog.latest_version(self.table_uri)
-            cur = tablelog.load_snapshot(self.table_uri) if head >= 0 else None
-            if (cur is not None
-                    and cur.app_versions.get(app_id, -1) >= batch_version):
-                # a racing worker committed this batch first; the staged
-                # files are unreferenced and vacuum will collect them
-                return {"version": cur.version, "skipped": True,
-                        "num_output_rows": 0}
-            # identity conflict check — same contract as write()
-            for ikey, iassumed in identity_assumed.items():
-                fresh_mark = (cur.metadata.configuration.get(ikey)
-                              if cur else None)
-                if fresh_mark != iassumed:
-                    raise ConcurrentAppendError(
-                        f"identity mark {ikey} advanced concurrently "
-                        f"({iassumed} -> {fresh_mark}); rerun the batch "
-                        "to re-allocate ids"
-                    )
-            commit_meta = meta if cur is None else cur.metadata
-            if identity_updates and cur is not None:
-                commit_meta = Metadata(
-                    schema_json=commit_meta.schema_json,
-                    partition_columns=list(commit_meta.partition_columns),
-                    configuration={**commit_meta.configuration,
-                                   **identity_updates},
-                    table_id=commit_meta.table_id,
-                    created_time=commit_meta.created_time,
-                )
-            actions: list[dict[str, Any]] = [
-                CommitInfo(
-                    operation="STREAMING UPDATE",
-                    operation_parameters={
-                        "appId": app_id, "epochId": batch_version},
-                    operation_metrics={
-                        "num_output_rows": rows,
-                        "num_added_files": len(adds),
-                    },
-                ).to_action(),
-            ]
-            if cur is None:
-                actions.append(meta.to_action())
-            elif identity_updates:
-                actions.append(commit_meta.to_action())
-            actions.append(
-                {"txn": {"appId": app_id, "version": batch_version}})
-            actions += [a.to_action() for a in adds]
-            new_files = {a.log_key: a for a in (cur.files if cur else [])}
-            for a in adds:
-                new_files[a.log_key] = a
-            app_versions = dict(cur.app_versions) if cur else {}
-            app_versions[app_id] = max(
-                app_versions.get(app_id, -1), batch_version)
-            v = head + 1
-            try:
-                tablelog.commit(
-                    self.table_uri, v, actions,
-                    Snapshot(v, commit_meta,
-                             list(new_files.values()), now,
-                             app_versions=app_versions,
-                             protocol=cur.protocol
-                             if cur else tablelog.Protocol()),
-                )
-                res = {"version": v, "skipped": False,
-                       "num_output_rows": rows,
-                       "num_added_files": len(adds)}
-                # autoCompact: the streaming exactly-once sink is
-                # precisely where the small-file treadmill lives —
-                # the follow-up OPTIMIZE is its own commit (a
-                # compaction, so the change feed skips it) and a lost
-                # race never fails the batch that already committed
-                ac = self._maybe_auto_compact(commit_meta.configuration)
-                if ac:
-                    res["auto_compacted_files"] = ac.get(
-                        "rewritten_files", 0)
-                    res["auto_compact_version"] = ac.get("version")
-                return res
-            except VersionConflictError:
-                if attempt >= _COMMIT_RETRIES:
-                    raise
-                time.sleep(_COMMIT_BACKOFF_BASE * (2**attempt) + _jitter())
-        raise AssertionError("unreachable")
+
+        def replayed(read, fresh):
+            # a racing worker committed this batch first; the staged
+            # files are unreferenced and vacuum will collect them
+            if (fresh is not None
+                    and fresh.app_versions.get(app_id, -1) >= batch_version):
+                raise CommitSkipped(fresh)
+
+        txn.checks += [replayed, _same_layout(pcols, final_schema)]
+        if identity_assumed:
+            txn.checks.append(_identity_marks_unchanged(identity_assumed,
+                                                        "batch"))
+
+        def batch_metadata(fresh: Optional[Snapshot]) -> Optional[Metadata]:
+            if fresh is None:
+                return meta
+            if not identity_updates:
+                return None
+            return dataclasses.replace(fresh.metadata, configuration={
+                **fresh.metadata.configuration, **identity_updates})
+
+        try:
+            committed = txn.commit(adds, metadata=batch_metadata,
+                                   metrics={"num_output_rows": rows},
+                                   txns={app_id: batch_version})
+        except CommitSkipped as skip:
+            return {"version": skip.fresh.version, "skipped": True,
+                    "num_output_rows": 0}
+        # autoCompact: the streaming exactly-once sink is precisely
+        # where the small-file treadmill lives — the follow-up OPTIMIZE
+        # is its own commit (a compaction, so the change feed skips it)
+        # and a lost race never fails the batch that already committed
+        return self._dml_compacting(
+            {"version": committed.version, "skipped": False,
+             "num_output_rows": rows, "num_added_files": len(adds)},
+            committed.metadata.configuration)
 
     # -- COPY INTO (file-level exactly-once batch ingest) --------------------
 
@@ -3874,7 +3817,7 @@ class DeltaSparkTable:
         exactly once, and an emptied landing zone (loaded files
         archived away) is a no-op run, not an error.  The ledger
         rides the existing txn machinery: it survives checkpoints and
-        the already-loaded re-check runs INSIDE the commit retry loop,
+        the already-loaded re-check runs on every commit attempt,
         so two jobs racing the same landing directory cannot double-
         load a file (the loser raises ``ConcurrentAppendError`` and its
         rerun skips).
@@ -4093,8 +4036,6 @@ class DeltaSparkTable:
             raise ValueError(f"constraint {name!r} already exists")
         self._enforce_constraints(
             self._read_files(snap, snap.files), {key: expr})
-        import dataclasses
-
         return self._commit_rewrite(
             snap, [], [], "ADD CONSTRAINT",
             operation_parameters={"name": name, "expr": expr},
@@ -4113,7 +4054,6 @@ class DeltaSparkTable:
             if raise_if_missing:
                 raise ValueError(f"constraint {name!r} does not exist")
             return {"version": snap.version}
-        import dataclasses
 
         def build(cur: Snapshot) -> Metadata:
             cfg = dict(cur.metadata.configuration)
@@ -4135,8 +4075,6 @@ class DeltaSparkTable:
         previously-DROPPED name gets a fresh physical via the column
         mapping (no resurrection of buried values)."""
         from pyspark.sql.types import _parse_datatype_string
-
-        import dataclasses
 
         def build(cur: Snapshot) -> Metadata:
             schema = StructType.fromJson(_json_loads(cur.schema_json))
@@ -4227,8 +4165,6 @@ class DeltaSparkTable:
                     f"{_CDC_RETAIN_KEY} must be a non-negative integer "
                     f"(versions of CDC history vacuum must retain), got "
                     f"{properties[_CDC_RETAIN_KEY]!r}")
-        import dataclasses
-
         return self._commit_rewrite(
             snap, [], [], "SET TBLPROPERTIES",
             operation_parameters={"properties": json.dumps(properties)},
@@ -4258,7 +4194,6 @@ class DeltaSparkTable:
         if missing and raise_if_missing:
             raise ValueError(f"propert{'y' if len(missing)==1 else 'ies'} "
                              f"{missing} not set")
-        import dataclasses
 
         def build(cur: Snapshot) -> Metadata:
             fresh = dict(cur.metadata.configuration)
@@ -4384,8 +4319,6 @@ class DeltaSparkTable:
         carry physicals), clone, DVs (positional), and concurrent
         writers (they stage against physicals no rename can move).
         Partition and constraint-referenced columns refuse."""
-        import dataclasses
-
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", new):
             raise ValueError(f"invalid column name {new!r}")
 
@@ -4433,8 +4366,6 @@ class DeltaSparkTable:
         and reads null for pre-drop files instead of silently
         resurrecting the dropped values (Delta's column-mapping drop
         semantics)."""
-        import dataclasses
-
         def build(s: Snapshot) -> Metadata:
             schema = StructType.fromJson(_json_loads(s.schema_json))
             names = [f.name for f in schema.fields]
@@ -4520,10 +4451,7 @@ class DeltaSparkTable:
         if target.exists():
             raise TableExistsError(
                 f"table already exists at {target_uri}")
-        import dataclasses
-
         src_root = os.path.abspath(self.table_uri)
-        now = int(time.time() * 1000)
         adds = [
             dataclasses.replace(
                 a, base=a.base or src_root,
@@ -4534,7 +4462,10 @@ class DeltaSparkTable:
             )
             for a in snap.files
         ]
-        meta = Metadata(
+        txn = Transaction(target_uri, None, "CLONE", {
+            "source": src_root, "sourceVersion": snap.version})
+        txn.checks.append(_table_absent(target_uri, WriteMode.error))
+        txn.commit(adds, metadata=Metadata(
             schema_json=snap.schema_json,
             partition_columns=list(snap.partition_columns),
             configuration=dict(
@@ -4544,36 +4475,21 @@ class DeltaSparkTable:
                     "dds.cloneVersion": str(snap.version),
                 },
             ),
-        )
-        actions: list[dict[str, Any]] = [
-            CommitInfo(
-                operation="CLONE",
-                operation_parameters={
-                    "source": src_root,
-                    "sourceVersion": snap.version,
-                },
-                operation_metrics={
-                    "num_cloned_files": len(adds),
-                    "num_output_rows": sum(a.num_records for a in adds),
-                },
-            ).to_action(),
-            meta.to_action(),
-        ]
-        actions += [a.to_action() for a in adds]
-        tablelog.commit(
-            target_uri, 0, actions, Snapshot(0, meta, adds, now))
+        ), metrics={
+            "num_cloned_files": len(adds),
+            "num_output_rows": sum(a.num_records for a in adds),
+        })
         return target
 
     def _dml_compacting(
         self, res: dict[str, Any], configuration: Optional[dict[str, str]]
     ) -> dict[str, Any]:
-        """Attach post-commit auto-compaction to a committed DML
-        result: copy-rewrite DELETE/UPDATE/REPLACE WHERE (and DV
-        updates, whose updated copies append as new files) fragment
-        files exactly like writes do, so they get the same
-        ``dds.autoCompact`` follow-up the write/merge/streaming-sink
-        paths already fire (Databricks triggers autoCompact after DML
-        too).  Best-effort on races, like the write hook."""
+        """Attach post-commit auto-compaction to a committed result:
+        writes, merges and streaming batches, and copy-rewrite
+        DELETE/UPDATE/REPLACE WHERE (and DV updates, whose updated
+        copies append as new files), which fragment files exactly like
+        writes do (Databricks triggers autoCompact after DML too).
+        Best-effort on races."""
         ac = self._maybe_auto_compact(configuration)
         if ac:
             res["auto_compacted_files"] = ac.get("rewritten_files", 0)
@@ -4727,81 +4643,26 @@ class DeltaSparkTable:
         extra_metrics: Optional[dict[str, Any]] = None,
         metadata: Optional[Any] = None,
     ) -> dict[str, Any]:
-        """Commit a compaction/clustering rewrite.
-
-        The post-commit file set is derived from the CURRENT head
-        snapshot (re-read inside the retry loop), not the snapshot the
-        rewrite planned against — a concurrent append between planning
-        and commit must survive in the published snapshot.  If any file
-        this rewrite replaces was itself removed concurrently, the
-        rewrite aborts (its output would resurrect deleted rows).
-
-        ``metadata`` may be a CALLABLE of the fresh snapshot: metadata
-        commits (rename/drop column, constraints, properties) rebuild
-        their change against the retry's head instead of clobbering
-        whatever a concurrent writer evolved in between."""
-        now = int(time.time() * 1000)
-        remove_paths = {r.log_key for r in removes}
-        for attempt in range(_COMMIT_RETRIES + 1):
-            head = tablelog.latest_version(self.table_uri)
-            cur = tablelog.load_snapshot(self.table_uri)
-            if operation in _APPEND_ONLY_FORBIDDEN_OPS:
-                # re-checked per retry against the fresh head: a
-                # concurrent SET dds.appendOnly=true must not race an
-                # in-flight DML past the freeze (compactions, FSCK and
-                # metadata commits are allowed ops and skip this)
-                _refuse_append_only(
-                    self.table_uri, cur.metadata.configuration,
-                    operation)
-            missing = remove_paths - {a.log_key for a in cur.files}
-            if missing:
-                raise ConcurrentDeleteError(
-                    f"{operation}: {len(missing)} file(s) this rewrite "
-                    f"replaces were removed concurrently "
-                    f"(e.g. {sorted(missing)[0]})"
-                )
-            metrics = {
+        """Commit a rewrite (DML, compaction, restore, FSCK) or a
+        metadata change planned against ``snap``.  The committed file
+        set folds onto the fresh head, so a concurrent append survives;
+        a concurrent removal of any file this rewrite replaces aborts
+        it (its output would resurrect deleted rows).  ``metadata``
+        may be a callable of the fresh head (see ``Transaction``)."""
+        txn = Transaction(self.table_uri, snap, operation,
+                          operation_parameters)
+        if operation in _APPEND_ONLY_FORBIDDEN_OPS:
+            # compactions, FSCK and metadata commits are allowed on a
+            # frozen table and skip this
+            txn.checks.append(_not_append_only(self.table_uri, operation))
+        txn.checks.append(_removes_live(operation, removes))
+        committed = txn.commit(adds, removes, metadata,
+                               metrics=extra_metrics)
+        return {"rewritten_files": len(removes),
+                "version": committed.version,
                 "num_added_files": len(adds),
                 "num_removed_files": len(removes),
-                **(extra_metrics or {}),
-            }
-            actions: list[dict[str, Any]] = [
-                CommitInfo(
-                    operation=operation,
-                    operation_parameters=operation_parameters or {},
-                    operation_metrics=metrics,
-                ).to_action(),
-            ]
-            meta = (metadata(cur) if callable(metadata)
-                    else (metadata or cur.metadata))
-            if metadata is not None:
-                actions.append(meta.to_action())
-            # removes BEFORE adds: log replay applies actions in order,
-            # so a rewrite that re-adds a removed log_key (deletion
-            # vectors re-add the same data file with a new DV) must not
-            # have its add popped by its own remove
-            actions += [r.remove_action(now) for r in removes]
-            actions += [a.to_action() for a in adds]
-            new_files = {a.log_key: a for a in cur.files}
-            for r in removes:
-                new_files.pop(r.log_key, None)
-            for a in adds:
-                new_files[a.log_key] = a
-            v = head + 1
-            try:
-                tablelog.commit(
-                    self.table_uri, v, actions,
-                    Snapshot(v, meta, list(new_files.values()), now,
-                             app_versions=dict(cur.app_versions),
-                             protocol=cur.protocol),
-                )
-                return {"rewritten_files": len(removes), "version": v,
-                        **metrics}
-            except VersionConflictError:
-                if attempt >= _COMMIT_RETRIES:
-                    raise
-                time.sleep(_COMMIT_BACKOFF_BASE * (2**attempt) + _jitter())
-        raise AssertionError("unreachable")
+                **(extra_metrics or {})}
 
     def zorder(
         self,
@@ -5288,7 +5149,6 @@ def convert_to_table(
         spark, paths,
         _bloom_columns(cfg) or None)
     adds: list[AddFile] = []
-    now = int(time.time() * 1000)
     total_rows = 0
     for ab, rel in rel_files:
         num_rows, stats = stats_by_path[ab]
@@ -5312,25 +5172,11 @@ def convert_to_table(
             "partition_columns": pcols,
         }
 
-    meta = Metadata(
-        schema_json=schema.json(),
-        partition_columns=pcols,
-        configuration=cfg,
-    )
-    actions: list[dict[str, Any]] = [
-        CommitInfo(
-            operation="CONVERT",
-            operation_parameters={"numFiles": len(adds)},
-            operation_metrics={
-                "num_added_files": len(adds),
-                "num_output_rows": total_rows,
-            },
-        ).to_action(),
-        meta.to_action(),
-    ]
-    actions += [a.to_action() for a in adds]
-    tablelog.commit(root, 0, actions,
-                    Snapshot(0, meta, adds, now))
+    txn = Transaction(root, None, "CONVERT", {"numFiles": len(adds)})
+    txn.checks.append(_table_absent(root, WriteMode.error))
+    txn.commit(adds, metadata=Metadata(
+        schema_json=schema.json(), partition_columns=pcols,
+        configuration=cfg), metrics={"num_output_rows": total_rows})
     return {
         "dry_run": False,
         "version": 0,
@@ -6410,35 +6256,17 @@ def convert_from_delta(
             "delta_version": head_delta_version,
             "dropped_configuration": dropped_cfg,
         }
-    meta = Metadata(
-        schema_json=schema.json(),
-        partition_columns=pcols,
-        configuration=cfg,
-    )
-    actions_out: list[dict[str, Any]] = [
-        CommitInfo(
-            operation="CONVERT FROM DELTA",
-            operation_parameters={
-                "numFiles": len(adds),
-                "deltaVersion": head_delta_version,
-            },
-            operation_metrics={
-                "num_added_files": len(adds),
-                "num_output_rows": total_rows,
-            },
-        ).to_action(),
-        meta.to_action(),
-    ]
+    txn = Transaction(root, None, "CONVERT FROM DELTA", {
+        "numFiles": len(adds), "deltaVersion": head_delta_version})
+    txn.checks.append(_table_absent(root, WriteMode.error))
     # carried SetTransaction ledgers must live in the COMMIT, not just
     # the cached snapshot — a cold-cache replay of version 0 would
     # otherwise lose them and a resumed upstream stream would
     # double-append
-    actions_out += [{"txn": {"appId": k, "version": v}}
-                    for k, v in sorted(app_versions.items())]
-    actions_out += [a.to_action() for a in adds]
-    tablelog.commit(root, 0, actions_out,
-                    Snapshot(0, meta, adds, now,
-                             app_versions=app_versions))
+    txn.commit(adds, metadata=Metadata(
+        schema_json=schema.json(), partition_columns=pcols,
+        configuration=cfg), metrics={"num_output_rows": total_rows},
+        txns=app_versions)
     return {
         "dry_run": False,
         "version": 0,

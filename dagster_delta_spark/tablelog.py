@@ -793,7 +793,7 @@ def commit(
     Local-FS put-if-absent via ``open(..., 'x')``; on object stores this
     maps to a conditional PUT (S3 If-None-Match / ABFS etag), which is
     how open-source Delta commits on those stores too.  Raises
-    :class:`VersionConflictError` for the optimistic-retry loop in
+    :class:`VersionConflictError` for the optimistic ``Transaction`` in
     ``table.py``.
 
     GATE CONTRACT: the writer-protocol gate and the version-0 protocol
