@@ -37,18 +37,14 @@ guard enforce).
 
 from __future__ import annotations
 
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import session_cache
 from .relational import load
 from .textops import TOKENS
-
-#: process-lifetime cache of learned merge tables, keyed by
-#: (applicationId, corpus dir, fingerprint, params)
-_MERGE_CACHE: dict = {}
 
 
 def word_frequencies(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -132,28 +128,19 @@ def bpe_train(
         raise ValueError(f"num_merges={num_merges} must be >= 1")
     if word_cap < 1:
         raise ValueError(f"word_cap={word_cap} must be >= 1")
-    from .relational import corpus_fingerprint
 
-    key = (
-        spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-        corpus_fingerprint(sf_dir, "documents"), num_merges, word_cap,
-    )
-    hit = _MERGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from .dedup import _evict_stale
+    def build(_fp: str) -> list[tuple[str, str]]:
+        top = (
+            word_frequencies(spark, sf_dir)
+            .orderBy(F.desc("wcount"), F.asc("word"))
+            .limit(word_cap)
+            .collect()
+        )
+        return _learn_merges([(r["word"], r["wcount"]) for r in top],
+                             num_merges)
 
-    top = (
-        word_frequencies(spark, sf_dir)
-        .orderBy(F.desc("wcount"), F.asc("word"))
-        .limit(word_cap)
-        .collect()
-    )
-    merges = _learn_merges([(r["word"], r["wcount"]) for r in top],
-                           num_merges)
-    _evict_stale(_MERGE_CACHE, key[0], key)
-    _MERGE_CACHE[key] = merges
-    return merges
+    return session_cache.get(spark, sf_dir, "documents",
+                             ("bpe", num_merges, word_cap), build)
 
 
 def bpe_merges_df(

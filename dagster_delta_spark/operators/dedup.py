@@ -19,70 +19,19 @@ Scale design:
 
 from __future__ import annotations
 
-import os
 from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import session_cache
 from .relational import load
 from .textops import TOKENS
 
-# Session-scoped cache of the materialized shingle stream, keyed by
-# (applicationId, corpus dir, corpus fingerprint): jaccard, the whole
-# MinHash family, and cluster dedup all start from the same
-# tokenize->shingle->distinct pipeline, so one localCheckpoint serves
-# every query in the session — the same amortization contract as the
-# persisted IVF centroid index (similarity.py).  The fingerprint
-# (documents.parquet size+mtime_ns) makes an in-session corpus rewrite
-# MISS the cache, like load()'s mtime key; DDS_SHINGLE_CACHE=0 remains
-# as a belt-and-braces opt-out (each query then re-materializes its
-# own stream, the pre-r5 behavior).
-_SHINGLE_CACHE: dict[tuple, DataFrame] = {}
-#: MinHash signature cache, keyed (app, corpus, fingerprint, num_hashes)
-_MINHASH_SIG_CACHE: dict[tuple, DataFrame] = {}
-#: SimHash signature cache, keyed (app, corpus, fingerprint)
-_SIMHASH_SIG_CACHE: dict[tuple, DataFrame] = {}
-#: Truncated LSH bucket-membership cache, keyed
-#: (app, corpus, fingerprint, kind, *params).  The capped bucket table
-#: IS the batch LSH index (the streaming ingest filter persists the
-#: same structure on disk): banding + hot-bucket truncation are
-#: corpus-level, query-independent work, so one materialization serves
-#: every candidate join in the session — without it each query re-paid
-#: the truncation's count/sort pass (~30% of the sf0.1 minhash line).
-_LSH_BUCKET_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _evict_stale(
-    cache: dict, app_id: str, live_key: Optional[tuple] = None
-) -> None:
-    """Drop entries from dead sessions: a long-lived process that
-    stops and restarts Spark sessions must not accumulate references
-    to unreachable checkpoint RDDs.  Keys carry the owning session's
-    applicationId at position 0 or 1 (the IVF assignment cache prefixes
-    a kind tag), so membership — not position — decides liveness.
-
-    ``live_key`` (shape ``(app, dir, fingerprint, ...)``) additionally
-    drops same-session entries for the SAME corpus dir whose
-    fingerprint was superseded by a rewrite — without this, every
-    in-session corpus rewrite would pin one more dead materialized
-    stream's checkpoint blocks for the session's lifetime."""
-    doomed = []
-    for k in cache:
-        if app_id not in k:
-            doomed.append(k)
-        elif (
-            live_key is not None
-            and len(k) >= 3
-            and k[0] == live_key[0]
-            and k[1] == live_key[1]
-            and k[2] != live_key[2]
-        ):
-            doomed.append(k)
-    for k in doomed:
-        del cache[k]
-
-
+# The corpus-side derivations below (shingle stream, MinHash/SimHash
+# signatures, truncated LSH bucket tables) are index state: each is
+# materialized once per (session, corpus, fingerprint, params) through
+# ``session_cache.get`` and reused by every dedup query after it.
 
 
 #: cross-engine 64-bit hash: the top 60 bits of md5, as a positive
@@ -197,24 +146,14 @@ def _shingle_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-runs per shingle — ~10x slower.)  One shuffle on doc_id, all
     codegen.
 
-    Returns a MATERIALIZED (localCheckpoint) frame, cached per
-    (session, corpus, fingerprint) — see ``_SHINGLE_CACHE`` above.
+    Returns a MATERIALIZED (localCheckpoint) frame, session-cached
+    per (corpus, fingerprint): jaccard, the whole MinHash family and
+    cluster dedup all start from this stream.
     """
-    from .relational import corpus_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-        corpus_fingerprint(sf_dir, "documents"),
-    )
-    caching = os.environ.get("DDS_SHINGLE_CACHE", "1") != "0"
-    if caching and key in _SHINGLE_CACHE:
-        return _SHINGLE_CACHE[key]
-    docs = load(spark, sf_dir, "documents")
-    stream = shingles_of(docs).localCheckpoint()
-    if caching:
-        _evict_stale(_SHINGLE_CACHE, key[0], key)
-        _SHINGLE_CACHE[key] = stream
-    return stream
+    return session_cache.get(
+        spark, sf_dir, "documents", ("shingles",),
+        lambda _fp: shingles_of(
+            load(spark, sf_dir, "documents")).localCheckpoint())
 
 
 def shingles_of(docs: DataFrame) -> DataFrame:
@@ -325,7 +264,6 @@ def near_dup_jaccard(
 
 def minhash_signatures(
     spark: SparkSession, sf_dir: str, num_hashes: int = 64,
-    stream: Optional[DataFrame] = None,
     portable_hash: bool = False,
 ) -> DataFrame:
     """MinHash signatures: ``sig[i] = min over shingles of
@@ -339,34 +277,20 @@ def minhash_signatures(
     higher-order functions run interpreted and re-evaluate the hash
     per seed.)
 
-    Session-cached per (app, corpus, fingerprint, num_hashes) like the
-    shingle stream it derives from (constant-size per doc: 64 longs —
-    far smaller than the stream itself); ``DDS_SHINGLE_CACHE=0``
-    disables both caches.  ``stream`` lets a caller that already built
-    the shingle stream share it on the cache-off path (cache-on, the
-    stream cache makes the second call free anyway)."""
-    from .relational import corpus_fingerprint
+    Session-cached per (corpus, fingerprint, num_hashes, hash family)
+    like the shingle stream it derives from (constant-size per doc: 64
+    longs — far smaller than the stream itself)."""
+    def build(_fp: str) -> DataFrame:
+        base_hash = seed_hash = None
+        if portable_hash:
+            base_hash, seed_hash, _ = portable_hash_family()
+        return _signatures_from_stream(
+            _shingle_stream(spark, sf_dir), num_hashes,
+            base_hash=base_hash, seed_hash=seed_hash).localCheckpoint()
 
-    key = (
-        spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-        corpus_fingerprint(sf_dir, "documents"), num_hashes,
-        "md5" if portable_hash else "xx",
-    )
-    caching = os.environ.get("DDS_SHINGLE_CACHE", "1") != "0"
-    if caching and key in _MINHASH_SIG_CACHE:
-        return _MINHASH_SIG_CACHE[key]
-    if stream is None:
-        stream = _shingle_stream(spark, sf_dir)
-    base_hash = seed_hash = None
-    if portable_hash:
-        base_hash, seed_hash, _ = portable_hash_family()
-    sigs = _signatures_from_stream(
-        stream, num_hashes, base_hash=base_hash, seed_hash=seed_hash)
-    if caching:
-        sigs = sigs.localCheckpoint()
-        _evict_stale(_MINHASH_SIG_CACHE, key[0], key)
-        _MINHASH_SIG_CACHE[key] = sigs
-    return sigs
+    return session_cache.get(
+        spark, sf_dir, "documents",
+        ("minhash", num_hashes, "md5" if portable_hash else "xx"), build)
 
 
 def _signatures_from_stream(
@@ -510,25 +434,17 @@ def _cached_truncated_buckets(
     spark: SparkSession, sf_dir: str, params: tuple, build
 ) -> DataFrame:
     """Session-cached materialization of a truncated bucket-membership
-    frame (see ``_LSH_BUCKET_CACHE``).  ``params`` distinguishes the
-    banding scheme + dials; ``build`` constructs the lazy frame on a
-    miss.  Same fingerprint-keyed staleness + opt-out contract as the
-    signature caches (``DDS_SHINGLE_CACHE=0`` disables)."""
-    from .relational import corpus_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-        corpus_fingerprint(sf_dir, "documents"), *params,
-    )
-    caching = os.environ.get("DDS_SHINGLE_CACHE", "1") != "0"
-    if caching and key in _LSH_BUCKET_CACHE:
-        return _LSH_BUCKET_CACHE[key]
-    df = build()
-    if caching:
-        df = df.localCheckpoint()
-        _evict_stale(_LSH_BUCKET_CACHE, key[0], key)
-        _LSH_BUCKET_CACHE[key] = df
-    return df
+    frame.  The capped bucket table IS the batch LSH index (the
+    streaming ingest filter persists the same structure on disk):
+    banding + hot-bucket truncation are corpus-level, query-independent
+    work, so one materialization serves every candidate join in the
+    session — without it each query re-paid the truncation's
+    count/sort pass (~30% of the sf0.1 minhash line).  ``params``
+    distinguishes the banding scheme + dials; ``build`` constructs the
+    lazy frame on a miss."""
+    return session_cache.get(
+        spark, sf_dir, "documents", ("buckets", *params),
+        lambda _fp: build().localCheckpoint())
 
 
 def lsh_bucket_overflow(
@@ -588,7 +504,7 @@ def minhash_lsh_near_dups(
     # the truncated bucket table is the LSH index: session-cached so
     # repeat queries pay only the candidate join + verify
     buckets = minhash_bucket_index(
-        spark, sf_dir, num_hashes, bands, max_bucket_size, stream=stream,
+        spark, sf_dir, num_hashes, bands, max_bucket_size,
         portable_hash=portable_hash)
     candidates = _bucket_candidate_pairs(buckets, None)
     # exact verification restricted to candidate docs: semi-filter the
@@ -624,9 +540,8 @@ def simhash_signatures(
     Shape: explode tokens, hash each once, then 64 codegen'd
     ``sum((h >> j) & 1)`` aggregates in one groupBy (bit j is set iff
     set-bit count exceeds half the tokens).  One shuffle on doc_id
-    with map-side combine.  Session-cached per (app, corpus,
-    fingerprint, hash family) — one long per doc;
-    ``DDS_SHINGLE_CACHE=0`` disables.
+    with map-side combine.  Session-cached per (corpus, fingerprint,
+    hash family) — one long per doc.
 
     ``portable_hash=True`` derives the per-token hash from md5
     (``PORTABLE_H64``) so the whole signature — and therefore the
@@ -635,17 +550,15 @@ def simhash_signatures(
     md5 as a positive bigint), so signature bits 60-63 never vote set
     under it — pure integer vote counting either way, no cross-engine
     hazard."""
-    from .relational import corpus_fingerprint
+    return session_cache.get(
+        spark, sf_dir, "documents",
+        ("simhash", "md5" if portable_hash else "xx"),
+        lambda _fp: _simhash_of(
+            load(spark, sf_dir, "documents"), portable_hash
+        ).localCheckpoint())
 
-    key = (
-        spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-        corpus_fingerprint(sf_dir, "documents"),
-        "md5" if portable_hash else "xx",
-    )
-    caching = os.environ.get("DDS_SHINGLE_CACHE", "1") != "0"
-    if caching and key in _SIMHASH_SIG_CACHE:
-        return _SIMHASH_SIG_CACHE[key]
-    docs = load(spark, sf_dir, "documents")
+
+def _simhash_of(docs: DataFrame, portable_hash: bool) -> DataFrame:
     # signature over the first 32767 tokens: the packed 15-bit lanes
     # below cap per-lane counts at 32767 — beyond that the top lane's
     # sum would cross the sign bit (ANSI overflow).  A 32k-token prefix
@@ -679,12 +592,7 @@ def simhash_signatures(
         for gidx in range(16)
         for k in range(4)
     )
-    sigs = g.select("doc_id", F.expr(sig).alias("simhash"))
-    if caching:
-        sigs = sigs.localCheckpoint()
-        _evict_stale(_SIMHASH_SIG_CACHE, key[0], key)
-        _SIMHASH_SIG_CACHE[key] = sigs
-    return sigs
+    return g.select("doc_id", F.expr(sig).alias("simhash"))
 
 
 def simhash_bucket_index(
@@ -693,7 +601,7 @@ def simhash_bucket_index(
     portable_hash: bool = False,
 ) -> DataFrame:
     """Truncated SimHash banding index ``(doc_id, simhash, band, h)``,
-    session-cached (see ``_LSH_BUCKET_CACHE``): ``max_hamming + 1``
+    session-cached (see ``_cached_truncated_buckets``): ``max_hamming + 1``
     bands partition the 64 bits so any pair within the Hamming bound
     collides in at least one band (pigeonhole — the exactness argument
     in ``simhash_near_dups``).  Built once per (corpus, dials); batch
@@ -733,19 +641,17 @@ def simhash_bucket_index(
 def minhash_bucket_index(
     spark: SparkSession, sf_dir: str, num_hashes: int = 64,
     bands: int = 16, max_bucket_size: Optional[int] = 1000,
-    stream: Optional[DataFrame] = None,
     portable_hash: bool = False,
 ) -> DataFrame:
     """Truncated MinHash LSH bucket index ``(doc_id, band, h)``,
-    session-cached (see ``_LSH_BUCKET_CACHE``); the batch twin of the
+    session-cached (see ``_cached_truncated_buckets``); the batch twin of the
     streaming ingest filter's persisted bucket table.
     ``portable_hash=True`` builds the index under the md5-derived
     ``PORTABLE_H64`` family (same structure, cross-engine
     recomputable — the oracle dial); the cache key carries the
     family so the two indexes never alias."""
     sigs = minhash_signatures(
-        spark, sf_dir, num_hashes, stream=stream,
-        portable_hash=portable_hash)
+        spark, sf_dir, num_hashes, portable_hash=portable_hash)
     hash_sql = (portable_hash_family()[2] if portable_hash
                 else "xxhash64({x})")
     return _cached_truncated_buckets(

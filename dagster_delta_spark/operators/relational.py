@@ -20,13 +20,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-# session-scoped table catalog: spark.read.parquet runs a footer
-# schema-inference job per call (~70 ms); a workload of N queries over
-# the same tables would pay it N times.  DataFrames are immutable, so
-# handing every caller the same logical-plan root is safe — exactly
-# what a metastore-backed catalog does with a resolved table schema.
-_LOAD_CACHE: dict = {}
+from . import session_cache
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -35,23 +29,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # non-UTC driver session would shift window/date_trunc/filter
     # boundaries relative to the (timezone-less) oracle engine
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        st = os.stat(path)
-        fp = (st.st_mtime_ns, st.st_size)  # dir mtime moves on rewrite
-    except OSError:
-        fp = None
-    key = (spark.sparkContext.applicationId, sf_dir, name, fp)
-    df = _LOAD_CACHE.get(key)
-    if df is None:
+
+    # session-cached table catalog: spark.read.parquet runs a footer
+    # schema-inference job per call (~70 ms); a workload of N queries
+    # over the same tables would pay it N times.  DataFrames are
+    # immutable, so handing every caller the same logical-plan root is
+    # safe — exactly what a metastore-backed catalog does with a
+    # resolved table schema.
+    def build(_fingerprint: str) -> DataFrame:
         if name == "events":
-            df = load_events(spark, sf_dir)
-        else:
-            df = spark.read.parquet(path)
-        if len(_LOAD_CACHE) > 256:
-            _LOAD_CACHE.clear()
-        _LOAD_CACHE[key] = df
-    return df
+            return load_events(spark, sf_dir)
+        return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+    return session_cache.get(spark, sf_dir, name, (), build)
 
 
 def widen_for_compute(df: DataFrame, key_col: Optional[str] = None
@@ -1066,39 +1056,6 @@ def q20_excess_shipments(
         .join(heavy, sup.s_suppkey == heavy.l_suppkey, "left_semi")
         .select("s_suppkey", "s_name", "n_name")
     )
-
-
-def corpus_fingerprint(sf_dir: str, table: str) -> str:
-    """Cheap change-detection key for a corpus table: relative path +
-    size + mtime_ns of every data file (same contract as load()'s
-    mtime_ns cache key and the IVF centroid fingerprint).  Session
-    caches of derived corpus-side state (shingle streams, signatures,
-    LSH buckets, centroids) include this in their keys so an
-    in-session rewrite of the table misses the cache instead of
-    serving stale checkpoints."""
-    import glob as _glob
-    import hashlib as _hashlib
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    # NB: glob('<file>/**') yields ['<file>/'] (trailing slash, fails
-    # isfile), so a plain-file table must bypass the glob or it hashes
-    # to the empty fingerprint — the bug that made the pre-r5
-    # embeddings fingerprint constant on single-file corpora
-    if os.path.isfile(path):
-        files = [path]
-    else:
-        files = sorted(
-            _glob.glob(os.path.join(path, "**"), recursive=True)
-        )
-    h = _hashlib.sha256()
-    for f in files:
-        if os.path.isfile(f):
-            st = os.stat(f)
-            h.update(
-                f"{os.path.relpath(f, sf_dir)}:{st.st_size}:"
-                f"{st.st_mtime_ns};".encode()
-            )
-    return h.hexdigest()[:16]
 
 
 def salted_user_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,6 +24,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import session_cache
 from .relational import load
 
 DOT = (
@@ -49,22 +50,13 @@ def _auto_cells(spark: SparkSession, sf_dir: str) -> int:
     growing as sqrt(n), so probe cost per query grows ~sqrt(n) instead
     of linearly.  Every IVF entry point defaults to this
     (``n_cells=None``); an explicit ``n_cells`` stays an exact dial.
-    The corpus count is one footer-only parquet count, cached per
-    (session, corpus, fingerprint) next to the centroid cache."""
-    key = (
-        spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-        _corpus_fingerprint(sf_dir), "ncells",
-    )
-    hit = _CENTROID_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from .dedup import _evict_stale
+    The corpus count is one footer-only parquet count, session-cached
+    per corpus fingerprint next to the centroids."""
+    def build(_fp: str) -> int:
+        n = load(spark, sf_dir, "embeddings").count()
+        return max(4, min(65536, int(round(1.5 * math.sqrt(max(n, 1))))))
 
-    n = load(spark, sf_dir, "embeddings").count()
-    cells = max(4, min(65536, int(round(1.5 * math.sqrt(max(n, 1))))))
-    _evict_stale(_CENTROID_CACHE, key[0], key)
-    _CENTROID_CACHE[key] = cells
-    return cells
+    return session_cache.get(spark, sf_dir, "embeddings", ("ncells",), build)
 
 
 def _resolve_cells(
@@ -108,19 +100,6 @@ def _topk(scored: DataFrame, k: int) -> DataFrame:
         .select("q_id", "vec_id",
                 F.col("cosine").cast("double").alias("cosine"), "rank")
     )
-
-
-def _cache_store(cache: dict, key: tuple, df: DataFrame,
-                 eager: bool = True) -> DataFrame:
-    """Checkpoint + store under the session cache contract (evicting
-    dead-session and superseded-fingerprint entries) — one definition
-    for every index cache in this module."""
-    from .dedup import _evict_stale
-
-    df = df.localCheckpoint(eager=eager)
-    _evict_stale(cache, key[0], key)
-    cache[key] = df
-    return df
 
 
 def cosine_topk(
@@ -170,16 +149,6 @@ def _cosine_topk_sql(
     return _topk(scored, k)
 
 
-#: session cache of the materialized LSH bucket table, keyed by
-#: (applicationId, corpus dir, planes, tables) — the corpus-side index
-#: is query-independent, so one build amortizes across every
-#: lsh_ann_topk / embedding_near_dups_lsh call in a session (the same
-#: contract as the persisted IVF centroids).  The key carries the
-#: corpus fingerprint, so an in-session rewrite of embeddings.parquet
-#: misses the cache; DDS_LSH_CACHE=0 disables caching outright.
-_LSH_SIG_CACHE: dict[tuple, DataFrame] = {}
-
-
 def lsh_signatures(
     spark: SparkSession, sf_dir: str, planes: int = 6, tables: int = 4,
     portable_hash: bool = False,
@@ -192,8 +161,10 @@ def lsh_signatures(
     vec_id; nested array lambdas would run interpreted and re-hash per
     plane).  ``tables`` independent buckets trade memory for recall,
     classic multi-table LSH.  Returns a MATERIALIZED (localCheckpoint)
-    frame, session-cached per (app, corpus, fingerprint, planes,
-    tables, hash family).
+    frame, session-cached per (corpus, fingerprint, planes, tables,
+    hash family): the corpus-side index is query-independent, so one
+    build amortizes across every lsh_ann_topk /
+    embedding_near_dups_lsh call in a session.
 
     ``portable_hash=True`` is the oracle dial (the r9 ingest-filter
     technique, applied to the embedding family): coefficients become
@@ -207,14 +178,6 @@ def lsh_signatures(
     production path; only the hash family and fold order swap.  The
     fold runs interpreted (map-only, no shuffle), fine for
     verification corpora; production keeps the codegen'd aggregate."""
-    # corpus fingerprint in the key: an in-session rewrite of
-    # embeddings.parquet must miss the cache (same contract as load()
-    # and the IVF centroid cache), not serve stale checkpoints
-    key = (
-        spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-        _corpus_fingerprint(sf_dir), planes, tables,
-        "md5" if portable_hash else "xx",
-    )
     if not 1 <= planes <= 62:
         # shiftleft wraps its shift amount mod 64: plane 63+ would
         # alias onto low bit positions (silent recall loss), and the
@@ -222,10 +185,16 @@ def lsh_signatures(
         raise ValueError(f"planes={planes} must be in [1, 62]")
     if tables < 1:
         raise ValueError(f"tables={tables} must be >= 1")
-    caching = os.environ.get("DDS_LSH_CACHE", "1") != "0"
-    if caching and key in _LSH_SIG_CACHE:
-        return _LSH_SIG_CACHE[key]
-    emb = load(spark, sf_dir, "embeddings")
+    return session_cache.get(
+        spark, sf_dir, "embeddings",
+        ("lsh", planes, tables, "md5" if portable_hash else "xx"),
+        lambda _fp: _lsh_signatures_of(
+            load(spark, sf_dir, "embeddings"), planes, tables,
+            portable_hash).localCheckpoint())
+
+
+def _lsh_signatures_of(emb: DataFrame, planes: int, tables: int,
+                       portable_hash: bool) -> DataFrame:
     total = planes * tables
     if portable_hash:
         from .dedup import PORTABLE_H64
@@ -274,12 +243,9 @@ def lsh_signatures(
     # queries don't re-run the O(corpus x dims) sqrt-aggregate per call
     # (zero-norm vectors drop out here, consistently with every other
     # similarity path)
-    sigs = g.select("vec_id", buckets.alias("buckets")).join(
+    return g.select("vec_id", buckets.alias("buckets")).join(
         _with_norm(emb.select("vec_id", "embedding")), "vec_id"
     )
-    if caching:
-        sigs = _cache_store(_LSH_SIG_CACHE, key, sigs)
-    return sigs
 
 
 def lsh_ann_topk(
@@ -1042,36 +1008,15 @@ def _assign_cells(emb: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-# per-process handles to already-loaded centroid frames, keyed by
-# (applicationId, sf_dir, params) — applicationId is unique per session,
-# unlike id(spark) which can be reused after GC
-_CENTROID_CACHE: dict = {}
-
-
-def clear_centroid_cache() -> None:
-    _CENTROID_CACHE.clear()
-
-
 def _collected_centroids(spark: SparkSession, sf_dir: str,
                          n_cells: int, cents: DataFrame) -> list:
     """Driver-side rows of the (checkpointed, session-cached) centroid
     frame — INDEX state like the frame itself, so the collect is paid
     once per (session, corpus fingerprint, n_cells) and the vectorized
-    query paths' driver probe ranking reads the cached copy (the same
-    contract as ``_CENTROID_CACHE``'s frame entries; the fingerprint
-    key makes in-session corpus rewrites miss)."""
-    key = (
-        spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-        _corpus_fingerprint(sf_dir), "crows", n_cells,
-    )
-    hit = _CENTROID_CACHE.get(key)
-    if hit is None:
-        from .dedup import _evict_stale
-
-        hit = cents.collect()
-        _evict_stale(_CENTROID_CACHE, key[0], key)
-        _CENTROID_CACHE[key] = hit
-    return hit
+    query paths' driver probe ranking reads the cached copy (the
+    fingerprint key makes in-session corpus rewrites miss)."""
+    return session_cache.get(spark, sf_dir, "embeddings",
+                             ("crows", n_cells), lambda _fp: cents.collect())
 
 
 def _index_root() -> str:
@@ -1090,18 +1035,6 @@ def _index_root() -> str:
     # per-user namespace: a fixed world-shared /tmp path collides on
     # ownership across users and lets them read each other's indexes
     return os.path.join(tempfile.gettempdir(), f"dds_ann_index_{user}")
-
-
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Cheap change-detection key for the embeddings corpus (shared
-    helper; handles both plain-file and directory tables — the old
-    inline glob hashed plain files to the EMPTY fingerprint).  A
-    retrain lands as a NEW VERSION of the centroid table when this
-    changes; matching versions are reused across processes (the index
-    build is one-off, not part of the query path)."""
-    from .relational import corpus_fingerprint
-
-    return corpus_fingerprint(sf_dir, "embeddings")
 
 
 def ivf_centroid_table_uri(
@@ -1152,44 +1085,32 @@ def ivf_train_centroids(
     — matching a production IVF index whose build is a separate,
     amortized pipeline.  The table's commit metadata records the corpus
     fingerprint; a changed corpus triggers a retrain committed as a new
-    version.  Within a process the loaded frame is cached per
-    (applicationId, params)."""
-    from pyspark.sql.window import Window
-
+    version.  Within a process the loaded frame is session-cached per
+    (corpus, fingerprint, params); a corpus rewrite misses the cache
+    and hits the retrain-on-change path."""
     from ..table import DeltaSparkTable
 
     n_cells = _resolve_cells(spark, sf_dir, n_cells)
-    fingerprint = _corpus_fingerprint(sf_dir)
-    # fingerprint in the key: a corpus rewrite within this process must
-    # miss the cache and hit the retrain-on-change path below.  Key
-    # shape is (app, dir, fingerprint, kind, *params) — the first three
-    # positions are what _evict_stale's live_key path compares, so an
-    # in-session rewrite also EVICTS the superseded entries instead of
-    # pinning their checkpoint blocks for the session's lifetime
-    key = (
-        spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-        fingerprint, "train", n_cells, iters, train_sample_mod,
-    )
-    cached = _CENTROID_CACHE.get(key)
-    if cached is not None:
-        return cached
-    params = {
-        "n_cells": str(n_cells), "iters": str(iters),
-        "train_sample_mod": str(train_sample_mod),
-    }
-    index = DeltaSparkTable(spark, ivf_centroid_table_uri(
-        sf_dir, n_cells, iters, train_sample_mod))
-    if index.exists():
-        meta = (index.history(limit=1)[0].get("userMetadata") or {})
-        if meta.get("corpus_fingerprint") == fingerprint:
-            return _cache_store(_CENTROID_CACHE, key, index.read(),
-                                eager=False)
 
-    emb = _with_norm(load(spark, sf_dir, "embeddings"))
-    cents = kmeans_centroids(emb, n_cells, iters, train_sample_mod)
-    index.write(cents, commit_metadata={"corpus_fingerprint": fingerprint,
-                                        **params})
-    return _cache_store(_CENTROID_CACHE, key, index.read(), eager=False)
+    def build(fingerprint: str) -> DataFrame:
+        index = DeltaSparkTable(spark, ivf_centroid_table_uri(
+            sf_dir, n_cells, iters, train_sample_mod))
+        meta = ((index.history(limit=1)[0].get("userMetadata") or {})
+                if index.exists() else {})
+        if meta.get("corpus_fingerprint") != fingerprint:
+            emb = _with_norm(load(spark, sf_dir, "embeddings"))
+            index.write(
+                kmeans_centroids(emb, n_cells, iters, train_sample_mod),
+                commit_metadata={
+                    "corpus_fingerprint": fingerprint,
+                    "n_cells": str(n_cells), "iters": str(iters),
+                    "train_sample_mod": str(train_sample_mod),
+                })
+        return index.read().localCheckpoint(eager=False)
+
+    return session_cache.get(
+        spark, sf_dir, "embeddings",
+        ("train", n_cells, iters, train_sample_mod), build)
 
 
 def kmeans_centroids(
@@ -1252,21 +1173,16 @@ def ivf_assignments(
     The assignment IS the index's inverted-list half — in a production
     IVF it's built once with the centroids and only PROBED per query.
     The default path therefore caches the checkpointed assignment per
-    (session, corpus fingerprint, params) alongside the centroid cache;
+    (session, corpus fingerprint, params) alongside the centroids;
     queries pay probe + rerank only.  (Training-loop internals call
     ``_assign_cells`` directly for fresh assignments.)"""
     n_cells = _resolve_cells(spark, sf_dir, n_cells)
-    key = (
-        spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-        _corpus_fingerprint(sf_dir), "assign", n_cells, train_iters,
-    )
-    hit = _CENTROID_CACHE.get(key)
-    if hit is not None:
-        return hit
-    cents = ivf_train_centroids(spark, sf_dir, n_cells, train_iters)
-    emb = _with_norm(load(spark, sf_dir, "embeddings"))
-    return _cache_store(_CENTROID_CACHE, key, _assign_cells(emb, cents),
-                        eager=False)
+    return session_cache.get(
+        spark, sf_dir, "embeddings", ("assign", n_cells, train_iters),
+        lambda _fp: _assign_cells(
+            _with_norm(load(spark, sf_dir, "embeddings")),
+            ivf_train_centroids(spark, sf_dir, n_cells, train_iters),
+        ).localCheckpoint(eager=False))
 
 
 def _probe_cells_for(
@@ -1382,6 +1298,23 @@ _DEQUANT = (
 )
 
 
+def _dequantized_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(vec_id, aemb, anorm)``: the corpus dequantized from its int8
+    codes.  INDEX state (per-dim stats + int8 codes — in production its
+    own materialized asset next to the centroids), so it is
+    session-cached per corpus fingerprint like the centroid /
+    assignment frames: queries pay probe + rerank, not a re-quantize of
+    the whole corpus (measured 5.3 s -> ~0.7 s at 20x sf0.1)."""
+    from .curation import quantized_embeddings_with_stats
+
+    return session_cache.get(
+        spark, sf_dir, "embeddings", ("qtab",),
+        lambda _fp: quantized_embeddings_with_stats(spark, sf_dir)
+        .select("vec_id", F.expr(_DEQUANT).alias("aemb"))
+        .withColumn("anorm", F.expr(NORM.format(a="aemb")))
+        .localCheckpoint(eager=False))
+
+
 def ivf_quantized_topk(
     spark: SparkSession, sf_dir: str, k: int = 5, n_queries: int = 5,
     n_cells: Optional[int] = None, nprobe: Optional[int] = None,
@@ -1404,8 +1337,6 @@ def ivf_quantized_topk(
     rerank >= cell population reproduces it bit-for-bit)."""
     from pyspark.sql.window import Window
 
-    from .curation import quantized_embeddings_with_stats
-
     # NB Window is used by the stage-1 shortlist ranking below.
     # a shortlist smaller than k would silently return fewer than k
     # results per query that LOOK complete
@@ -1414,26 +1345,9 @@ def ivf_quantized_topk(
     nprobe = _resolve_nprobe(nprobe, n_cells)
     cents = ivf_train_centroids(spark, sf_dir, n_cells)
     assigned = ivf_assignments(spark, sf_dir, n_cells)
-    # stage 1: approximate scoring against the dequantized int8 table.
-    # The table is INDEX state (per-dim stats + int8 codes — in
-    # production its own materialized asset next to the centroids), so
-    # it is session-cached per corpus fingerprint like the centroid /
-    # assignment frames: queries pay probe + rerank, not a re-quantize
-    # of the whole corpus (measured 5.3 s -> ~0.7 s at 20x sf0.1).
-    qkey = (
-        spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-        _corpus_fingerprint(sf_dir), "qtab",
-    )
-    qtab = _CENTROID_CACHE.get(qkey)
-    if qtab is None:
-        qtab = _cache_store(
-            _CENTROID_CACHE, qkey,
-            quantized_embeddings_with_stats(spark, sf_dir)
-            .select("vec_id", F.expr(_DEQUANT).alias("aemb"))
-            .withColumn("anorm", F.expr(NORM.format(a="aemb"))),
-            eager=False,
-        )
-    cand = assigned.select("vec_id", "cell").join(qtab, "vec_id")
+    # stage 1: approximate scoring against the dequantized int8 table
+    cand = assigned.select("vec_id", "cell").join(
+        _dequantized_table(spark, sf_dir), "vec_id")
     adot = DOT.format(a="q_emb", b="aemb")
     w = Window.partitionBy("q_id").orderBy(F.desc("acos"), F.asc("vec_id"))
     # r16: a vectorized stage-1 (the cosine_topk/ivf_ann_topk
@@ -1577,43 +1491,34 @@ def _pq_codebooks(
     query-session path — no training job at all), else train on the
     deterministic bounded sample (the FAISS recipe: codebooks need
     thousands of examples per subspace, never the corpus) and persist.
-    Returns ``(codebooks, d)``; session-cached next to the centroid
-    cache."""
+    Returns ``(codebooks, d)``; session-cached next to the
+    centroids."""
     from ..table import DeltaSparkTable
 
-    key = (
-        spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-        _corpus_fingerprint(sf_dir), "pqcb", m, nbits, train_sample_mod,
-        iters, sample_cap,
-    )
-    hit = _CENTROID_CACHE.get(key)
-    if hit is not None:
-        return hit
-    from .dedup import _evict_stale
+    def build(fingerprint: str):
+        table = DeltaSparkTable(spark, pq_codebook_table_uri(
+            sf_dir, m, nbits, train_sample_mod, iters, sample_cap))
+        codebooks = None
+        if table.exists():
+            meta = (table.history(limit=1)[0].get("userMetadata") or {})
+            if meta.get("corpus_fingerprint") == fingerprint:
+                codebooks = _codebooks_from_rows(table.read().collect())
+        if codebooks is None:
+            emb = _with_norm(load(spark, sf_dir, "embeddings"))
+            x = _pq_sample_matrix(emb, train_sample_mod, sample_cap)
+            codebooks = _learn_pq_codebooks(x, m, nbits, iters)
+            table.write(
+                spark.createDataFrame(
+                    _codebooks_to_rows(codebooks),
+                    "subspace int, code int, vals array<double>"),
+                commit_metadata={"corpus_fingerprint": fingerprint,
+                                 "m": str(m), "nbits": str(nbits)},
+            )
+        return codebooks, codebooks.shape[0] * codebooks.shape[2]
 
-    fingerprint = _corpus_fingerprint(sf_dir)
-    table = DeltaSparkTable(spark, pq_codebook_table_uri(
-        sf_dir, m, nbits, train_sample_mod, iters, sample_cap))
-    codebooks = None
-    if table.exists():
-        meta = (table.history(limit=1)[0].get("userMetadata") or {})
-        if meta.get("corpus_fingerprint") == fingerprint:
-            codebooks = _codebooks_from_rows(table.read().collect())
-    if codebooks is None:
-        emb = _with_norm(load(spark, sf_dir, "embeddings"))
-        x = _pq_sample_matrix(emb, train_sample_mod, sample_cap)
-        codebooks = _learn_pq_codebooks(x, m, nbits, iters)
-        table.write(
-            spark.createDataFrame(
-                _codebooks_to_rows(codebooks),
-                "subspace int, code int, vals array<double>"),
-            commit_metadata={"corpus_fingerprint": fingerprint,
-                             "m": str(m), "nbits": str(nbits)},
-        )
-    d = codebooks.shape[0] * codebooks.shape[2]
-    _evict_stale(_CENTROID_CACHE, key[0], key)
-    _CENTROID_CACHE[key] = (codebooks, d)
-    return codebooks, d
+    return session_cache.get(
+        spark, sf_dir, "embeddings",
+        ("pqcb", m, nbits, train_sample_mod, iters, sample_cap), build)
 
 
 def _pq_encode(vectors: DataFrame, codebooks,
@@ -1676,17 +1581,15 @@ def pq_codes(
     corpus fingerprint like the SQ8 scorer table — in production it
     is its own materialized asset maintained next to the centroids."""
     n_cells = _resolve_cells(spark, sf_dir, n_cells)
-    key = (
-        spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-        _corpus_fingerprint(sf_dir), "pqcodes", m, nbits, n_cells,
-    )
-    hit = _CENTROID_CACHE.get(key)
-    if hit is not None:
-        return hit
-    codebooks, _d = _pq_codebooks(spark, sf_dir, m, nbits)
-    assigned = ivf_assignments(spark, sf_dir, n_cells)
-    out = _pq_encode(assigned, codebooks, extra_cols=("cell",))
-    return _cache_store(_CENTROID_CACHE, key, out, eager=False)
+
+    def build(_fp: str) -> DataFrame:
+        codebooks, _d = _pq_codebooks(spark, sf_dir, m, nbits)
+        assigned = ivf_assignments(spark, sf_dir, n_cells)
+        return _pq_encode(assigned, codebooks, extra_cols=("cell",)
+                          ).localCheckpoint(eager=False)
+
+    return session_cache.get(spark, sf_dir, "embeddings",
+                             ("pqcodes", m, nbits, n_cells), build)
 
 
 def ivf_pq_topk(
@@ -2576,15 +2479,6 @@ def kmeans_clusters(
     )
 
 
-#: session cache of trained PCA bases, keyed
-#: (applicationId, corpus dir, fingerprint, "pca", k) -> numpy
-#: (mean, components, explained).  Same liveness contract as the
-#: centroid cache (_evict_stale drops dead-session and
-#: superseded-fingerprint entries); values are plain numpy tuples,
-#: nothing to unpersist.
-_PCA_CACHE: dict[tuple, tuple] = {}
-
-
 def _portable_pca_cov(emb_df: DataFrame):
     """(n, dims, mu, cov) frames for the PORTABLE PCA dial over a
     (vec_id, embedding) frame — every aggregate accumulates in
@@ -2807,7 +2701,7 @@ def embedding_pca(
     query session's projection is map-only instead of re-aggregating
     corpus moments per call.  A changed corpus triggers a retrain
     committed as a new version; within a process the decoded numpy
-    basis is cached per (app, corpus, fingerprint, k).
+    basis is session-cached per (corpus, fingerprint, k).
 
     Scale shape (the 100 TB covariance recipe): one ``mapInPandas``
     pass emits ONE partial-moment row per Arrow batch — count, sum
@@ -2818,22 +2712,21 @@ def embedding_pca(
     SCALE.md driver-side section covers; d=64 -> 32 KB per partial
     row).  No per-vector data ever reaches the driver.
     """
-    import numpy as np
-
-    from ..table import DeltaSparkTable
-
     d = _embedding_dim(spark, sf_dir)
     if not 1 <= k <= d:
         raise ValueError(f"k={k} must be in [1, {d}]")
+    return session_cache.get(
+        spark, sf_dir, "embeddings", ("pca", k),
+        lambda fingerprint: _pca_basis(spark, sf_dir, k, d, fingerprint))
 
-    fingerprint = _corpus_fingerprint(sf_dir)
-    key = (
-        spark.sparkContext.applicationId, os.path.abspath(sf_dir),
-        fingerprint, "pca", k,
-    )
-    cached = _PCA_CACHE.get(key)
-    if cached is not None:
-        return cached
+
+def _pca_basis(spark: SparkSession, sf_dir: str, k: int, d: int,
+               fingerprint: str):
+    """The persisted basis when its fingerprint matches, else a trained
+    and persisted one (see :func:`embedding_pca`)."""
+    import numpy as np
+
+    from ..table import DeltaSparkTable
 
     index = DeltaSparkTable(spark, pca_basis_table_uri(sf_dir, k))
     if index.exists():
@@ -2841,15 +2734,11 @@ def embedding_pca(
         if meta.get("corpus_fingerprint") == fingerprint:
             rows = {(r["kind"], r["idx"]): np.asarray(r["vals"])
                     for r in index.read().collect()}
-            basis = (
+            return (
                 rows[("mean", 0)],
                 np.stack([rows[("comp", j)] for j in range(k)], axis=1),
                 rows[("expl", 0)],
             )
-            from .dedup import _evict_stale
-            _evict_stale(_PCA_CACHE, key[0], key)
-            _PCA_CACHE[key] = basis
-            return basis
 
     def _moments(batches):
         import numpy as _np
@@ -2886,7 +2775,7 @@ def embedding_pca(
     total_var = float(np.clip(evals.sum(), 1e-30, None))
     explained = np.clip(evals[order], 0.0, None) / total_var
 
-    # persist + session-cache: the basis is (2 + k) tiny rows — the
+    # persist: the basis is (2 + k) tiny rows — the
     # component matrix decomposes column-per-row so any k rebuilds
     # exactly (arrays round-trip as array<double>)
     basis_rows = (
@@ -2898,11 +2787,7 @@ def embedding_pca(
             basis_rows, "kind string, idx int, vals array<double>"),
         commit_metadata={"corpus_fingerprint": fingerprint, "k": str(k)},
     )
-    from .dedup import _evict_stale
-    _evict_stale(_PCA_CACHE, key[0], key)
-    basis = (mean, components, explained)
-    _PCA_CACHE[key] = basis
-    return basis
+    return mean, components, explained
 
 
 def _embedding_dim(spark: SparkSession, sf_dir: str) -> int:

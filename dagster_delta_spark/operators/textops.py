@@ -17,6 +17,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import session_cache
 from .relational import load, widen_for_compute
 
 # tokens as a Spark SQL expression (kept in sync with oracle SQL)
@@ -581,7 +582,24 @@ def _bigram_scored_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     count side is one row per token), and the 1-row corpus total
     broadcasts.  Linear in corpus tokens, no Python in the plan, and
     the model is never driver-materialized — at 100 TB the
-    vocabulary² pair space stays distributed."""
+    vocabulary² pair space stays distributed.
+
+    r16: the SCORED STREAM itself is session-cached too (keyed on the
+    corpus fingerprint like the LSH shingle/signature streams, which
+    are equally corpus-sized) — four entries (bigram perplexity, ccnet
+    terciles, doremi, selective mask) score over this exact frame, and
+    each used to re-run the tokenize + three scoring joins per call
+    (~0.6 s/pass locally).  In production terms the scored stream is a
+    materialized feature table next to the LM counts: train once, score
+    many.  The bench prebuilds it untimed (declared in
+    OPTIMIZATION_r16.md — the four lines now measure their scoring
+    epilogues, not the shared derivation)."""
+    return session_cache.get(spark, sf_dir, "documents", ("bigram_scored",),
+                             lambda _fp: _score_bigrams(spark, sf_dir))
+
+
+def _score_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The uncached build of :func:`_bigram_scored_stream`."""
     docs = load(spark, sf_dir, "documents")
     tarr = docs.select("doc_id", F.expr(TOKENS).alias("t"))
     toks = tarr.select("doc_id", F.posexplode("t").alias("pos", "tok"))
@@ -605,45 +623,16 @@ def _bigram_scored_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # they session-cache per corpus fingerprint like the IVF
     # centroid/assignment frames (train once, score many: both this
     # operator and ccnet_perplexity_buckets reuse the same model)
-    import os as _os
-
-    from .dedup import _evict_stale
-    from .relational import corpus_fingerprint
-
-    lm_key = (
-        spark.sparkContext.applicationId, _os.path.abspath(sf_dir),
-        corpus_fingerprint(sf_dir, "documents"), "bigram_lm",
-    )
-    # r16: the SCORED STREAM itself is session-cached too (keyed on
-    # the corpus fingerprint like the LSH shingle/signature streams,
-    # which are equally corpus-sized) — four entries (bigram
-    # perplexity, ccnet terciles, doremi, selective mask) score over
-    # this exact frame, and each used to re-run the tokenize + three
-    # scoring joins per call (~0.6 s/pass locally).  In production
-    # terms the scored stream is a materialized feature table next to
-    # the LM counts: train once, score many.  The bench prebuilds it
-    # untimed (declared in OPTIMIZATION_r16.md — the four lines now
-    # measure their scoring epilogues, not the shared derivation).
-    skey = lm_key[:3] + ("bigram_scored",)
-    cached = _BIGRAM_LM_CACHE.get(skey)
-    if cached is not None:
-        return cached
-    hit = _BIGRAM_LM_CACHE.get(lm_key)
-    if hit is not None:
-        uni, big = hit
-    else:
-        uni = (
+    uni, big = session_cache.get(
+        spark, sf_dir, "documents", ("bigram_lm",),
+        lambda _fp: (
             toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c_uni"))
-            .localCheckpoint(eager=False)
-        )
-        big = (
+            .localCheckpoint(eager=False),
             bi.groupBy("tok", "nxt").agg(F.count(F.lit(1)).alias("c_big"))
-            .localCheckpoint(eager=False)
-        )
-        _evict_stale(_BIGRAM_LM_CACHE, lm_key[0], lm_key)
-        _BIGRAM_LM_CACHE[lm_key] = (uni, big)
+            .localCheckpoint(eager=False),
+        ))
     total = uni.agg(F.sum("c_uni").alias("n_corpus"))
-    scored = (
+    return (
         bi.join(big, ["tok", "nxt"])
         .join(uni.select(F.col("tok").alias("nxt"),
                          F.col("c_uni").alias("c_nxt")), "nxt")
@@ -651,9 +640,6 @@ def _bigram_scored_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(total))
         .localCheckpoint(eager=False)
     )
-    _evict_stale(_BIGRAM_LM_CACHE, skey[0], skey)
-    _BIGRAM_LM_CACHE[skey] = scored
-    return scored
 
 
 def _interp_logprob(lam: float):
@@ -811,13 +797,6 @@ def selective_token_mask(
     return ranked.unionByName(zeros).select(
         "doc_id", F.col("pos").cast("long").alias("pos"),
         "excess", "selected")
-
-
-#: session cache of trained bigram LMs, keyed (applicationId, corpus
-#: dir, fingerprint, "bigram_lm") -> (uni, big) checkpointed count
-#: frames — the centroid-cache contract (dedup._evict_stale drops
-#: dead-session and superseded-fingerprint entries)
-_BIGRAM_LM_CACHE: dict[tuple, tuple] = {}
 
 
 def ccnet_perplexity_buckets(

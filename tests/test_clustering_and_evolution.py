@@ -268,10 +268,10 @@ def test_centroid_cache_evicts_on_corpus_rewrite(spark, tmp_path, monkeypatch):
     import numpy as np
     import pandas as pd
 
-    from dagster_delta_spark.operators import similarity
+    from dagster_delta_spark.operators import session_cache, similarity
 
     monkeypatch.setenv("DDS_INDEX_DIR", str(tmp_path / "idx"))
-    similarity._CENTROID_CACHE.clear()
+    session_cache.clear()
     d = tmp_path / "c"
     d.mkdir()
 
@@ -289,11 +289,11 @@ def test_centroid_cache_evicts_on_corpus_rewrite(spark, tmp_path, monkeypatch):
     time.sleep(0.01)  # distinct mtime_ns -> distinct fingerprint
     write(2)
     similarity.ivf_assignments(spark, str(d), n_cells=4)
-    same_dir = [k for k in similarity._CENTROID_CACHE
+    same_dir = [k for k in session_cache._entries
                 if k[1] == os.path.abspath(str(d))]
     assert same_dir  # fresh entries present (train + assign)
-    assert len({k[2] for k in same_dir}) == 1  # old fingerprint evicted
-    similarity._CENTROID_CACHE.clear()
+    assert len({k[3] for k in same_dir}) == 1  # old fingerprint evicted
+    session_cache.clear()
 
 
 def test_ivf_quantized_topk(spark):

@@ -519,21 +519,21 @@ def test_registry_rotation_invariant():
     assert [k for k in oracles if k not in qs] == []
 
 
-def test_shingle_stream_session_cache(spark, monkeypatch):
+def test_shingle_stream_session_cache(spark):
     """Same (app, corpus) returns the cached materialized frame;
-    DDS_SHINGLE_CACHE=0 bypasses and re-materializes."""
-    from dagster_delta_spark.operators import dedup
+    after session_cache.clear() the stream is re-materialized."""
+    from dagster_delta_spark.operators import dedup, session_cache
 
-    dedup._SHINGLE_CACHE.clear()
+    session_cache.clear()
     sf = "/root/testdata/sf0.001"
     a = dedup._shingle_stream(spark, sf)
     b = dedup._shingle_stream(spark, sf)
     assert a is b
-    monkeypatch.setenv("DDS_SHINGLE_CACHE", "0")
+    session_cache.clear()
     c = dedup._shingle_stream(spark, sf)
     assert c is not a
     assert c.count() == a.count()
-    dedup._SHINGLE_CACHE.clear()
+    session_cache.clear()
 
 
 def test_shingle_cache_misses_on_corpus_rewrite(spark, tmp_path):
@@ -567,9 +567,9 @@ def test_superseded_fingerprint_entries_evicted(spark, tmp_path):
     on the next insert for the same (app, dir)."""
     import pandas as pd
 
-    from dagster_delta_spark.operators import dedup
+    from dagster_delta_spark.operators import dedup, session_cache
 
-    dedup._SHINGLE_CACHE.clear()
+    session_cache.clear()
     d = tmp_path / "c"
     d.mkdir()
 
@@ -583,9 +583,10 @@ def test_superseded_fingerprint_entries_evicted(spark, tmp_path):
     dedup._shingle_stream(spark, str(d))
     write("one two three four five six")
     dedup._shingle_stream(spark, str(d))
-    same_dir = [k for k in dedup._SHINGLE_CACHE if k[1] == str(d)]
+    same_dir = [k for k in session_cache._entries
+                if k[1] == str(d) and k[4:] == ("shingles",)]
     assert len(same_dir) == 1  # old-fingerprint entry evicted
-    dedup._SHINGLE_CACHE.clear()
+    session_cache.clear()
 
 
 def test_sessionize_duplicate_ts_boundary_parity(spark, tmp_path):

@@ -1224,17 +1224,17 @@ def test_embedding_pca_basis_persists_and_caches(spark, monkeypatch, tmp_path):
     a dict hit."""
     import numpy as np
 
-    from dagster_delta_spark.operators import similarity
+    from dagster_delta_spark.operators import session_cache, similarity
 
     monkeypatch.setenv("DDS_INDEX_DIR", str(tmp_path / "idx"))
     sf = "/root/testdata/sf0.001"
-    similarity._PCA_CACHE.clear()
+    session_cache.clear()
     m1, c1, e1 = similarity.embedding_pca(spark, sf, k=4)
     assert os.path.isdir(similarity.pca_basis_table_uri(sf, 4))
 
     # cold session cache -> persisted load; eigh on this path means a
     # retrain happened despite a fingerprint-matching stored basis
-    similarity._PCA_CACHE.clear()
+    session_cache.clear()
 
     def boom(*a, **k):
         raise AssertionError("retrained despite persisted basis")

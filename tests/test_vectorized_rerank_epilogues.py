@@ -118,17 +118,11 @@ def test_ivf_epilogues_match_jvm_formulations(spark):
     both must reproduce the retained JVM join formulations
     bit-for-bit on real data (the probe sets come from the shared
     _probe_cells either way)."""
-    import os
-
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from dagster_delta_spark.operators.curation import (
-        quantized_embeddings_with_stats,
-    )
     from dagster_delta_spark.operators.similarity import (
-        DOT, NORM, _DEQUANT, _CENTROID_CACHE, _cache_store,
-        _corpus_fingerprint, _probe_cells, _resolve_cells,
+        DOT, _dequantized_table, _probe_cells, _resolve_cells,
         _resolve_nprobe, _topk, ivf_assignments, ivf_train_centroids,
     )
 
@@ -152,17 +146,8 @@ def test_ivf_epilogues_match_jvm_formulations(spark):
     assert new_ivf.count() > 0
     _assert_bit_identical(new_ivf, old_ivf)
 
-    qkey = (spark.sparkContext.applicationId, os.path.abspath(sf),
-            _corpus_fingerprint(sf), "qtab")
-    qtab = _CENTROID_CACHE.get(qkey)
-    if qtab is None:
-        qtab = _cache_store(
-            _CENTROID_CACHE, qkey,
-            quantized_embeddings_with_stats(spark, sf)
-            .select("vec_id", F.expr(_DEQUANT).alias("aemb"))
-            .withColumn("anorm", F.expr(NORM.format(a="aemb"))),
-            eager=False)
-    cand = assigned.select("vec_id", "cell").join(qtab, "vec_id")
+    cand = assigned.select("vec_id", "cell").join(
+        _dequantized_table(spark, sf), "vec_id")
     adot = DOT.format(a="q_emb", b="aemb")
     w = Window.partitionBy("q_id").orderBy(
         F.desc("acos"), F.asc("vec_id"))
