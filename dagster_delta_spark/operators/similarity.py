@@ -1,16 +1,20 @@
 """Similarity search over embedding columns (``array<float>``).
 
 - ``cosine_topk``: brute-force exact top-k — the correctness baseline.
-  Queries are broadcast; the corpus scan is embarrassingly parallel;
-  per-partition top-k then a single global merge of k*partitions rows.
+  Queries collect to the driver; the corpus scan is one Arrow pass
+  with per-batch top-k, then a single global window over
+  k*batches rows.
 - ``lsh_ann_topk``: random-hyperplane LSH — the scale path.  Hyperplane
   coefficients are derived from ``xxhash64(plane, dim)`` so the whole
   pipeline is deterministic, JVM-side, and needs no model state.
 - ``embedding_near_dups``: all pairs above a cosine threshold
   (brute-force exact; LSH-bucketed variant for scale).
 
-Dot products use ``zip_with``+``aggregate`` array lambdas (vectorized
-in codegen) rather than Python UDFs.
+Exact cosine (``cosine_topk``, the ``ivf_ann_topk`` rerank,
+``embedding_decontaminate``) is scored by one Arrow path: the batch
+decoder :func:`_decode_batch` and bit-identical ``out=``-buffered
+ordered folds.  The JVM paths use the ``DOT``/``NORM``
+``zip_with``+``aggregate`` array expressions rather than Python UDFs.
 """
 
 from __future__ import annotations
@@ -18,14 +22,21 @@ from __future__ import annotations
 import hashlib
 import math
 import os
+import sys
 import tempfile
 from typing import Optional
 
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import session_cache
 from .relational import load
+
+# Python workers may not have this repo on PYTHONPATH, and the Arrow
+# scorers' closures call the module-level decoder: ship this module's
+# functions by value (the multimodal.py arrangement).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
@@ -108,44 +119,21 @@ def cosine_topk(
     """Exact top-k cosine neighbors for the first ``n_queries`` vectors
     (excluding self-matches).  Deterministic tiebreak on vec_id.
 
-    r16 (guide §4.2): the corpus x broadcast-queries join evaluated the
-    interpreted ``DOT``/``NORM`` folds per pair; scoring now runs in
-    the shared ``out=``-buffered ``mapInArrow`` scorer
-    (:func:`_pair_topk_scores` — bit-identical ordered folds, the
-    embedding_decontaminate pattern) with per-batch partial top-k, so
-    the ``_topk`` window ranks k*batches rows instead of the full
-    corpus x queries pair stream.  Degenerate inputs (empty / ragged /
-    null-element query set) fall back to the exact JVM plan."""
+    The query set (``n_queries`` rows) collects to the driver; the
+    corpus is scored in the ``out=``-buffered ``mapInArrow`` scorer
+    (:func:`_pair_topk_scores` — bit-identical ordered folds) with
+    per-batch partial top-k, so the ``_topk`` window ranks k*batches
+    rows instead of the full corpus x queries pair stream.  Queries
+    follow the ``_with_norm`` rules (see :func:`_collect_query_matrix`):
+    an empty query set returns an empty frame, a ragged one raises."""
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    q = _collect_query_matrix(
+    q_ids, qmat, qnorms = _collect_query_matrix(
         emb.where(F.col("vec_id") < n_queries).collect(),
         "vec_id", "embedding",
-    )  # bounded: n_queries rows (the broadcast the JVM join made)
-    if q is None:
-        return _cosine_topk_sql(spark, sf_dir, k, n_queries)
-    q_ids, qmat, qnorms, _d = q
+    )  # bounded: n_queries rows
     scored = _pair_topk_scores(
         emb, q_ids, qmat, qnorms, k=k,
     ).select("q_id", "vec_id", F.col("score").alias("cosine"))
-    return _topk(scored, k)
-
-
-def _cosine_topk_sql(
-    spark: SparkSession, sf_dir: str, k: int = 5, n_queries: int = 5
-) -> DataFrame:
-    """The exact pure-JVM formulation of :func:`cosine_topk` — the
-    degenerate-input fallback and the parity anchor its tests pin."""
-    emb = _with_norm(load(spark, sf_dir, "embeddings"))
-    queries = emb.where(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    dot = DOT.format(a="q_emb", b="embedding")
-    scored = (
-        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
-        .withColumn("cosine", F.expr(dot) / (F.col("norm") * F.col("q_norm")))
-    )
     return _topk(scored, k)
 
 
@@ -359,73 +347,39 @@ def embedding_decontaminate(
     angles).
 
     Plan: the eval side is a fixed fraction of a BOUNDED benchmark
-    set by construction, so it broadcasts; the corpus side is ONE
-    linear scan scoring ``|eval|`` codegen'd dot products per vector
-    — map-only, no shuffle until the per-vector best-match aggregate
-    (keyed vec_id, map-side combined).  Exact, and exactly
-    SQL-expressible: the ordered-fold DOT/NORM give bit-identical
-    doubles cross-engine (the cosine_topk precedent), so the entry is
-    oracle-backed.  At 100 TB: broadcast eval (even 1M x 1 KB vectors
-    fits executor memory), one pass over the corpus, cost
-    O(corpus x |eval| x d) FLOPs — embarrassingly parallel; an
-    IVF-bucketed variant would trade exactness for FLOPs if |eval|
-    grew unbounded, but benchmark suites do not.
+    set by construction, so it collects to the driver under the
+    ``_with_norm`` rules (:func:`_collect_query_matrix`: an empty eval
+    set returns an empty frame, a ragged one raises).  The corpus side
+    is ONE linear ``mapInArrow`` scan scoring ``|eval|`` dot products
+    per vector, and the best match is picked per corpus row inside the
+    batch — map-only at any corpus size, no window Exchange.  At
+    100 TB: the eval set (even 1M x 1 KB vectors) fits executor
+    memory, one pass over the corpus, cost O(corpus x |eval| x d)
+    FLOPs — embarrassingly parallel; an IVF-bucketed variant would
+    trade exactness for FLOPs if |eval| grew unbounded, but benchmark
+    suites do not.
 
-    r15 history: a first vectorized variant (``mapInPandas`` +
-    ``cumsum`` over a materialized corpus×eval×d product array) was
-    REVERTED mid-round — this host's numpy runs ALLOCATING
-    element-wise ufuncs at ~27M elem/s (fresh-page mmap/fault churn),
-    so the 3-D temporaries dominated.  The shipped form (r15
-    continuation) removes every large temporary: ``mapInArrow`` with
-    zero-copy input, and the dot/norm folds run as a d-step loop of
-    ``out=``-buffered multiply/adds (preallocated, reused across
-    batches — measured 593M elem/s on the same host).  The loop IS
-    the JVM ordered fold: acc starts at 0.0 and adds the dim-k
-    product left-to-right, so every double is bit-identical to the
+    Exact, and exactly SQL-expressible, so the entry is oracle-backed:
+    the dot/norm folds run as a d-step loop of ``out=``-buffered
+    multiply/adds (acc starts at 0.0 and adds the dim-k product
+    left-to-right — no matmul, whose pairwise summation is NOT
+    order-identical), so every double is bit-identical to the
     ``aggregate(zip_with(...))`` expression the DuckDB oracle
-    recomputes (no matmul — BLAS pairwise summation is NOT
-    order-identical).  Zero-norm exclusion, NaN ordering (Spark ranks
-    NaN above every value) and best-match tie-breaks reproduce the
-    JVM plan exactly; final round(9) stays in the JVM.  Plan effect:
-    the per-pair interpreted fold AND the best-match window Exchange
-    + sort both disappear (argmax happens per corpus row inside the
-    batch) — map-only at any corpus size.  Empty or ragged eval sets
-    fall back to the exact JVM formulation."""
-    import numpy as np
-
+    recomputes.  No large temporary is allocated: allocating
+    element-wise ufuncs measured ~27M elem/s against ~593M elem/s for
+    the preallocated buffers.  Zero-norm exclusion, NaN ordering
+    (Spark ranks NaN above every value) and best-match tie-breaks
+    follow the JVM plan; a corpus row with a null ``vec_id`` cannot be
+    reported and is skipped; final round(9) stays in the JVM."""
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    ev_rows = sorted(
+    ev_ids, evm, ev_norm = _collect_query_matrix(
         emb.where(F.pmod(F.col("vec_id"), F.lit(eval_mod)) == eval_rem)
         .collect(),
-        key=lambda r: r["vec_id"],
-    )  # bounded: the benchmark set (the broadcast the JVM join made)
-    ev_rows = [r for r in ev_rows if r["embedding"] is not None]
-    dims = {len(r["embedding"]) for r in ev_rows}
-    if not ev_rows or len(dims) != 1 or any(
-            v is None for r in ev_rows for v in r["embedding"]):
-        # empty / ragged / null-element eval set: keep the exact JVM
-        # plan — zip_with's null-extension semantics handle those;
-        # the vectorized path assumes the uniform dimension the
-        # embeddings generation contract guarantees
-        return _embedding_decontaminate_sql(
-            spark, sf_dir, threshold, eval_mod, eval_rem)
-    d = dims.pop()
-    evm_all = np.asarray([r["embedding"] for r in ev_rows],
-                         dtype=np.float64)
-    ev_ids_all = np.asarray([r["vec_id"] for r in ev_rows],
-                            dtype=np.int64)
-    ev_norm_all = _ordered_norms(evm_all)
-    # _with_norm's exclusion rule, Spark semantics: norm > 0 passes
-    # NaN too (Spark orders NaN above every value)
-    ev_keep = (ev_norm_all > 0) | np.isnan(ev_norm_all)
-    if not ev_keep.any():
-        return _embedding_decontaminate_sql(
-            spark, sf_dir, threshold, eval_mod, eval_rem)
-    evm = np.ascontiguousarray(evm_all[ev_keep])
-    ev_ids = ev_ids_all[ev_keep]
-    ev_norm = ev_norm_all[ev_keep]
+        "vec_id", "embedding", what="eval",
+    )  # bounded: the benchmark set
+    d = evm.shape[1]
     thr = float(threshold)
-    n_ev = evm.shape[0]
+    n_ev = len(ev_ids)
     # row-chunk bound so the (chunk × |eval|) fold buffers stay ~32 MB
     chunk = max(1, (4 << 20) // max(1, n_ev))
 
@@ -433,90 +387,19 @@ def embedding_decontaminate(
         import numpy as _np
         import pyarrow as _pa
 
-        buf = {}  # lazily allocated, reused across batches/chunks
-
-        def _get(name, shape, dtype=_np.float64):
-            b = buf.get(name)
-            if b is None or b.shape[0] < shape[0] or b.dtype != dtype:
-                b = _np.empty(shape, dtype=dtype)
-                buf[name] = b
-            return b[tuple(slice(0, s) for s in shape)]
-
+        get = _buffer_pool()
         for rb in batches:
-            n = rb.num_rows
-            if n == 0:
+            if rb.num_rows == 0 or n_ev == 0:
                 continue
-            col = rb.column(rb.schema.get_field_index("embedding"))
-            ids = rb.column(
-                rb.schema.get_field_index("vec_id")).to_numpy(
-                    zero_copy_only=False)
-            offs = col.offsets.to_numpy(zero_copy_only=False).astype(
-                _np.int64, copy=False)
-            lens = offs[1:] - offs[:-1]
-            vals = col.values
-            flat = vals.to_numpy(zero_copy_only=False)
-            keep = lens == d
-            if col.null_count:
-                keep &= _np.asarray(col.is_valid())
-            if vals.null_count:
-                # a null ELEMENT nulls the JVM fold (row never flags):
-                # map each null child position back to its row
-                null_pos = _np.nonzero(
-                    ~_np.asarray(vals.is_valid()))[0]
-                bad_rows = _np.unique(
-                    _np.searchsorted(offs, null_pos, side="right") - 1)
-                keep[bad_rows[(bad_rows >= 0) & (bad_rows < n)]] = False
-            if not keep.any():
-                continue
-            ids = ids[keep]
-            starts = offs[:-1][keep]
-            nk = len(ids)
-            # widen to float64 BEFORE any arithmetic — the parquet
-            # stores float32 and the JVM DOT/NORM macros CAST each
-            # element to DOUBLE first (f32->f64 is exact, so the
-            # folds then match bit-for-bit); one copy into a reused
-            # buffer, never an allocating upcast
-            vecs = _get("vecs", (nk, d))
-            if (nk == n and offs[0] == 0
-                    and int(offs[-1]) == n * d
-                    and flat.flags.c_contiguous):
-                _np.copyto(vecs, flat[: n * d].reshape(n, d),
-                           casting="same_kind")
-            else:
-                idx = starts[:, None] + _np.arange(d, dtype=_np.int64)
-                if flat.dtype == _np.float64:
-                    _np.take(flat, idx, out=vecs)
-                else:
-                    raw = _get("raw", (nk, d), dtype=flat.dtype)
-                    _np.take(flat, idx, out=raw)
-                    _np.copyto(vecs, raw, casting="same_kind")
-            # ordered norms: acc = 0.0, then += v_k * v_k over k —
-            # the exact JVM/DuckDB fold sequence
-            tmp1 = _get("tmp1", (nk,))
-            vnorm = _get("vnorm", (nk,))
-            vnorm[:] = 0.0
-            for k in range(d):
-                _np.multiply(vecs[:, k], vecs[:, k], out=tmp1)
-                _np.add(vnorm, tmp1, out=vnorm)
-            _np.sqrt(vnorm, out=vnorm)
-            # _with_norm exclusion: keep norm > 0 or NaN (Spark rule)
-            nz = (vnorm > 0) | _np.isnan(vnorm)
-            if not nz.any():
-                continue
-            if not nz.all():
-                ids = ids[nz]
-                sub = _get("vecs_nz", (int(nz.sum()), d))
-                _np.take(vecs, _np.nonzero(nz)[0], axis=0, out=sub)
-                vecs = sub
-                vn = _get("vnorm_nz", (vecs.shape[0],))
-                _np.take(vnorm, _np.nonzero(nz)[0], out=vn)
-                vnorm = vn
+            # ragged rows null the JVM dot, so they never flag
+            _kidx, ids, vecs, vnorm, _ragged = _decode_batch(
+                rb, get, d, "vec_id", "embedding")
             out_v, out_e, out_c = [], [], []
             for lo in range(0, len(ids), chunk):
                 hi = min(lo + chunk, len(ids))
                 c = hi - lo
-                acc = _get("acc", (c, n_ev))
-                tmp = _get("tmp", (c, n_ev))
+                acc = get("acc", (c, n_ev))
+                tmp = get("tmp", (c, n_ev))
                 acc[:] = 0.0
                 vc = vecs[lo:hi]
                 # dot fold: acc = ((0 + v0*e0) + v1*e1) + ... per pair
@@ -571,71 +454,184 @@ def embedding_decontaminate(
     )
 
 
-def _ordered_norms(mat) -> "object":
+def _ordered_norms(mat, out=None, tmp=None) -> "object":
     """L2 norms of each row of ``mat`` by the exact JVM/DuckDB fold
     sequence: acc starts at 0.0 and adds ``v_k * v_k`` left-to-right
     (``sqrt(aggregate(a, 0D, (acc, x) -> acc + x*x))``) — NOT
     ``np.linalg.norm``, whose pairwise summation is not
-    order-identical."""
+    order-identical.  ``out``/``tmp`` are optional preallocated
+    length-n float64 buffers."""
     import numpy as np
 
     n, d = mat.shape
-    acc = np.zeros(n, dtype=np.float64)
-    tmp = np.empty(n, dtype=np.float64)
+    acc = np.empty(n, dtype=np.float64) if out is None else out
+    tmp = np.empty(n, dtype=np.float64) if tmp is None else tmp
+    acc[:] = 0.0
     for k in range(d):
         np.multiply(mat[:, k], mat[:, k], out=tmp)
         np.add(acc, tmp, out=acc)
     return np.sqrt(acc, out=acc)
 
 
-def _collect_query_matrix(rows, id_field: str, emb_field: str,
-                          norm_field: Optional[str] = None):
-    """Driver-collected query rows -> ``(ids, qmat, qnorms, d)`` numpy
-    arrays for the vectorized scorer, or ``None`` when the set is
-    empty, ragged or null-carrying (the caller then falls back to the
-    exact JVM plan — the embedding_decontaminate convention).  Norms
-    come from ``norm_field`` when the frame already carries them,
-    otherwise from the bit-exact ordered fold; either way the
-    ``_with_norm`` keep rule applies (norm > 0 passes NaN too — Spark
-    orders NaN above every value)."""
+def _buffer_pool():
+    """``get(name, shape, dtype=float64)``: a view of a lazily
+    allocated numpy buffer, reused across record batches — the Arrow
+    scorers never allocate per-batch temporaries (allocating
+    element-wise ufuncs, not the arithmetic, dominate otherwise)."""
     import numpy as np
 
-    rows = sorted((r for r in rows if r[id_field] is not None),
-                  key=lambda r: r[id_field])
-    rows = [r for r in rows if r[emb_field] is not None]
-    dims = {len(r[emb_field]) for r in rows}
-    if not rows or len(dims) != 1 or any(
-            v is None for r in rows for v in r[emb_field]):
-        return None
-    d = dims.pop()
-    if d == 0:
-        return None
-    qmat = np.asarray([r[emb_field] for r in rows], dtype=np.float64)
-    ids = np.asarray([r[id_field] for r in rows], dtype=np.int64)
-    if norm_field is not None:
-        qnorms = np.asarray([r[norm_field] for r in rows],
-                            dtype=np.float64)
+    buf = {}
+
+    def get(name, shape, dtype=np.float64):
+        b = buf.get(name)
+        if (b is None or b.dtype != dtype or b.shape[0] < shape[0]
+                or b.shape[1:] != tuple(shape[1:])):
+            b = np.empty(shape, dtype=dtype)
+            buf[name] = b
+        return b[: shape[0]]
+
+    return get
+
+
+def _decode_batch(rb, get, d: int, id_col: str, emb_col: str,
+                  norm_col: Optional[str] = None):
+    """Decode one Arrow record batch of ``(id, list<float>)`` rows for
+    the exact-cosine scorers, applying the ``_with_norm`` rules in one
+    place.  Returns ``(kidx, ids, vecs, norms, ragged)``:
+
+    - ``kidx`` is the batch row index of each kept row; ``ids``
+      (int64), ``vecs`` (float64, ``len(kidx) x d``) and ``norms``
+      align with it;
+    - rows with a null id, a null list or a null element are dropped
+      (a null element nulls the JVM NORM fold, so ``_with_norm`` drops
+      the row; a row without an id cannot be reported);
+    - ``ragged`` masks the other batch rows whose length is not ``d``:
+      zip_with null-extends them, so their JVM dot is null;
+    - rows with norm 0 are dropped, a NaN norm is kept (Spark's
+      ``norm > 0`` passes NaN, which it orders above every value).
+
+    float32 widens to float64 BEFORE any arithmetic (the DOT/NORM
+    macros CAST each element to DOUBLE first; f32->f64 is exact, so
+    the folds match bit-for-bit) by one copy into a ``get`` buffer.
+    Norms are the :func:`_ordered_norms` fold, or read from
+    ``norm_col`` when the frame stores them."""
+    import numpy as np
+
+    n = rb.num_rows
+    id_arr = rb.column(rb.schema.get_field_index(id_col))
+    col = rb.column(rb.schema.get_field_index(emb_col))
+    valid = np.ones(n, dtype=bool)
+    if id_arr.null_count:
+        valid &= np.asarray(id_arr.is_valid())
+        id_arr = id_arr.fill_null(0)
+    if col.null_count:
+        valid &= np.asarray(col.is_valid())
+    offs = col.offsets.to_numpy(zero_copy_only=False).astype(
+        np.int64, copy=False)
+    vals = col.values
+    if vals.null_count:
+        # map each null child position back to its row
+        null_pos = np.nonzero(~np.asarray(vals.is_valid()))[0]
+        bad = np.unique(np.searchsorted(offs, null_pos, side="right") - 1)
+        valid[bad[(bad >= 0) & (bad < n)]] = False
+    lens = offs[1:] - offs[:-1]
+    ragged = valid & (lens != d)
+    kidx = np.nonzero(valid & (lens == d))[0]
+    nk = len(kidx)
+    ids = id_arr.to_numpy(zero_copy_only=False)[kidx].astype(
+        np.int64, copy=False)
+    flat = vals.to_numpy(zero_copy_only=False)
+    vecs = get("vecs", (nk, d))
+    if (nk == n and offs[0] == 0 and int(offs[-1]) == n * d
+            and flat.flags.c_contiguous):
+        np.copyto(vecs, flat[: n * d].reshape(n, d), casting="same_kind")
     else:
-        qnorms = _ordered_norms(qmat)
-    keep = (qnorms > 0) | np.isnan(qnorms)
-    if not keep.any():
-        return None
-    return (ids[keep], np.ascontiguousarray(qmat[keep]), qnorms[keep], d)
+        idx = offs[:-1][kidx][:, None] + np.arange(d, dtype=np.int64)
+        if flat.dtype == np.float64:
+            np.take(flat, idx, out=vecs)
+        else:
+            raw = get("raw", (nk, d), flat.dtype)
+            np.take(flat, idx, out=raw)
+            np.copyto(vecs, raw, casting="same_kind")
+    norms = get("norms", (nk,))
+    if norm_col is not None:
+        stored = rb.column(rb.schema.get_field_index(norm_col))
+        np.copyto(norms, stored.to_numpy(zero_copy_only=False)[kidx],
+                  casting="same_kind")
+    else:
+        _ordered_norms(vecs, out=norms, tmp=get("tmp1", (nk,)))
+    nz = (norms > 0) | np.isnan(norms)
+    if not nz.all():
+        zi = np.nonzero(nz)[0]
+        kidx, ids = kidx[zi], ids[zi]
+        vecs = np.take(vecs, zi, axis=0, out=get("vecs_nz", (len(zi), d)))
+        norms = np.take(norms, zi, out=get("norms_nz", (len(zi),)))
+    return kidx, ids, vecs, norms, ragged
+
+
+def _collect_query_matrix(rows, id_field: str, emb_field: str,
+                          norm_field: Optional[str] = None,
+                          what: str = "query"):
+    """Driver-collected query (or eval) rows -> id-ascending
+    ``(ids, qmat, qnorms)`` numpy arrays for the Arrow scorers, under
+    the ``_with_norm`` rules: rows with a null id, a null or empty
+    embedding, a null element or a zero norm are dropped; a NaN norm
+    is kept (Spark orders NaN above every value).  Norms come from
+    ``norm_field`` when the frame already carries them, otherwise from
+    the bit-exact ordered fold.  An empty set gives empty ``(0,)`` /
+    ``(0, 0)`` arrays, which score nothing.  A ragged set raises
+    ``ValueError``: the embeddings contract guarantees one dimension."""
+    import numpy as np
+
+    rows = sorted(
+        (r for r in rows
+         if r[id_field] is not None and r[emb_field]
+         and all(v is not None for v in r[emb_field])),
+        key=lambda r: r[id_field])
+    width = max((len(r[emb_field]) for r in rows), default=0)
+    # zero padding leaves the ordered norm fold exact (acc + 0*0 == acc)
+    mat = np.zeros((len(rows), width), dtype=np.float64)
+    for i, r in enumerate(rows):
+        mat[i, :len(r[emb_field])] = r[emb_field]
+    if norm_field is not None:
+        norms = np.asarray([r[norm_field] for r in rows], dtype=np.float64)
+    else:
+        norms = _ordered_norms(mat)
+    keep = (norms > 0) | np.isnan(norms)
+    rows = [r for r, kept in zip(rows, keep) if kept]
+    by_dim: dict[int, list] = {}
+    for r in rows:
+        by_dim.setdefault(len(r[emb_field]), []).append(r[id_field])
+    if len(by_dim) > 1:
+        raise ValueError(
+            f"ragged {what} embeddings: one dimension is required, got "
+            + "; ".join(f"dimension {dim} at {id_field} {ids[:5]}"
+                        for dim, ids in sorted(by_dim.items())))
+    d = next(iter(by_dim), 0)
+    ids = np.asarray([r[id_field] for r in rows], dtype=np.int64)
+    return ids, np.ascontiguousarray(mat[keep][:, :d]), norms[keep]
 
 
 def _probe_map_driver(cent_rows, q_ids, qmat, qnorms, nprobe: int):
-    """Driver-side twin of :func:`_probe_cells_for` over collected
-    centroid rows — same ordered-fold cosine, same (c_cos desc with
-    NaN above all, nulls below all, cell asc) probe ranking, so the
-    probe set per query is IDENTICAL to the JVM window's.  Returns
-    ``{q_id: set(cells)}``, or ``None`` when the centroid set is
-    degenerate (caller falls back to the JVM probe join)."""
+    """Each query's ``nprobe`` probe cells, ranked on the driver over
+    collected centroid rows exactly as the :func:`_probe_cells_for`
+    window ranks them — the same ordered-fold cosine, then c_cos desc
+    with NaN above all and nulls below all, then cell asc — so the
+    probe set per query is IDENTICAL.  Returns ``{q_id: set(cells)}``;
+    with no centroids every probe set is empty.  A centroid whose
+    length is not the query dimension raises ``ValueError``."""
     import numpy as np
 
     rows = [r for r in cent_rows if r["cell"] is not None]
-    if not rows:
-        return None
+    if not rows or not len(q_ids):
+        return {int(q): set() for q in q_ids}
     d = qmat.shape[1]
+    ragged = {r["cell"]: len(r["c_emb"]) for r in rows
+              if r["c_emb"] is not None and len(r["c_emb"]) != d}
+    if ragged:
+        raise ValueError(
+            f"ragged centroid embeddings: the queries have dimension {d}, "
+            f"got (cell: dimension) {dict(sorted(ragged.items())[:5])}")
     cells = np.asarray([r["cell"] for r in rows], dtype=np.int64)
     cnorm = np.asarray(
         [0.0 if r["c_norm"] is None else r["c_norm"] for r in rows],
@@ -644,10 +640,9 @@ def _probe_map_driver(cent_rows, q_ids, qmat, qnorms, nprobe: int):
     cnull = np.zeros(len(rows), dtype=bool)  # null c_cos rows
     for i, r in enumerate(rows):
         ce = r["c_emb"]
-        if (ce is None or len(ce) != d or r["c_norm"] is None
-                or any(v is None for v in ce)):
-            cnull[i] = True  # zip_with null-extension / null norm ->
-            # c_cos NULL, which desc-orders BELOW every value incl NaN
+        if ce is None or r["c_norm"] is None or any(v is None for v in ce):
+            cnull[i] = True  # null fold / null norm -> c_cos NULL,
+            # which desc-orders BELOW every value incl NaN
         else:
             cmat[i] = ce
     out: dict[int, set] = {}
@@ -674,8 +669,7 @@ def _pair_topk_scores(
     probe_map: Optional[dict] = None,
 ) -> DataFrame:
     """Vectorized (query x row) cosine scoring with per-batch partial
-    top-k — the r15 ``out=``-buffered ``mapInArrow`` pattern (guide
-    §4.2) applied to the shared DOT/NORM rerank epilogues.  Returns
+    top-k in an ``out=``-buffered ``mapInArrow`` scorer.  Returns
     ``(q_id, <id_col>, score)`` where, per query, the union over
     batches of each batch's top-``k`` is a SUPERSET of the global
     top-``k`` under the exact ``_topk`` order (score desc with NaN
@@ -686,14 +680,15 @@ def _pair_topk_scores(
     window on a k*batches-row frame instead of the full pair stream.
 
     Every double is bit-identical to the JVM ``DOT``/``NORM`` macros:
-    float32 widens to float64 before any arithmetic, dot and norm run
-    as d-step ``out=``-buffered ordered folds (acc from 0.0, strict
+    rows decode through :func:`_decode_batch`, the dot runs as a
+    d-step ``out=``-buffered ordered fold (acc from 0.0, strict
     left-to-right — never matmul, whose pairwise summation breaks
     round-9 parity), and the final divide is the same two IEEE ops.
     Self-pairs (row id == q_id) are excluded, matching every call
     site's join condition; ``norm_col`` reads a stored norm instead of
     re-folding; ``cell_col``+``probe_map`` restrict query q to rows
-    whose cell is in ``probe_map[q]`` (the IVF probe join)."""
+    whose cell is in ``probe_map[q]`` (the IVF probe join).  An empty
+    query set scores nothing."""
     import numpy as np
 
     nq = len(q_ids)
@@ -716,146 +711,43 @@ def _pair_topk_scores(
         import numpy as _np
         import pyarrow as _pa
 
-        buf = {}
-
-        def _get(name, shape, dtype=_np.float64):
-            b = buf.get(name)
-            if b is None or b.shape[0] < shape[0] or b.dtype != dtype:
-                b = _np.empty(shape, dtype=dtype)
-                buf[name] = b
-            return b[tuple(slice(0, s) for s in shape)]
-
+        get = _buffer_pool()
         for rb in batches:
-            n = rb.num_rows
-            if n == 0 or nq == 0:
+            if rb.num_rows == 0 or nq == 0:
                 continue
-            col = rb.column(rb.schema.get_field_index(emb_col))
-            ids_all = rb.column(rb.schema.get_field_index(id_col))
-            id_valid = _np.ones(n, dtype=bool)
-            if ids_all.null_count:
-                id_valid = _np.asarray(ids_all.is_valid())
-            ids_np = ids_all.to_numpy(zero_copy_only=False)
-            offs = col.offsets.to_numpy(zero_copy_only=False).astype(
-                _np.int64, copy=False)
-            lens = offs[1:] - offs[:-1]
-            vals = col.values
-            flat = vals.to_numpy(zero_copy_only=False)
-            emb_valid = _np.ones(n, dtype=bool)
-            if col.null_count:
-                emb_valid &= _np.asarray(col.is_valid())
-            if vals.null_count:
-                # a null ELEMENT nulls the JVM NORM fold -> norm null
-                # -> the row never passed _with_norm: exclude exactly
-                null_pos = _np.nonzero(~_np.asarray(vals.is_valid()))[0]
-                bad = _np.unique(
-                    _np.searchsorted(offs, null_pos, side="right") - 1)
-                emb_valid[bad[(bad >= 0) & (bad < n)]] = False
-            base_keep = id_valid & emb_valid
-            # ragged rows (len != d, valid elements): zip_with
-            # null-extends -> DOT null -> score null, ranked BELOW
-            # every non-null (desc NULLS LAST) — tracked separately
-            ragged = base_keep & (lens != d)
-            keep = base_keep & (lens == d)
-            norms_np = None
-            cells_np = None
-            if norm_col is not None:
-                norms_np = rb.column(
-                    rb.schema.get_field_index(norm_col)).to_numpy(
-                        zero_copy_only=False)
+            kidx, ids, vecs, vnorm, ragged = _decode_batch(
+                rb, get, d, id_col, emb_col, norm_col)
+            # ragged rows score null, ranked BELOW every non-null (desc
+            # NULLS LAST): up to k smallest-id ones per (batch, query)
+            # can only enter the global top-k when fewer than k
+            # non-null candidates exist, and then the window's id-asc
+            # tie-break picks the smallest ids
+            ridx = _np.nonzero(ragged)[0]
+            rids = rb.column(rb.schema.get_field_index(id_col)).take(
+                ridx).to_numpy(zero_copy_only=False).astype(_np.int64)
             if cell_col is not None:
-                cells_np = rb.column(
+                cells = rb.column(
                     rb.schema.get_field_index(cell_col)).to_numpy(
                         zero_copy_only=False)
-            out_q, out_v, out_s, out_m = [], [], [], []
-
-            def _emit_nulls(q_idx):
-                # up to k smallest-id ragged rows per (batch, query):
-                # they can only enter the global top-k when fewer than
-                # k non-null candidates exist, and then the window's
-                # id-asc tie-break picks the smallest ids
-                if not ragged.any():
-                    return
-                rsel = ragged & (ids_np != q_ids[q_idx])
-                if cells_np is not None:
-                    rsel &= _np.isin(cells_np, cells_per_q[q_idx])
-                ridx = _np.nonzero(rsel)[0]
-                if not len(ridx):
-                    return
-                rids = _np.sort(ids_np[ridx].astype(_np.int64))[:thr_k]
-                out_q.append(_np.full(len(rids), q_ids[q_idx]))
-                out_v.append(rids)
-                out_s.append(_np.zeros(len(rids)))
-                out_m.append(_np.ones(len(rids), dtype=bool))
-
-            if not keep.any():
-                for j in range(nq):
-                    _emit_nulls(j)
-                if out_q:
-                    yield _make_batch(_pa, _np, out_q, out_v, out_s,
-                                      out_m, id_col)
-                continue
-            kidx = _np.nonzero(keep)[0]
-            ids = ids_np[kidx].astype(_np.int64, copy=False)
-            starts = offs[:-1][kidx]
+                kcells, rcells = cells[kidx], cells[ridx]
             nk = len(kidx)
-            vecs = _get("vecs", (nk, d))
-            if (nk == n and offs[0] == 0 and int(offs[-1]) == n * d
-                    and flat.flags.c_contiguous):
-                _np.copyto(vecs, flat[: n * d].reshape(n, d),
-                           casting="same_kind")
-            else:
-                idx = starts[:, None] + _np.arange(d, dtype=_np.int64)
-                if flat.dtype == _np.float64:
-                    _np.take(flat, idx, out=vecs)
-                else:
-                    raw = _get("raw", (nk, d), dtype=flat.dtype)
-                    _np.take(flat, idx, out=raw)
-                    _np.copyto(vecs, raw, casting="same_kind")
-            tmp1 = _get("tmp1", (nk,))
-            vnorm = _get("vnorm", (nk,))
-            if norms_np is not None:
-                _np.copyto(vnorm, norms_np[kidx], casting="same_kind")
-            else:
-                vnorm[:] = 0.0
+            if nk:
+                acc = get("acc", (nk, nq))
+                tmp = get("tmp", (nk, nq))
+                acc[:] = 0.0
                 for t in range(d):
-                    _np.multiply(vecs[:, t], vecs[:, t], out=tmp1)
-                    _np.add(vnorm, tmp1, out=vnorm)
-                _np.sqrt(vnorm, out=vnorm)
-                nz = (vnorm > 0) | _np.isnan(vnorm)
-                if not nz.any():
-                    for j in range(nq):
-                        _emit_nulls(j)
-                    if out_q:
-                        yield _make_batch(_pa, _np, out_q, out_v,
-                                          out_s, out_m, id_col)
-                    continue
-                if not nz.all():
-                    zi = _np.nonzero(nz)[0]
-                    ids = ids[zi]
-                    sub = _get("vecs_nz", (len(zi), d))
-                    _np.take(vecs, zi, axis=0, out=sub)
-                    vecs = sub
-                    vn = _get("vnorm_nz", (len(zi),))
-                    _np.take(vnorm, zi, out=vn)
-                    vnorm = vn
-                    if cells_np is not None:
-                        kidx = kidx[zi]
-                    nk = len(zi)
-            row_cells = (cells_np[kidx].astype(_np.int64, copy=False)
-                         if cells_np is not None else None)
-            acc = _get("acc", (nk, nq))
-            tmp = _get("tmp", (nk, nq))
-            acc[:] = 0.0
-            for t in range(d):
-                _np.multiply.outer(vecs[:, t], qmat[:, t], out=tmp)
-                _np.add(acc, tmp, out=acc)
-            _np.multiply.outer(vnorm, qnorms, out=tmp)
-            with _np.errstate(divide="ignore", invalid="ignore"):
-                _np.divide(acc, tmp, out=acc)
+                    _np.multiply.outer(vecs[:, t], qmat[:, t], out=tmp)
+                    _np.add(acc, tmp, out=acc)
+                _np.multiply.outer(vnorm, qnorms, out=tmp)
+                with _np.errstate(divide="ignore", invalid="ignore"):
+                    _np.divide(acc, tmp, out=acc)
+            out_q, out_v, out_s, out_m = [], [], [], []
             for j in range(nq):
                 sel = ids != q_ids[j]
-                if row_cells is not None:
-                    sel &= _np.isin(row_cells, cells_per_q[j])
+                rsel = rids != q_ids[j]
+                if cell_col is not None:
+                    sel &= _np.isin(kcells, cells_per_q[j])
+                    rsel &= _np.isin(rcells, cells_per_q[j])
                 cidx = _np.nonzero(sel)[0]
                 if len(cidx):
                     s = acc[cidx, j]
@@ -868,10 +760,15 @@ def _pair_topk_scores(
                     out_v.append(ids[cidx])
                     out_s.append(s.copy())
                     out_m.append(_np.zeros(len(cidx), dtype=bool))
-                _emit_nulls(j)
+                null_ids = _np.sort(rids[rsel])[:thr_k]
+                if len(null_ids):
+                    out_q.append(_np.full(len(null_ids), q_ids[j]))
+                    out_v.append(null_ids)
+                    out_s.append(_np.zeros(len(null_ids)))
+                    out_m.append(_np.ones(len(null_ids), dtype=bool))
             if out_q:
-                yield _make_batch(_pa, _np, out_q, out_v, out_s,
-                                  out_m, id_col)
+                yield _make_batch(_pa, _np, out_q, out_v, out_s, out_m,
+                                  id_col)
 
     return df.select(*in_cols).mapInArrow(
         _score, f"q_id long, {id_col} long, score double")
@@ -889,39 +786,6 @@ def _make_batch(_pa, _np, out_q, out_v, out_s, out_m, id_col):
             _pa.array(scores, type=_pa.float64(), mask=mask),
         ],
         names=["q_id", id_col, "score"],
-    )
-
-
-def _embedding_decontaminate_sql(
-    spark: SparkSession, sf_dir: str, threshold: float,
-    eval_mod: int, eval_rem: int,
-) -> DataFrame:
-    """The exact pure-JVM formulation of
-    :func:`embedding_decontaminate` — the implementation (the r15
-    vectorized variant was reverted; see the caller's docstring)."""
-    emb = _with_norm(load(spark, sf_dir, "embeddings"))
-    ev = (
-        emb.where(F.pmod(F.col("vec_id"), F.lit(eval_mod)) == eval_rem)
-        .select(F.col("vec_id").alias("eval_id"),
-                F.col("embedding").alias("eval_emb"),
-                F.col("norm").alias("eval_norm"))
-    )
-    dot = DOT.format(a="embedding", b="eval_emb")
-    scored = (
-        emb.join(F.broadcast(ev))   # corpus x broadcast eval
-        .withColumn("cosine",
-                    F.expr(dot) / (F.col("norm") * F.col("eval_norm")))
-        .where(F.col("cosine") >= threshold)
-    )
-    from pyspark.sql.window import Window
-
-    best = Window.partitionBy("vec_id").orderBy(
-        F.desc("cosine"), F.asc("eval_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(best))
-        .where(F.col("rnk") == 1)
-        .select("vec_id", F.col("eval_id").alias("matched_eval_id"),
-                F.round(F.col("cosine").cast("double"), 9).alias("cosine"))
     )
 
 
@@ -1245,42 +1109,22 @@ def ivf_ann_topk(
     nprobe = _resolve_nprobe(nprobe, n_cells)
     cents = ivf_train_centroids(spark, sf_dir, n_cells)
     assigned = ivf_assignments(spark, sf_dir, n_cells)
-    # r16 (guide §4.2): the probe join evaluated the interpreted DOT
-    # fold per (candidate, query) pair — the probed population is the
-    # corpus-proportional term.  Queries and centroids are bounded
-    # (n_queries rows; ~sqrt(n) checkpointed centroid rows — the
-    # broadcasts the JVM plan made), so collect both, rank probes
-    # driver-side (bit-identical to _probe_cells — pinned) and score
-    # in the shared out=-buffered mapInArrow scorer with per-batch
-    # partial top-k; the stored index norm is consumed as-is.
-    # Degenerate query/centroid sets fall back to the exact JVM join.
-    q = _collect_query_matrix(
+    # queries and centroids are bounded (n_queries rows; ~sqrt(n)
+    # checkpointed centroid rows), so both collect: probes rank on the
+    # driver (bit-identical to the JVM probe window) and the probed
+    # rows score in the shared mapInArrow scorer with per-batch
+    # partial top-k, consuming the stored index norm as-is
+    q_ids, qmat, qnorms = _collect_query_matrix(
         assigned.where(F.col("vec_id") < n_queries)
-        .select(F.col("vec_id").alias("q_id"),
-                F.col("embedding").alias("q_emb"),
-                F.col("norm").alias("q_norm")).collect(),
-        "q_id", "q_emb", "q_norm")
-    probe_map = None
-    if q is not None:
-        probe_map = _probe_map_driver(
-            _collected_centroids(spark, sf_dir, n_cells, cents),
-            *q[:3], nprobe=nprobe)
-    if q is None or probe_map is None:
-        probes = _probe_cells(assigned, cents, n_queries, nprobe)
-        dot = DOT.format(a="q_emb", b="embedding")
-        scored = (
-            assigned.join(F.broadcast(probes), "cell")
-            .where(F.col("vec_id") != F.col("q_id"))
-            .withColumn("cosine",
-                        F.expr(dot) / (F.col("norm") * F.col("q_norm")))
-        )
-        return _topk(scored, k)
-    q_ids, qmat, qnorms, _d = q
+        .select("vec_id", "embedding", "norm").collect(),
+        "vec_id", "embedding", "norm")
+    probe_map = _probe_map_driver(
+        _collected_centroids(spark, sf_dir, n_cells, cents),
+        q_ids, qmat, qnorms, nprobe=nprobe)
     probed_union = sorted(set().union(*probe_map.values()))
     scored = _pair_topk_scores(
         # codegen'd probe pre-filter BEFORE the Arrow boundary: only
-        # the probed population ships to Python (the same rows the
-        # JVM probe join scored), not the whole corpus
+        # the probed population ships to Python, not the whole corpus
         assigned.select("vec_id", "embedding", "norm", "cell")
         .where(F.col("cell").isin(probed_union)),
         q_ids, qmat, qnorms, k=k, norm_col="norm",
@@ -1613,12 +1457,10 @@ def ivf_pq_topk(
     the probed cells, shuffle only at the per-query shortlist window.
 
     Exactness anchor (unit-tested + entry guard): ``rerank`` >= the
-    probed population reproduces ``ivf_ann_topk`` bit-for-bit — the
-    probe set comes from the shared ``_probe_cells`` and the rerank
-    stage re-scores exactly, so PQ approximation error only affects
-    WHICH candidates make the shortlist, never their final scores."""
-    from pyspark.sql.window import Window
-
+    probed population reproduces ``ivf_ann_topk`` bit-for-bit — both
+    rank probes with ``_probe_map_driver`` and the rerank stage
+    re-scores exactly, so PQ approximation error only affects WHICH
+    candidates make the shortlist, never their final scores."""
     rerank = max(rerank, k)
     n_cells = _resolve_cells(spark, sf_dir, n_cells)
     nprobe = _resolve_nprobe(nprobe, n_cells)
@@ -1650,128 +1492,86 @@ def _pq_query_topk(
     (vec_id, cell, codes), ``vectors`` (vec_id, embedding, norm)."""
     from pyspark.sql.window import Window
 
-    rerank = max(rerank, k)
     import numpy as np
 
-    qrows = queries.collect()   # bounded by n_queries (feeds the LUTs)
+    rerank = max(rerank, k)
+    q_ids, qmat, qnorms = _collect_query_matrix(
+        queries.collect(), "q_id", "q_emb", "q_norm",
+    )  # bounded by n_queries (feeds the LUTs)
+    mm, dsub = codebooks.shape[0], codebooks.shape[2]
     luts = {}
-    for r in qrows:
-        q = np.asarray(r["q_emb"], dtype=np.float64) / r["q_norm"]
-        mm, dsub = codebooks.shape[0], codebooks.shape[2]
-        luts[r["q_id"]] = np.stack([
+    for qid, qv, qn in zip(q_ids, qmat, qnorms):
+        q = qv / qn
+        luts[int(qid)] = np.stack([
             codebooks[j] @ q[j * dsub:(j + 1) * dsub] for j in range(mm)
         ])  # (m, k): lut[j, c] = q_sub_j . codeword_jc
 
-    # r16 (guide §2.3/§4): probes rank DRIVER-SIDE from the (tiny)
-    # centroid frame — bit-identical to _probe_cells_for, the pinned
-    # _probe_map_driver — and the ADC scorer reads each code row ONCE
-    # (filtered to the probed union by a codegen'd In-set) scoring it
-    # against every query whose probe set holds its cell, with
-    # per-batch partial top-``rerank``.  The old shape built a
-    # crossJoin+window probe subquery per call and EXPANDED codes x
-    # matching queries through a broadcast join before the Python
-    # boundary — n_queries times the Arrow bytes for the same pair
-    # set.  Degenerate query/centroid sets keep the JVM probe join.
-    qm = _collect_query_matrix(qrows, "q_id", "q_emb", "q_norm")
-    probe_map = None
-    if qm is not None:
-        probe_map = _probe_map_driver(cents.collect(), *qm[:3],
-                                      nprobe=nprobe)
+    # probes rank on the driver from the (tiny) centroid frame —
+    # bit-identical to the JVM probe window — and the ADC
+    # scorer reads each code row ONCE (filtered to the probed union by
+    # a codegen'd In-set), scoring it against every query whose probe
+    # set holds its cell, with per-batch partial top-``rerank``
+    probe_map = _probe_map_driver(cents.collect(), q_ids, qmat, qnorms,
+                                  nprobe=nprobe)
     w = Window.partitionBy("q_id").orderBy(F.desc("ascore"), F.asc("vec_id"))
-    if probe_map is not None:
-        pm = {int(qid): np.asarray(sorted(cs), dtype=np.int64)
-              for qid, cs in probe_map.items()}
-        qid_list = sorted(pm)
-        probed_union = sorted(set().union(*probe_map.values()))
+    pm = {qid: np.asarray(sorted(cs), dtype=np.int64)
+          for qid, cs in probe_map.items()}
+    qid_list = sorted(pm)
+    probed_union = sorted(set().union(*probe_map.values()))
 
-        def _adc_rows(batches):
-            import numpy as _np
-            import pandas as _pd
+    def _adc_rows(batches):
+        import numpy as _np
+        import pandas as _pd
 
-            cols = None
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                codes_mat = _np.stack(
-                    pdf["codes"].to_numpy()).astype(_np.int64)
-                if cols is None or len(cols) != codes_mat.shape[1]:
-                    cols = _np.arange(codes_mat.shape[1])
-                cells = pdf["cell"].to_numpy()
-                vv = pdf["vec_id"]
-                vids = vv.to_numpy()
-                notna = vv.notna().to_numpy()  # NULL != q is NULL in
-                # the JVM join: null-id rows never pair
-                out_q, out_v, out_s = [], [], []
-                for qid in qid_list:
-                    sel = (_np.isin(cells, pm[qid]) & notna
-                           & (vids != qid))
-                    if not sel.any():
-                        continue
-                    sc = luts[qid][cols[None, :],
-                                   codes_mat[sel]].sum(axis=1)
-                    v = vids[sel].astype(_np.int64, copy=False)
-                    if len(sc) > rerank:
-                        # partial top-rerank under the exact window
-                        # order (ascore desc with NaN above all,
-                        # vec_id asc) — union over batches is a
-                        # superset of the global top-rerank
-                        key1 = _np.where(_np.isnan(sc), _np.inf, sc)
-                        order = _np.lexsort((v, -key1))[:rerank]
-                        v, sc = v[order], sc[order]
-                    out_q.append(_np.full(len(v), qid, dtype=_np.int64))
-                    out_v.append(v)
-                    out_s.append(sc)
-                if out_q:
-                    yield _pd.DataFrame({
-                        "q_id": _np.concatenate(out_q),
-                        "vec_id": _np.concatenate(out_v),
-                        "ascore": _np.concatenate(out_s),
-                    })
-
-        shortlist = (
-            codes_with_cell
-            .where(F.col("cell").isin(probed_union))
-            .select("vec_id", "cell", "codes")
-            .mapInPandas(_adc_rows, "q_id long, vec_id long, ascore double")
-            .withColumn("r", F.row_number().over(w))
-            .where(F.col("r") <= rerank)
-            .select("q_id", "vec_id")
-        )
-    else:
-        probes = _probe_cells_for(queries, cents, nprobe)
-
-        def _adc(batches):
-            import numpy as _np
-            import pandas as _pd
-
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                codes_mat = _np.stack(
-                    pdf["codes"].to_numpy()).astype(_np.int64)
-                qids = pdf["q_id"].to_numpy()
-                score = _np.empty(len(pdf))
+        cols = None
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            codes_mat = _np.stack(
+                pdf["codes"].to_numpy()).astype(_np.int64)
+            if cols is None or len(cols) != codes_mat.shape[1]:
                 cols = _np.arange(codes_mat.shape[1])
-                for q in _np.unique(qids):
-                    mask = qids == q
-                    # m lookups per candidate: lut[j, code_j] over j
-                    score[mask] = luts[q][cols[None, :],
-                                          codes_mat[mask]].sum(axis=1)
+            cells = pdf["cell"].to_numpy()
+            vv = pdf["vec_id"]
+            vids = vv.to_numpy()
+            notna = vv.notna().to_numpy()  # NULL != q is NULL in
+            # the JVM join: null-id rows never pair
+            out_q, out_v, out_s = [], [], []
+            for qid in qid_list:
+                sel = (_np.isin(cells, pm[qid]) & notna
+                       & (vids != qid))
+                if not sel.any():
+                    continue
+                sc = luts[qid][cols[None, :],
+                               codes_mat[sel]].sum(axis=1)
+                v = vids[sel].astype(_np.int64, copy=False)
+                if len(sc) > rerank:
+                    # partial top-rerank under the exact window
+                    # order (ascore desc with NaN above all,
+                    # vec_id asc) — union over batches is a
+                    # superset of the global top-rerank
+                    key1 = _np.where(_np.isnan(sc), _np.inf, sc)
+                    order = _np.lexsort((v, -key1))[:rerank]
+                    v, sc = v[order], sc[order]
+                out_q.append(_np.full(len(v), qid, dtype=_np.int64))
+                out_v.append(v)
+                out_s.append(sc)
+            if out_q:
                 yield _pd.DataFrame({
-                    "q_id": pdf["q_id"], "vec_id": pdf["vec_id"],
-                    "ascore": score,
+                    "q_id": _np.concatenate(out_q),
+                    "vec_id": _np.concatenate(out_v),
+                    "ascore": _np.concatenate(out_s),
                 })
 
-        shortlist = (
-            codes_with_cell
-            .join(F.broadcast(probes.select("q_id", "cell")), "cell")
-            .where(F.col("vec_id") != F.col("q_id"))
-            .select("q_id", "vec_id", "codes")
-            .mapInPandas(_adc, "q_id long, vec_id long, ascore double")
-            .withColumn("r", F.row_number().over(w))
-            .where(F.col("r") <= rerank)
-            .select("q_id", "vec_id")
-        )
+    shortlist = (
+        codes_with_cell
+        .where(F.col("cell").isin(probed_union))
+        .select("vec_id", "cell", "codes")
+        .mapInPandas(_adc_rows, "q_id long, vec_id long, ascore double")
+        .withColumn("r", F.row_number().over(w))
+        .where(F.col("r") <= rerank)
+        .select("q_id", "vec_id")
+    )
     dot = DOT.format(a="q_emb", b="embedding")
     scored = (
         vectors

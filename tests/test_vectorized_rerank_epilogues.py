@@ -1,17 +1,20 @@
-"""Pins for the r16 vectorized cosine/IVF rerank DOT epilogues.
+"""Pins for the vectorized cosine/IVF rerank DOT epilogues.
 
 ``cosine_topk``, ``ivf_ann_topk`` and ``ivf_quantized_topk``'s stage-1
-scoring moved from per-pair interpreted JVM DOT folds to the shared
-Arrow-batched scorer ``similarity._pair_topk_scores`` (``mapInArrow``,
-preallocated ``out=`` buffers, per-batch partial top-k).  These tests
-pin the equivalence contract: the vectorized path must match the
-retained exact JVM formulation bit-for-bit — including the degenerate
-inputs the generation contract normally excludes (zero-norm vectors,
-NaN elements, ragged rows) — and degenerate QUERY sets must fall back
-to the JVM plan rather than mis-vectorize.
+scoring run in the shared Arrow-batched scorer
+``similarity._pair_topk_scores`` (``mapInArrow``, preallocated ``out=``
+buffers, per-batch partial top-k).  These tests pin the equivalence
+contract: the vectorized path must match the exact JVM formulation
+(kept here as a test-local reference) bit-for-bit — including the
+degenerate inputs the generation contract normally excludes
+(zero-norm vectors, NaN elements, ragged rows).  Degenerate QUERY
+sets are handled when the queries collect: an empty set returns an
+empty frame, a ragged one raises.
 """
 
 import math
+
+import pytest
 
 from dagster_delta_spark.operators import similarity
 
@@ -45,6 +48,33 @@ def _assert_bit_identical(new, old):
     assert old.exceptAll(new).count() == 0
 
 
+def _cosine_topk_jvm(spark, sf_dir, k=5, n_queries=5):
+    """The exact pure-JVM formulation of ``cosine_topk``: a broadcast
+    query join scored by the interpreted DOT/NORM folds."""
+    from pyspark.sql import functions as F
+
+    from dagster_delta_spark.operators.relational import load
+    from dagster_delta_spark.operators.similarity import (
+        DOT, _topk, _with_norm)
+
+    emb = _with_norm(load(spark, sf_dir, "embeddings"))
+    queries = emb.where(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("norm").alias("q_norm"),
+    )
+    dot = DOT.format(a="q_emb", b="embedding")
+    scored = (
+        emb.join(F.broadcast(queries), F.col("vec_id") != F.col("q_id"))
+        .withColumn("cosine", F.expr(dot) / (F.col("norm") * F.col("q_norm")))
+    )
+    return _topk(scored, k)
+
+
+def _schema(df):
+    return [(f.name, f.dataType) for f in df.schema]
+
+
 def test_cosine_topk_matches_jvm_on_degenerates(spark, tmp_path):
     d = 6
     rows = [
@@ -65,7 +95,7 @@ def test_cosine_topk_matches_jvm_on_degenerates(spark, tmp_path):
     ]
     sf_dir = _write_embeddings(spark, tmp_path, rows)
     new = similarity.cosine_topk(spark, sf_dir, k=5, n_queries=5)
-    old = similarity._cosine_topk_sql(spark, sf_dir, k=5, n_queries=5)
+    old = _cosine_topk_jvm(spark, sf_dir, k=5, n_queries=5)
     _assert_bit_identical(new, old)
     got = _rows_set(new)
     qids = {q for q, *_ in got}
@@ -81,25 +111,56 @@ def test_cosine_topk_matches_jvm_on_degenerates(spark, tmp_path):
 
 def test_cosine_topk_matches_jvm_on_testdata(spark):
     new = similarity.cosine_topk(spark, "/root/testdata/sf0.001")
-    old = similarity._cosine_topk_sql(spark, "/root/testdata/sf0.001")
+    old = _cosine_topk_jvm(spark, "/root/testdata/sf0.001")
     assert new.count() > 0
     _assert_bit_identical(new, old)
 
 
-def test_cosine_topk_empty_queries_falls_back(
-        spark, tmp_path, monkeypatch):
+def test_cosine_topk_empty_queries_return_empty(spark, tmp_path):
     rows = [(10, [1.0, 0.5]), (11, [0.5, 1.0])]  # no vec_id < 5
     sf_dir = _write_embeddings(spark, tmp_path, rows)
-    called = {}
-    orig = similarity._cosine_topk_sql
+    new = similarity.cosine_topk(spark, sf_dir)
+    old = _cosine_topk_jvm(spark, sf_dir)
+    assert new.count() == 0 and old.count() == 0
+    assert _schema(new) == _schema(old)
 
-    def spy(*a, **k):
-        called["hit"] = True
-        return orig(*a, **k)
 
-    monkeypatch.setattr(similarity, "_cosine_topk_sql", spy)
-    assert similarity.cosine_topk(spark, sf_dir).count() == 0
-    assert called.get("hit"), "empty query set must take the JVM plan"
+def test_cosine_topk_ragged_queries_raise(spark, tmp_path):
+    rows = [(0, [1.0, 0.5, -0.25]), (1, [1.0, 0.5]),
+            (10, [1.0, 1.0, 1.0])]
+    sf_dir = _write_embeddings(spark, tmp_path, rows)
+    with pytest.raises(ValueError, match=r"ragged query embeddings.*"
+                       r"dimension 2 at vec_id \[1\].*"
+                       r"dimension 3 at vec_id \[0\]"):
+        similarity.cosine_topk(spark, sf_dir)
+
+
+def test_ivf_topk_without_queries_return_empty(spark):
+    from pyspark.sql.types import DoubleType, IntegerType, LongType
+
+    sf = "/root/testdata/sf0.001"
+    for empty in (similarity.ivf_ann_topk(spark, sf, n_queries=0),
+                  similarity.ivf_pq_topk(spark, sf, n_queries=0)):
+        assert empty.count() == 0
+        assert _schema(empty) == [
+            ("q_id", LongType()), ("vec_id", LongType()),
+            ("cosine", DoubleType()), ("rank", IntegerType())]
+
+
+def test_probe_map_driver_degenerate_centroids():
+    """No centroids: every query probes nothing.  A centroid of another
+    dimension than the queries raises, naming its cell."""
+    import numpy as np
+
+    q_ids = np.asarray([0, 1], dtype=np.int64)
+    qmat = np.ones((2, 3))
+    qnorms = np.sqrt(np.full(2, 3.0))
+    assert similarity._probe_map_driver(
+        [], q_ids, qmat, qnorms, nprobe=2) == {0: set(), 1: set()}
+    cents = [{"cell": 1, "c_emb": [1.0, 0.0, 0.0], "c_norm": 1.0},
+             {"cell": 2, "c_emb": [1.0, 0.0], "c_norm": 1.0}]
+    with pytest.raises(ValueError, match=r"ragged centroid.*\{2: 2\}"):
+        similarity._probe_map_driver(cents, q_ids, qmat, qnorms, nprobe=2)
 
 
 def test_cosine_topk_plan_is_map_side(spark):
@@ -115,9 +176,9 @@ def test_cosine_topk_plan_is_map_side(spark):
 
 def test_ivf_epilogues_match_jvm_formulations(spark):
     """ivf_ann_topk and ivf_quantized_topk run the vectorized scorer;
-    both must reproduce the retained JVM join formulations
-    bit-for-bit on real data (the probe sets come from the shared
-    _probe_cells either way)."""
+    both must reproduce the JVM join formulations bit-for-bit on real
+    data, with probe sets from the _probe_cells window (ivf_ann_topk
+    ranks its probes on the driver: this pins the two identical)."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
