@@ -1,3 +1,4 @@
+import os
 import sys
 
 import pytest
@@ -15,6 +16,10 @@ def spark():
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "6g")
+        # keeps each Python task from re-reading the spark-core jar; see
+        # tests/spark_worker_daemon.py
+        .config("spark.python.daemon.module", "spark_worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", os.path.dirname(__file__))
         .appName("dds-tests")
         .getOrCreate()
     )
