@@ -4501,8 +4501,8 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def o_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-file BLOOM FILTER indexes (``dds.bloomFilterColumns``;
-    table.py:_make_stats_harvester builds the bitmaps at stats-harvest
-    time, _file_matches probes them — the Delta/Databricks
+    table.py:_footer_stats builds the bitmaps at stats-harvest time,
+    _file_matches probes them — the Delta/Databricks
     bloom-filter-index analogue): a point predicate on a
     high-cardinality key skips files whose min/max range cannot prune.
 

@@ -98,28 +98,24 @@ def bipartite_components(
     # round shuffles from the actual membership row count (one cheap
     # count on the checkpointed frame), never RAISING above the
     # session setting — at production scale the session value wins
-    # unchanged.  Restored in ``finally``.
-    spark = membership.sparkSession
-    sess_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    # unchanged.  The size rides in the plan (explicit repartitions),
+    # never in session conf, which other threads plan with.
     try:
-        cur_parts = int(sess_parts)
+        cur_parts = int(membership.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):
         cur_parts = None
     loop_parts = None
     if cur_parts is not None and cur_parts > 1:
         n_member = member.count()
-        loop_parts = min(cur_parts, max(1, -(-n_member // 200_000)))
+        # at least 2: a 1-partition repartition plans as SinglePartition,
+        # which Spark re-shuffles at the session count under a join
+        loop_parts = min(cur_parts, max(2, -(-n_member // 200_000)))
         if loop_parts >= cur_parts:
             loop_parts = None
-    if loop_parts is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
-        labels, converged = _propagate_rounds(
-            member, labels, node_col, keys, rounds, iterations,
-            integral_ids, prev_sum, converged)
-    finally:
-        if loop_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", sess_parts)
+    labels, converged = _propagate_rounds(
+        member, labels, node_col, keys, rounds, iterations,
+        integral_ids, prev_sum, converged, loop_parts)
     if not converged:
         raise ComponentConvergenceError(
             f"label propagation did not converge within "
@@ -139,10 +135,31 @@ def _propagate_rounds(
     integral_ids: bool,
     prev_sum,
     converged: bool,
+    loop_parts: Optional[int] = None,
 ):
-    """The propagation loop body of :func:`bipartite_components` —
-    split out so the adaptive shuffle-partition override wraps exactly
-    the round shuffles."""
+    """The propagation loop body of :func:`bipartite_components`.
+    ``loop_parts`` (None = the session's count) sizes the round: every
+    keyed aggregation and both sides of every join get an explicit
+    hash repartition on their keys, each replacing the Exchange Spark
+    would plan there, so a round plans as many Exchanges as at the
+    session count.  The aggregations lose their map-side partial
+    combine; only memberships under 200,000 rows a session partition
+    take this path."""
+
+    def by(df: DataFrame, *cols: str) -> DataFrame:
+        return df.repartition(loop_parts, *cols) if loop_parts else df
+
+    def labels_by_node(df: DataFrame) -> DataFrame:
+        # a checkpoint forgets its partitioning, and Spark sizes a join
+        # whose sides are both shuffles by the session, so the labels
+        # side ends in a no-op (one row per node) aggregate that
+        # carries loop_parts into the join
+        if not loop_parts:
+            return df
+        return by(df, node_col).groupBy(node_col).agg(
+            F.min("lbl").alias("lbl"))
+
+    member_by_key = by(member, *keys)
     for rnd in range(rounds):
         prev_labels = labels
         if rnd == 0:
@@ -152,17 +169,18 @@ def _propagate_rounds(
             # off the membership.  Identical result, one less
             # join+Exchange in the first (often only) hot round.
             key_min = (
-                member.groupBy(*keys)
+                member_by_key.groupBy(*keys)
                 .agg(F.min(F.col(node_col)).alias("kmin"))
             )
         else:
             key_min = (
-                member.join(labels, node_col)
+                by(by(member, node_col).join(labels_by_node(labels),
+                                             node_col), *keys)
                 .groupBy(*keys)
                 .agg(F.min("lbl").alias("kmin"))
             )
         labels = (
-            member.join(key_min, keys)
+            by(member_by_key.join(key_min, keys), node_col)
             .groupBy(node_col)
             .agg(F.min("kmin").alias("lbl"))
             # cut lineage each round: the plan otherwise deepens by
@@ -188,8 +206,8 @@ def _propagate_rounds(
                 prev_sum = cur
             else:
                 changed = (
-                    labels.alias("n")
-                    .join(prev_labels.alias("p"), node_col)
+                    labels_by_node(labels).alias("n")
+                    .join(by(prev_labels, node_col).alias("p"), node_col)
                     .where(F.col("n.lbl") != F.col("p.lbl"))
                     .limit(1)
                     .count()

@@ -24,15 +24,17 @@ Scale design (100 TB):
 
 from __future__ import annotations
 
+import base64
 import dataclasses
 import hashlib
 import json
+import math
 import os
 import re
 import shutil
 import time
 import uuid
-from datetime import date, datetime, timedelta
+from datetime import date, datetime, timedelta, timezone
 from functools import lru_cache
 from decimal import Decimal
 from typing import Any, Callable, Iterable, Optional, Sequence
@@ -380,10 +382,10 @@ def _bloom_columns(configuration: Optional[dict[str, str]]) -> dict[str, dict]:
 
 
 def _bloom_render(value: Any) -> Optional[str]:
-    """Canonical string a value hashes under — MUST stay in lockstep
-    with the harvester's nested twin in ``_make_stats_harvester``
-    (nested there so cloudpickle ships it by value; parity is pinned
-    by tests/test_bloom_skipping.py)."""
+    """Canonical string a value hashes under, or None for a value shape
+    blooms do not index.  The one renderer of both sides: the harvest
+    (``_footer_stats``) sets bits for it and the pruning probe
+    (``_bloom_maybe_contains``) tests them."""
     if isinstance(value, bool):  # bool is an int subclass; not indexed
         return None
     if isinstance(value, int):
@@ -393,26 +395,28 @@ def _bloom_render(value: Any) -> Optional[str]:
     return None
 
 
-@lru_cache(maxsize=4096)
-def _bloom_digest(canonical: str) -> tuple[int, int]:
-    """(h1, h2) double-hashing seeds of a canonical probe value —
-    memoized because the digest depends only on the LITERAL, while the
-    driver pruning loop probes it against every candidate file (10k
-    files x an in-list would otherwise md5 the same values 10k
-    times)."""
-    import hashlib
-
+def _bloom_hash(canonical: str) -> tuple[int, int]:
+    """(h1, h2) double-hashing seeds of a canonical value.  Uncached:
+    the harvest hashes every distinct value of a file once, and must
+    not evict the probe literals ``_bloom_digest`` memoizes."""
     d = hashlib.md5(canonical.encode("utf-8")).digest()
     # odd h2: full-cycle stride
     return int.from_bytes(d[:8], "big"), int.from_bytes(d[8:], "big") | 1
+
+
+@lru_cache(maxsize=4096)
+def _bloom_digest(canonical: str) -> tuple[int, int]:
+    """``_bloom_hash`` of a probe literal, memoized because the digest
+    depends only on the LITERAL, while the driver pruning loop probes
+    it against every candidate file (10k files x an in-list would
+    otherwise md5 the same values 10k times)."""
+    return _bloom_hash(canonical)
 
 
 def _bloom_maybe_contains(entry: dict, value: Any, dtype: DataType) -> bool:
     """Probe one file's bloom entry. True = cannot rule the value out
     (including every unsupported/undecodable case — soundness means
     only a definite miss skips)."""
-    import base64
-
     if not isinstance(dtype, _BLOOM_SUPPORTED_TYPES):
         return True
     canonical = _bloom_render(value)
@@ -980,180 +984,124 @@ def _predicate_prune_dnf(
     return out
 
 
-_DISTRIBUTED_STATS_THRESHOLD = 32
+def _render_stat(value: Any) -> Any:
+    """The stored rendering of one footer min/max value, or None when
+    the value is not representable (bytes, long strings, NaN) —
+    ``_parse_typed``/``_coerce_stat`` must keep round-tripping every
+    shape this emits."""
+    if isinstance(value, datetime):
+        # pyarrow yields TZ-AWARE datetimes for INT64 timestamp columns
+        # (isAdjustedToUTC) — normalize to naive UTC so the stored
+        # rendering matches what _parse_typed reads back (timestamps
+        # stage as INT64 micros)
+        if value.tzinfo is not None:
+            value = value.astimezone(timezone.utc).replace(tzinfo=None)
+        return value.isoformat(sep=" ")
+    if isinstance(value, date):
+        return value.isoformat()
+    if isinstance(value, Decimal):
+        # json.dumps rejects Decimal; stringify and let _parse_typed's
+        # DecimalType branch parse it back
+        return str(value)
+    if isinstance(value, bytes):
+        return None
+    if isinstance(value, str) and len(value) > _STATS_MAX_STRING:
+        return None
+    if isinstance(value, float) and value != value:  # NaN
+        return None
+    return value
 
 
-def _make_stats_harvester(bloom_phys: Optional[dict[str, dict]] = None):
-    """Build a fully self-contained footer-stats function: numRecords +
-    per-column min/max/nullCount from the parquet footer (row-group
-    metadata only — no data read).  ``bloom_phys`` ({physical column:
-    {"fpp", "maxBits"}}) additionally builds per-file BLOOM bitmaps
-    from those columns' distinct values (one column read each — the
-    only part of the harvest that touches data, and the file was just
-    written so it is page-hot).
+def _footer_stats(
+    abs_path: str, bloom_phys: Optional[dict[str, dict]] = None,
+) -> tuple[int, dict]:
+    """(numRecords, stats) of one parquet file: per-column
+    min/max/nullCount from the footer (row-group metadata only — no
+    data read).  ``bloom_phys`` ({physical column: {"fpp", "maxBits"}})
+    additionally builds per-file BLOOM bitmaps from those columns'
+    distinct values (one column read each — the only part that touches
+    data, and a just-staged file is page-hot)."""
+    import pyarrow.compute as pc_
+    import pyarrow.parquet as pq_
 
-    Nested rather than module-level so cloudpickle serializes it by
-    value and executors don't need this repo on their PYTHONPATH (see
-    the worker-pickling note in operators/multimodal.py).  The same
-    function serves the driver loop (few files) and the distributed
-    harvest job (many files)."""
-    max_str = _STATS_MAX_STRING
-
-    def harvest(abs_path: str) -> tuple[str, tuple[int, dict]]:
-        from datetime import date as _date
-        from datetime import datetime as _datetime
-        from decimal import Decimal as _decimal
-
-        import pyarrow.parquet as pq_
-
-        # the ONLY stats renderer (the former module-level _render_stat
-        # twin was dead code); _parse_typed/_coerce_stat must keep
-        # round-tripping whatever shapes this emits
-        def render(value):
-            if isinstance(value, _datetime):
-                # pyarrow yields TZ-AWARE datetimes for INT64
-                # timestamp columns (isAdjustedToUTC) — normalize to
-                # naive UTC so the stored rendering matches what
-                # _parse_typed reads back (r14: timestamps stage as
-                # INT64 micros, so this branch is live now)
-                if value.tzinfo is not None:
-                    from datetime import timezone as _tz
-
-                    value = value.astimezone(_tz.utc).replace(
-                        tzinfo=None)
-                return value.isoformat(sep=" ")
-            if isinstance(value, _date):
-                return value.isoformat()
-            if isinstance(value, _decimal):
-                # json.dumps rejects Decimal; stringify and let
-                # _parse_typed's DecimalType branch parse it back
-                return str(value)
-            if isinstance(value, bytes):
-                return None
-            if isinstance(value, str) and len(value) > max_str:
-                return None
-            if isinstance(value, float) and value != value:  # NaN
-                return None
-            return value
-
-        md = pq_.ParquetFile(abs_path).metadata
-        num_rows = md.num_rows
-        mins: dict = {}
-        maxs: dict = {}
-        nulls: dict = {}
-        names = [md.schema.column(i).name for i in range(md.num_columns)]
-        for i, name in enumerate(names):
-            col_min = None
-            col_max = None
-            col_nulls = 0
-            ok = True
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(i).statistics
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                col_nulls += st.null_count or 0
-                try:
-                    mn, mx = st.min, st.max
-                except NotImplementedError:
-                    # pyarrow (16.x) cannot extract min/max for some
-                    # logical types — DECIMAL columns raise
-                    # ArrowNotImplementedError (a NotImplementedError
-                    # subclass) even with has_min_max=True.  Degrade
-                    # to no min/max for the column: costs file
-                    # skipping, never correctness — and never crashes
-                    # the write that staged the data.
-                    ok = False
-                    break
-                # fold on RAW values (render() may stringify — e.g.
-                # Decimal — and string comparison would mis-fold across
-                # row groups); render only decides representability
-                if render(mn) is None or render(mx) is None:
-                    ok = False
-                    break
-                col_min = mn if col_min is None or mn < col_min else col_min
-                col_max = mx if col_max is None or mx > col_max else col_max
-            if ok and col_min is not None:
-                mins[name] = render(col_min)
-                maxs[name] = render(col_max)
-                nulls[name] = col_nulls
-        stats = {"minValues": mins, "maxValues": maxs, "nullCount": nulls}
-        if bloom_phys:
-            import base64 as _b64
-            import hashlib as _hashlib
-            import math as _math
-
-            # canonical rendering: the by-value twin of the module's
-            # _bloom_render — parity pinned by tests/test_bloom_skipping
-            def canon(v):
-                if isinstance(v, bool):
-                    return None
-                if isinstance(v, int):
-                    return str(v)
-                if isinstance(v, str):
-                    return v
-                return None
-
-            pf = pq_.ParquetFile(abs_path)
-            blooms: dict = {}
-            for col, opts in bloom_phys.items():
-                if col not in names:
-                    continue
-                import pyarrow.compute as pc_
-                uniq = pc_.unique(
-                    pf.read(columns=[col]).column(0).combine_chunks()
-                ).to_pylist()
-                rendered = [canon(v) for v in uniq if v is not None]
-                if any(r is None for r in rendered):
-                    continue  # unsupported value shape -> no bloom, no skip
-                n = max(1, len(rendered))
-                m = int(_math.ceil(
-                    -n * _math.log(opts["fpp"]) / (_math.log(2) ** 2)))
-                m = ((max(64, min(m, opts["maxBits"])) + 7) // 8) * 8
-                k = max(1, min(16, round(m / n * _math.log(2))))
-                buf = bytearray(m // 8)
-                for s in rendered:
-                    d = _hashlib.md5(s.encode("utf-8")).digest()
-                    h1 = int.from_bytes(d[:8], "big")
-                    h2 = int.from_bytes(d[8:], "big") | 1
-                    for i in range(k):
-                        pos = (h1 + i * h2) % m
-                        buf[pos >> 3] |= 1 << (pos & 7)
-                blooms[col] = {
-                    "b64": _b64.b64encode(bytes(buf)).decode("ascii"),
-                    "m": m,
-                    "k": k,
-                }
-            if blooms:
-                stats["bloom"] = blooms
-        return abs_path, (num_rows, stats)
-
-    return harvest
+    pf = pq_.ParquetFile(abs_path)
+    md = pf.metadata
+    mins: dict = {}
+    maxs: dict = {}
+    nulls: dict = {}
+    names = [md.schema.column(i).name for i in range(md.num_columns)]
+    for i, name in enumerate(names):
+        col_min = None
+        col_max = None
+        col_nulls = 0
+        ok = True
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(i).statistics
+            if st is None or not st.has_min_max:
+                ok = False
+                break
+            col_nulls += st.null_count or 0
+            try:
+                mn, mx = st.min, st.max
+            except NotImplementedError:
+                # pyarrow (16.x) cannot extract min/max for some
+                # logical types — DECIMAL columns raise
+                # ArrowNotImplementedError (a NotImplementedError
+                # subclass) even with has_min_max=True.  Degrade to no
+                # min/max for the column: costs file skipping, never
+                # correctness — and never crashes the write that
+                # staged the data.
+                ok = False
+                break
+            # fold on RAW values (_render_stat may stringify — e.g.
+            # Decimal — and string comparison would mis-fold across row
+            # groups); rendering only decides representability
+            if _render_stat(mn) is None or _render_stat(mx) is None:
+                ok = False
+                break
+            col_min = mn if col_min is None or mn < col_min else col_min
+            col_max = mx if col_max is None or mx > col_max else col_max
+        if ok and col_min is not None:
+            mins[name] = _render_stat(col_min)
+            maxs[name] = _render_stat(col_max)
+            nulls[name] = col_nulls
+    stats = {"minValues": mins, "maxValues": maxs, "nullCount": nulls}
+    blooms: dict = {}
+    for col, opts in (bloom_phys or {}).items():
+        if col not in names:
+            continue
+        uniq = pc_.unique(
+            pf.read(columns=[col]).column(0).combine_chunks()).to_pylist()
+        rendered = [_bloom_render(v) for v in uniq if v is not None]
+        if any(r is None for r in rendered):
+            continue  # unsupported value shape -> no bloom, no skip
+        n = max(1, len(rendered))
+        m = int(math.ceil(-n * math.log(opts["fpp"]) / (math.log(2) ** 2)))
+        m = ((max(64, min(m, opts["maxBits"])) + 7) // 8) * 8
+        k = max(1, min(16, round(m / n * math.log(2))))
+        buf = bytearray(m // 8)
+        for r in rendered:
+            h1, h2 = _bloom_hash(r)
+            for j in range(k):
+                pos = (h1 + j * h2) % m
+                buf[pos >> 3] |= 1 << (pos & 7)
+        blooms[col] = {
+            "b64": base64.b64encode(bytes(buf)).decode("ascii"),
+            "m": m,
+            "k": k,
+        }
+    if blooms:
+        stats["bloom"] = blooms
+    return md.num_rows, stats
 
 
 def _harvest_stats(
-    spark: SparkSession, paths: Sequence[str],
-    bloom_phys: Optional[dict[str, dict]] = None,
+    paths: Sequence[str], bloom_phys: Optional[dict[str, dict]] = None,
 ) -> dict[str, tuple[int, dict]]:
-    """Footer stats for every staged file.  Small commits stay on the
-    driver; past the threshold the footer reads fan out as a Spark job
-    over the paths (at 10k+ files/commit a serial driver loop would be
-    the commit bottleneck — docs/SCALE.md)."""
-    if not paths:
-        return {}
-    harvest = _make_stats_harvester(bloom_phys)
-    sc = spark.sparkContext
-    # the fan-out has executors open staging paths written by the
-    # driver; _stage_dataframe stages on the driver's local filesystem,
-    # so the footer reads are only valid where executors share that
-    # filesystem — local mode.  A cluster deployment must stage on
-    # shared storage (s3/hdfs/nfs) and extend this guard to check the
-    # staging URI's scheme; until then the driver loop is the safe path.
-    shared_fs = sc.master.startswith("local")
-    if len(paths) <= _DISTRIBUTED_STATS_THRESHOLD or not shared_fs:
-        return dict(map(harvest, paths))
-    slices = max(1, min(len(paths), sc.defaultParallelism * 4))
-    return dict(sc.parallelize(list(paths), slices).map(harvest).collect())
+    """Footer stats for every staged file, read serially on the driver:
+    about 0.27 ms a footer on 4 vCPUs, so a Spark job's fixed ~2 s only
+    pays past ~8,000 files a commit (docs/SCALE.md)."""
+    return {p: _footer_stats(p, bloom_phys) for p in paths}
 
 
 # ---------------------------------------------------------------------------
@@ -1245,8 +1193,7 @@ def _stage_dataframe(
                 fn,
             ))
 
-    stats_by_path = _harvest_stats(
-        df.sparkSession, [s[0] for s in staged], bloom_phys or None)
+    stats_by_path = _harvest_stats([s[0] for s in staged], bloom_phys)
 
     adds: list[AddFile] = []
     now = int(time.time() * 1000)
@@ -1421,6 +1368,8 @@ class Transaction:
                 **(metrics or {}),
                 "num_added_files": len(adds),
                 "num_removed_files": len(rm),
+                "num_added_bytes": sum(a.size for a in adds),
+                "num_removed_bytes": sum(r.size for r in rm),
                 "executionTimeMs": int(
                     (time.monotonic() - self._started) * 1000),
                 "attempts": attempt + 1,
@@ -4966,8 +4915,8 @@ def convert_to_table(
     """``CONVERT TO DELTA`` analogue: register an EXISTING parquet
     directory as a transactional table IN PLACE — the data files stay
     exactly where they are; the conversion is a directory walk, a
-    footer-stats harvest (distributed past the same threshold as every
-    write commit), and ONE version-0 commit.  At 100 TB this is the
+    footer-stats harvest on the driver (the one every write commit
+    runs), and ONE version-0 commit.  At 100 TB this is the
     onboarding path: minutes of metadata work instead of rewriting the
     dataset through a staged write.
 
@@ -5123,20 +5072,12 @@ def convert_to_table(
     # drops or null-fills the drifted columns on read.  Exact
     # (name, type) signatures — heterogeneous-but-compatible layouts
     # should be normalized through spark.read + write() instead.
-    def _footer_sig(abs_path: str) -> tuple:
-        import pyarrow.parquet as pq_
-
-        sch = pq_.ParquetFile(abs_path).schema_arrow
-        return tuple((f.name, str(f.type)) for f in sch)
+    import pyarrow.parquet as pq_
 
     paths = [ab for ab, _ in rel_files]
-    if len(paths) <= _DISTRIBUTED_STATS_THRESHOLD:
-        sigs = set(map(_footer_sig, paths))
-    else:
-        sc = spark.sparkContext
-        slices = max(1, min(len(paths), sc.defaultParallelism * 4))
-        sigs = set(sc.parallelize(paths, slices).map(_footer_sig)
-                   .distinct().collect())
+    sigs = {tuple((f.name, str(f.type))
+                  for f in pq_.ParquetFile(ab).schema_arrow)
+            for ab in paths}
     if len(sigs) != 1:
         raise ValueError(
             f"the parquet files under {root!r} carry "
@@ -5145,9 +5086,7 @@ def convert_to_table(
             "null-fill the drifted columns — normalize the directory "
             "or load it through spark.read + write() (mergeSchema)")
 
-    stats_by_path = _harvest_stats(
-        spark, paths,
-        _bloom_columns(cfg) or None)
+    stats_by_path = _harvest_stats(paths, _bloom_columns(cfg))
     adds: list[AddFile] = []
     total_rows = 0
     for ab, rel in rel_files:
@@ -5872,11 +5811,11 @@ def convert_from_delta(
     # consistently, so real id-mode tables pass; a file where the
     # resolutions diverge (or that lacks field ids while carrying a
     # same-named column) would silently read DIFFERENT data under
-    # the two rules — refuse.  Batched like every footer pass.
+    # the two rules — refuse.
     if id_mode_fields and files:
         expected = list(id_mode_fields)
 
-        def _id_check(rel: str) -> tuple[str, Optional[str]]:
+        def _id_check(rel: str) -> Optional[str]:
             import pyarrow.parquet as pq_
 
             sch_ = pq_.ParquetFile(
@@ -5890,29 +5829,21 @@ def convert_from_delta(
             for cid, phys in expected:
                 if cid in by_id:
                     if by_id[cid] != phys:
-                        return rel, (
+                        return (
                             f"field id {cid} names column "
                             f"{by_id[cid]!r} but the schema maps it "
                             f"to {phys!r}")
                 elif phys in names:
-                    return rel, (
+                    return (
                         f"column {phys!r} carries no field id {cid}; "
                         "an id-mode reader would not resolve it while "
                         "a name read would")
                 # absent entirely: schema evolution — both
                 # resolutions read NULL, equivalently
-            return rel, None
+            return None
 
-        rels = sorted(files)
-        sc = spark.sparkContext
-        if (len(rels) <= _DISTRIBUTED_STATS_THRESHOLD
-                or not sc.master.startswith("local")):
-            checks = list(map(_id_check, rels))
-        else:
-            slices = max(1, min(len(rels), sc.defaultParallelism * 4))
-            checks = sc.parallelize(rels, slices).map(_id_check) \
-                .collect()
-        bad = [(rel, msg) for rel, msg in checks if msg]
+        bad = [(rel, msg) for rel in sorted(files)
+               if (msg := _id_check(rel))]
         if bad:
             rel0, msg0 = bad[0]
             raise ValueError(
@@ -5923,36 +5854,21 @@ def convert_from_delta(
                 "different data than an id-mode reader")
 
     # numRecords: from the log's stats where present; files without
-    # stats fall back to a parquet footer read — batched through a
-    # Spark job past the same threshold as every stats harvest (a
-    # serial driver loop over a big stats-less table would be the
-    # convert bottleneck)
+    # stats fall back to a parquet footer read on the driver
     def _raw_stats(a: dict[str, Any]) -> dict[str, Any]:
         raw = a.get("stats")
         return (_json_loads(raw) if isinstance(raw, str)
                 else (raw or {}))
 
-    no_stats = [rel for rel in files
-                if _raw_stats(files[rel]).get("numRecords") is None]
-    footer_counts: dict[str, int] = {}
-
-    def _count(rel: str) -> tuple[str, int]:
+    def _footer_rows(rel: str) -> int:
         # shared by this pass and the history replay's footer pass
         import pyarrow.parquet as pq_
 
-        return rel, pq_.ParquetFile(
-            os.path.join(root, rel)).metadata.num_rows
+        return pq_.ParquetFile(os.path.join(root, rel)).metadata.num_rows
 
-    if no_stats:
-        sc = spark.sparkContext
-        if (len(no_stats) <= _DISTRIBUTED_STATS_THRESHOLD
-                or not sc.master.startswith("local")):
-            footer_counts = dict(map(_count, no_stats))
-        else:
-            slices = max(1, min(len(no_stats),
-                                sc.defaultParallelism * 4))
-            footer_counts = dict(
-                sc.parallelize(no_stats, slices).map(_count).collect())
+    footer_counts = {
+        rel: _footer_rows(rel) for rel in files
+        if _raw_stats(files[rel]).get("numRecords") is None}
 
     # DV validation BEFORE the sidecar write: a refused convert must
     # never have mutated the source table directory (the sidecar
@@ -6093,25 +6009,13 @@ def convert_from_delta(
                 "dropped_configuration": dropped_cfg,
             }
         # footer counts for stats-less HISTORICAL adds (the pass
-        # above covered only surviving files) — same batching idiom,
-        # same counter
-        hist_no_stats = sorted({
+        # above covered only surviving files), same counter
+        footer_counts.update({rel: _footer_rows(rel) for rel in {
             rel for pv_ in hist_plan
             for kind, rel, a in pv_["ops"]
             if kind == "add"
             and _raw_stats(a).get("numRecords") is None
-        } - set(footer_counts))
-        if hist_no_stats:
-            sc = spark.sparkContext
-            if (len(hist_no_stats) <= _DISTRIBUTED_STATS_THRESHOLD
-                    or not sc.master.startswith("local")):
-                footer_counts.update(map(_count, hist_no_stats))
-            else:
-                slices = max(1, min(len(hist_no_stats),
-                                    sc.defaultParallelism * 4))
-                footer_counts.update(
-                    sc.parallelize(hist_no_stats, slices)
-                    .map(_count).collect())
+        } - footer_counts.keys()})
         # replay: one native commit per Delta version, staged into a
         # SHADOW log and atomically renamed into place at the end — a
         # crash or conflict mid-replay must never leave a valid-

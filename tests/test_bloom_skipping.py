@@ -195,9 +195,9 @@ def test_bloom_clone_and_merge_staging(spark, tmp_table, tmp_path):
 
 def test_bloom_probe_parity_with_harvester(spark, tmp_table):
     """Every distinct value written into a file must probe PRESENT in
-    that file's bitmap — the module-level probe renderer and the
-    harvester's nested twin hash identically (the lockstep contract in
-    table.py)."""
+    that file's bitmap: the harvest (``_footer_stats``) and the probe
+    render through ``_bloom_render`` and hash through ``_bloom_hash``
+    (the probe via its memoizing ``_bloom_digest``)."""
     from pyspark.sql.types import LongType, StringType
 
     df = spark.createDataFrame(

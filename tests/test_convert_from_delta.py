@@ -1500,3 +1500,44 @@ def test_type_widening_guards(spark, tmp_path):
         _add(r3, "f1.parquet", 1)]])
     with pytest.raises(ValueError, match="not\\s+verified"):
         convert_from_delta(spark, r3)
+
+
+def test_many_stats_less_adds_count_from_footers(spark, tmp_path):
+    """40 live and 40 historical stats-less adds: every numRecords,
+    at head and in the replayed history, comes from the file's
+    footer."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "d")
+    os.makedirs(root)
+
+    def adds(lo, hi):
+        out = []
+        for i in range(lo, hi):  # file i holds i + 1 rows
+            rel = f"f{i:02d}.parquet"
+            ids = list(range(1000 * i, 1000 * i + i + 1))
+            pq.write_table(pa.table({
+                "a": pa.array(ids, pa.int64()),
+                "b": pa.array([2.0 * v for v in ids], pa.float64()),
+                "s": [str(v) for v in ids]}), os.path.join(root, rel))
+            a = _add(root, rel, 0)
+            del a["add"]["stats"]
+            out.append(a)
+        return out
+
+    removes = [{"remove": {"path": f"f{i:02d}.parquet",
+                           "deletionTimestamp": 1, "dataChange": True}}
+               for i in range(40)]
+    _write_log(root, [
+        [_proto(), _meta(spark, _df(spark, 0, 1))] + adds(0, 40),
+        removes + adds(40, 80),
+    ])
+    res = convert_from_delta(spark, root, preserve_history=True)
+    assert res["num_rows"] == sum(range(41, 81))
+    t = DeltaSparkTable(spark, root)
+    for version, lo in ((0, 0), (1, 40)):
+        snap = t.snapshot(version)
+        assert sorted((a.path, a.num_records) for a in snap.files) == [
+            (f"f{i:02d}.parquet", i + 1) for i in range(lo, lo + 40)]
+    assert t.read(version=0).count() == sum(range(1, 41))

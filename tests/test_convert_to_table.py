@@ -290,3 +290,43 @@ def test_convert_hidden_dir_rule_matches_spark(spark, tmp_path):
     t2 = DeltaSparkTable(spark, d2)
     assert t2.read().count() == 40
     assert list(t2.snapshot().partition_columns) == ["_g"]
+
+
+def test_convert_many_files_harvests_on_the_driver(spark, tmp_path):
+    """A 40-file directory converts with per-file numRecords and
+    min/max from each footer (one bloom-indexed column too), and one
+    drifted file among 40 refuses the conversion."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = str(tmp_path / "many")
+    os.makedirs(d)
+    for i in range(40):  # file i holds k in [100 i, 100 i + i]
+        pq.write_table(pa.table({
+            "k": pa.array(range(100 * i, 100 * i + i + 1), pa.int64()),
+            "s": [f"s{i}"] * (i + 1)}), os.path.join(d, f"f{i:02d}.parquet"))
+    drift = str(tmp_path / "drift")
+    os.makedirs(drift)
+    for name in os.listdir(d):
+        os.link(os.path.join(d, name), os.path.join(drift, name))
+    convert_to_table(spark, d, table_configuration={
+        "dds.bloomFilterColumns": '{"s": {}}'})
+    t = DeltaSparkTable(spark, d)
+    files = {a.path: a for a in t.snapshot().files}
+    assert len(files) == 40
+    for i in range(40):
+        a = files[f"f{i:02d}.parquet"]
+        assert a.num_records == i + 1
+        assert a.stats["minValues"] == {"k": 100 * i, "s": f"s{i}"}
+        assert a.stats["maxValues"] == {"k": 100 * i + i, "s": f"s{i}"}
+        assert a.stats["nullCount"] == {"k": 0, "s": 0}
+        assert set(a.stats["bloom"]) == {"s"}
+    assert t.read().count() == sum(range(1, 41))
+    assert t.read(dnf=[("s", "=", "s7")]).count() == 8
+    assert len(t.pruned_files(t.snapshot(), [("k", "=", 3905)])) == 1
+
+    pq.write_table(pa.table({"k": pa.array([1], pa.int32()), "s": ["x"]}),
+                   os.path.join(drift, "f40.parquet"))
+    with pytest.raises(ValueError, match="2 different schemas"):
+        convert_to_table(spark, drift)
+    assert not DeltaSparkTable(spark, drift).exists()

@@ -1123,6 +1123,36 @@ def test_bipartite_components_chain_and_islands(spark):
     assert partial != full
 
 
+def test_bipartite_components_leaves_session_conf_alone(spark, monkeypatch):
+    """The small-membership round sizing rides in the plan: while the
+    rounds run, the session's shuffle-partition count is the caller's
+    (another thread planning meanwhile must not see a lowered one),
+    and the components are unchanged."""
+    from dagster_delta_spark.operators import graph
+
+    key = "spark.sql.shuffle.partitions"
+    session = spark.conf.get(key)
+    assert int(session) > 2  # else the rounds are not resized at all
+    seen = []
+    real = graph._propagate_rounds
+
+    def spy(*args, **kwargs):
+        seen.append(spark.conf.get(key))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(graph, "_propagate_rounds", spy)
+    member = spark.createDataFrame(
+        [(i + d, f"k{i}") for i in range(1, 6) for d in (0, 1)]
+        + [(10, "x"), (11, "x")],
+        "doc_id int, fp string",
+    )
+    out = {r["doc_id"]: r["component"]
+           for r in graph.bipartite_components(member).collect()}
+    assert out == {**{i: 1 for i in range(1, 7)}, 10: 10, 11: 10}
+    assert seen == [session]
+    assert spark.conf.get(key) == session
+
+
 def test_duplicate_components_transitive_families(spark, tmp_path):
     """A~B and B~C (A,C disjoint) land in ONE family; unrelated docs
     are singletons; every doc is covered."""

@@ -91,6 +91,30 @@ def test_retries_are_bounded_and_recorded(spark, tmp_path, monkeypatch, op):
     assert metrics["executionTimeMs"] >= 0
 
 
+def test_commits_record_added_and_removed_bytes(spark, tmp_path):
+    """``num_added_bytes``/``num_removed_bytes`` in ``operationMetrics``
+    are the summed sizes of the files each commit adds and removes."""
+    t = DeltaSparkTable(spark, str(tmp_path / "t"))
+    # one file per partition, so the delete rewrites one
+    t.write(_rows(spark, *range(8)).coalesce(1), WriteMode.error,
+            partition_columns=["p"])
+    t.merge(_rows(spark, 1, 3, 20),
+            MergeConfig(MergeType.upsert, predicate="s.k = t.k"))
+    t.delete("k = 2")
+    sizes = [{a.log_key: a.size for a in t.snapshot(v).files}
+             for v in range(3)]
+    before: dict = {}
+    for entry in reversed(t.history()):
+        after = sizes[entry["version"]]
+        metrics = entry["operationMetrics"]
+        assert metrics["num_added_bytes"] == sum(
+            after[k] for k in after.keys() - before.keys()) > 0
+        assert metrics["num_removed_bytes"] == sum(
+            before[k] for k in before.keys() - after.keys())
+        before = after
+    assert t.history(1)[0]["operationMetrics"]["num_removed_bytes"] > 0
+
+
 def test_append_refuses_a_table_created_partitioned_meanwhile(
     spark, tmp_path, monkeypatch
 ):

@@ -175,28 +175,40 @@ def test_overwrite_dnf_string_literal_on_int_partition(spark, tmp_table):
         )
 
 
-def test_many_file_write_distributed_stats(spark, tmp_table):
-    """A commit staging more files than the distributed-harvest
-    threshold produces the same AddFile stats the driver loop would
-    (numRecords, min/max), and the table reads back exactly."""
-    from dagster_delta_spark.table import (
-        _DISTRIBUTED_STATS_THRESHOLD,
-        _make_stats_harvester,
-    )
-
-    n_files = _DISTRIBUTED_STATS_THRESHOLD + 8
-    t = DeltaSparkTable(spark, tmp_table)
-    df = spark.range(4000).repartition(n_files)
-    t.write(df, WriteMode.error)
-
-    snap = t.snapshot()
-    assert len(snap.files) > _DISTRIBUTED_STATS_THRESHOLD
-    harvest = _make_stats_harvester()
+def test_many_file_write_stats_from_driver_footers(spark, tmp_table):
+    """A 40-file commit harvests its AddFile stats (numRecords,
+    min/max) from the footers on the driver: the write's job group
+    holds only the staging write's jobs, no harvest job, and the table
+    reads back exactly."""
     import os
 
+    from dagster_delta_spark.table import _footer_stats
+
+    n_files = 40
+    df = spark.range(4000).repartition(n_files)
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    staging_jobs = jobs_of("stage-only", lambda: df.write.mode(
+        "overwrite").parquet(tmp_table + "_plain"))
+    t = DeltaSparkTable(spark, tmp_table)
+    assert jobs_of("table-write", lambda: t.write(
+        df, WriteMode.error)) == staging_jobs
+
+    snap = t.snapshot()
+    assert len(snap.files) == n_files
     total = 0
     for a in snap.files:
-        _, (num_rows, stats) = harvest(os.path.join(tmp_table, a.path))
+        num_rows, stats = _footer_stats(os.path.join(tmp_table, a.path))
         assert a.num_records == num_rows
         assert a.stats["minValues"] == stats["minValues"]
         assert a.stats["maxValues"] == stats["maxValues"]
