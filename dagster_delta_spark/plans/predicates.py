@@ -23,6 +23,7 @@ read path uses ``Column`` expressions rather than pyarrow compute.
 
 from __future__ import annotations
 
+import math
 import re
 from datetime import date, datetime
 from decimal import Decimal
@@ -313,11 +314,17 @@ def _sql_literal(value: Any) -> str:
     ints, in Spark SQL: a string escapes ``\\`` (Spark's escape
     character) and doubles ``'``.  Sub-second precision is preserved —
     truncating it would make the executed scope (the MERGE predicate)
-    disagree with pruned_files on the same DNF."""
+    disagree with pruned_files on the same DNF.  Non-finite floats
+    render as ``double('infinity')``/``double('nan')``: bare ``inf``
+    parses as a column name."""
     if value is None:
         return "NULL"
     if isinstance(value, bool):
         return "TRUE" if value else "FALSE"
+    if isinstance(value, float) and math.isnan(value):
+        return "double('nan')"
+    if isinstance(value, float) and math.isinf(value):
+        return f"double('{'-' if value < 0 else ''}infinity')"
     if isinstance(value, (int, float, Decimal)):
         return str(value)
     if isinstance(value, datetime):

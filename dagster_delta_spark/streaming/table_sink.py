@@ -18,16 +18,14 @@ replay folds it with ``max``.
 
 from __future__ import annotations
 
-import datetime
-import decimal
 import json
-import math
 from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..config import MergeConfig, MergeType, WriteMode
+from ..plans.predicates import _sql_literal
 from ..table import DeltaSparkTable
 
 
@@ -260,7 +258,7 @@ def cdc_replicating_sink(
                 # OR-chain would cost Catalyst quadratic analysis and a
                 # per-row interpreted walk in the delete's hit scan.
                 # IN(NULL) never matches — null keys get their own term
-                vals = [_sql_lit(r[keys[0]]) for r in key_rows
+                vals = [_sql_literal(r[keys[0]]) for r in key_rows
                         if r[keys[0]] is not None]
                 terms = []
                 if vals:
@@ -272,7 +270,7 @@ def cdc_replicating_sink(
                 # null-safe equality so NULL key components match
                 pred = " OR ".join(
                     "(" + " AND ".join(
-                        f"{k} <=> {_sql_lit(r[k])}" for k in keys) + ")"
+                        f"{k} <=> {_sql_literal(r[k])}" for k in keys) + ")"
                     for r in key_rows)
                 target.delete(pred, use_dv=True)
         if ups.take(1):
@@ -332,35 +330,6 @@ def _conform_replica_schema(target: DeltaSparkTable, ups: DataFrame) -> None:
         # commit; pre-evolution replica files read the columns as NULL,
         # exactly like the source's own pre-evolution files
         target.add_columns(new)
-
-
-def _sql_lit(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, float):
-        # repr(inf) -> 'inf' is not a SQL literal; Spark spells these
-        # double('infinity') / double('nan')
-        if math.isinf(v):
-            return f"double('{'-' if v < 0 else ''}infinity')"
-        if math.isnan(v):
-            return "double('nan')"
-        return repr(v)
-    if isinstance(v, int):
-        return repr(v)
-    if isinstance(v, decimal.Decimal):
-        return str(v)
-    # datetime is a date subclass — check it first; typed literals
-    # beat the quoted-string path's reliance on implicit casts
-    if isinstance(v, datetime.datetime):
-        return f"TIMESTAMP '{v.isoformat(sep=' ')}'"
-    if isinstance(v, datetime.date):
-        return f"DATE '{v.isoformat()}'"
-    # Spark string literals treat backslash as an escape — double it
-    # BEFORE quote-doubling or 'C:\tmp' parses as 'C:<TAB>mp'
-    s = str(v).replace("\\", "\\\\").replace("'", "''")
-    return f"'{s}'"
 
 
 def auto_ingest_once(

@@ -2887,17 +2887,6 @@ class DeltaSparkTable:
             out.append(add)
         return out
 
-    def _per_file_hits(
-        self, snap: Snapshot, candidates: Sequence[AddFile], match
-    ) -> dict[str, int]:
-        """ONE distributed scan: per-file count of rows matching
-        ``match``, keyed by the candidate's log_key.  Filtering BEFORE
-        the aggregate pushes the predicate into the parquet scan
-        (row-group skipping); files absent from the result have 0
-        hits."""
-        return self._hits_from_frame(candidates, self._read_files(
-            snap, candidates, with_metadata=True).where(match))
-
     def delete(
         self,
         predicate: Optional[str] = None,
@@ -2912,12 +2901,12 @@ class DeltaSparkTable:
         ``partition_dnf``; no scope deletes every row.
 
         Scale shape: files whose partition values alone decide the
-        scope are dropped as pure metadata (no bytes read); for the
-        rest, ONE discovery scan counts matches per file, fully-matched
-        files are dropped as metadata, and only partially-matched files
-        are rewritten (keep-rows copy). At 100 TB a partition-scoped
-        delete touches no data at all, and a needle predicate rewrites
-        only the files whose min/max straddle the needle.
+        scope are dropped as pure metadata (no bytes read); the rest go
+        through ``_rewrite_matching`` — one discovery scan, fully
+        matched files dropped as metadata, only partially-matched files
+        rewritten (keep-rows copy). At 100 TB a partition-scoped delete
+        touches no data at all, and a needle predicate rewrites only
+        the files whose min/max straddle the needle.
 
         ``use_dv=True`` switches partially-matched files to
         MERGE-ON-READ deletion vectors (the Delta DV analogue): instead
@@ -2934,96 +2923,26 @@ class DeltaSparkTable:
         tablelog.check_write_support(snap.protocol, self.table_uri)
         _refuse_append_only(
             self.table_uri, snap.metadata.configuration, "DELETE")
-        schema = StructType.fromJson(_json_loads(snap.schema_json))
-        params: dict[str, Any] = {}
-        if predicate is not None:
-            params["predicate"] = predicate
-        if partition_dnf:
-            params["partition_filter"] = dnf_to_sql(partition_dnf)
-
         if predicate is None and not partition_dnf:
-            # full-table delete: pure metadata
-            return self._commit_rewrite(
-                snap, list(snap.files), [], "DELETE",
-                operation_parameters={"predicate": "true"},
-                extra_metrics={
-                    "num_deleted_rows": sum(
-                        a.live_records for a in snap.files),
-                    "num_copied_rows": 0,
-                },
-            )
-
-        candidates = self._dml_candidates(
-            snap, schema, predicate, partition_dnf)
-        if predicate is None:
-            # DNF-only scope: partition-column conjuncts decide whole
-            # files; only files kept alive by STATS pruning (data-column
-            # conjuncts) might match partially and need the row scan
-            pcols = set(snap.partition_columns)
-            if all(name in pcols for name, _op, _v in partition_dnf):
-                return self._commit_rewrite(
-                    snap, candidates, [], "DELETE",
-                    operation_parameters=params,
-                    extra_metrics={
-                        "num_deleted_rows": sum(
-                            a.live_records for a in candidates),
-                        "num_copied_rows": 0,
-                    },
-                )
-        if not candidates:
-            return {"version": snap.version, "num_deleted_rows": 0,
-                    "num_copied_rows": 0, "num_added_files": 0,
-                    "num_removed_files": 0, "rewritten_files": 0}
-
-        match = self._scoped_condition(predicate, partition_dnf)
-        doomed_pos = None
-        if use_dv:
-            # r15 optimization: the DV path needs the matched POSITIONS
-            # anyway (the sidecar content), so ONE scan collects them
-            # and the per-file hit counts derive from the checkpointed
-            # position frame — was two scans of every candidate file
-            # (count pass + position pass).  Position volume = deleted
-            # rows, bounded by the delete itself.
-            hits, full, partial, deleted, doomed_pos = (
-                self._dml_discovery_positions(snap, candidates, match))
+            dropped, params = list(snap.files), {"predicate": "true"}
+        elif predicate is None and all(
+                name in snap.partition_columns
+                for name, _op, _v in partition_dnf):
+            # partition-column conjuncts decide whole files; a
+            # data-column conjunct may match a file partially and
+            # needs the row scan
+            dropped = self.pruned_files(snap, partition_dnf)
+            params = {"partition_filter": dnf_to_sql(partition_dnf)}
         else:
-            hits, full, partial, deleted = self._dml_discovery(
-                snap, candidates, match)
-        if not full and not partial:
-            return {"version": snap.version, "num_deleted_rows": 0,
-                    "num_copied_rows": 0, "num_added_files": 0,
-                    "num_removed_files": 0, "rewritten_files": 0}
-
-        if partial and use_dv:
-            dv_adds = self._write_deletion_vector(
-                snap, partial, match, hits, positions=doomed_pos)
-            return self._commit_rewrite(
-                snap, full + partial, dv_adds, "DELETE",
-                operation_parameters={**params, "mode": "deletion_vector"},
-                extra_metrics={"num_deleted_rows": deleted,
-                               "num_copied_rows": 0,
-                               "num_deletion_vectors": len(dv_adds)},
-            )
-
-        adds: list[AddFile] = []
-        copied = 0
-        if partial:
-            keep = self._read_files(snap, partial).where(~match)
-            adds = _stage_dataframe(
-                keep, self.table_uri, snap.partition_columns, schema,
-                _writer_options(writer_properties),
-                mapping=_column_mapping(snap.metadata.configuration),
-                bloom_spec=_bloom_columns(snap.metadata.configuration),
-            )
-            copied = sum(a.num_records for a in adds)
-        return self._dml_compacting(
-            self._commit_rewrite(
-                snap, full + partial, adds, "DELETE",
-                operation_parameters=params,
-                extra_metrics={"num_deleted_rows": deleted,
-                               "num_copied_rows": copied},
-            ),
-            snap.metadata.configuration,
+            return self._rewrite_matching(
+                snap, "DELETE", predicate, partition_dnf, use_dv=use_dv,
+                writer_properties=writer_properties)
+        return self._commit_rewrite(
+            snap, dropped, [], "DELETE", operation_parameters=params,
+            extra_metrics={
+                "num_deleted_rows": sum(a.live_records for a in dropped),
+                "num_copied_rows": 0,
+            },
         )
 
     def _dml_candidates(
@@ -3046,54 +2965,46 @@ class DeltaSparkTable:
         return (self.pruned_files(snap, dnf) if dnf
                 else list(snap.files))
 
-    def _dml_discovery(
-        self, snap: Snapshot, candidates: Sequence[AddFile], match,
-    ) -> tuple[dict[str, int], list[AddFile], list[AddFile], int]:
-        """Shared per-file match classification for DELETE and
-        REPLACE WHERE — (hits, fully-matched files, partially-matched
-        files, total matched rows).  ONE definition so the two DML
-        paths' discovery semantics can never drift.  The discovery
+    def _discover_matches(
+        self,
+        snap: Snapshot,
+        candidates: Sequence[AddFile],
+        match,
+        keep: Optional[Sequence[str]] = None,
+    ) -> tuple[dict[str, int], list[AddFile], list[AddFile],
+               Optional[DataFrame]]:
+        """The one discovery scan of a row-level rewrite: (per-file hit
+        counts keyed by log_key, fully-matched files, partially-matched
+        files, matched rows).  Filtering BEFORE the aggregate pushes
+        the predicate into the parquet scan (row-group skipping).  The
         scan is DV-filtered, so hits count LIVE rows — a DV'd file
-        whose remaining rows all match is a full drop."""
-        hits = (self._per_file_hits(snap, candidates, match)
-                if candidates else {})
-        return (hits, *self._classify_hits(candidates, hits))
+        whose remaining rows all match is a full drop.
+
+        ``keep=None`` counts per file with one aggregate over the scan.
+        Otherwise the matched rows' ``keep`` columns are checkpointed
+        first and the counts derive from the checkpoint, so a DV
+        rewrite reads its candidates exactly once; the checkpoint holds
+        the matched rows, the quantity a DV rewrite is sized by."""
+        if not candidates:
+            return {}, [], [], None
+        matched = self._read_files(
+            snap, candidates, with_metadata=True).where(match)
+        if keep is not None:
+            matched = matched.select(*keep).localCheckpoint()
+        hits = self._hits_from_frame(candidates, matched)
+        return (hits, *self._classify_hits(candidates, hits), matched)
 
     @staticmethod
     def _classify_hits(
         candidates: Sequence[AddFile], hits: dict[str, int]
-    ) -> tuple[list[AddFile], list[AddFile], int]:
-        """(fully-matched, partially-matched, total matched rows) from
-        a per-file hit count — shared by the scan-counting discovery
-        and the position-collecting DV discovery."""
-        rows_by_key = {a.log_key: a.live_records for a in candidates}
+    ) -> tuple[list[AddFile], list[AddFile]]:
+        """(fully-matched, partially-matched) candidates from per-file
+        hit counts; a file absent from ``hits`` has none."""
         full = [a for a in candidates
-                if hits.get(a.log_key, 0) == rows_by_key[a.log_key]
-                and hits.get(a.log_key, 0) > 0]
+                if 0 < hits.get(a.log_key, 0) == a.live_records]
         partial = [a for a in candidates
-                   if 0 < hits.get(a.log_key, 0) < rows_by_key[a.log_key]]
-        return full, partial, sum(hits.values())
-
-    def _dml_discovery_positions(
-        self, snap: Snapshot, candidates: Sequence[AddFile], match,
-    ) -> tuple[dict[str, int], list[AddFile], list[AddFile], int,
-               DataFrame]:
-        """DV-flavored discovery (r15): ONE scan of the candidates
-        collects the matched LIVE row positions into a checkpointed
-        ``(__path, row_index)`` frame; hit counts (and the
-        full/partial classification) derive from that frame with a
-        tiny aggregate instead of a second scan, and the sidecar
-        writer consumes the same frame.  Position volume is the
-        number of matched rows — the quantity a DV delete is sized
-        by — never the candidate bytes."""
-        tgt = self._read_files(snap, candidates, with_metadata=True)
-        pos = (
-            tgt.where(match)
-            .select("__path", F.col("__ri").alias("row_index"))
-            .localCheckpoint()
-        )
-        hits = self._hits_from_frame(candidates, pos)
-        return (hits, *self._classify_hits(candidates, hits), pos)
+                   if 0 < hits.get(a.log_key, 0) < a.live_records]
+        return full, partial
 
     def _hits_from_frame(
         self, candidates: Sequence[AddFile], frame: DataFrame,
@@ -3105,6 +3016,137 @@ class DeltaSparkTable:
             F.count(F.lit(1)).alias("__hits")).collect()
         files = self._scanned_files(candidates, [r["__path"] for r in rows])
         return {a.log_key: r["__hits"] for a, r in zip(files, rows)}
+
+    def _rewrite_matching(
+        self,
+        snap: Snapshot,
+        op: str,
+        predicate: Optional[str],
+        partition_dnf: Optional[Sequence[DnfFilter]],
+        *,
+        assignments: Optional[dict[str, str]] = None,
+        inserts: Optional[DataFrame] = None,
+        use_dv: bool,
+        writer_properties: Optional[dict[str, Any]],
+        dry_run: bool = False,
+    ) -> dict[str, Any]:
+        """The one row-level rewrite, planned against ``snap``: DELETE
+        is it with no assignments and no inserts, UPDATE passes
+        ``assignments``, REPLACE WHERE passes its conformed input as
+        ``inserts``.
+
+        ONE discovery scan over the pruned candidates finds the files
+        holding a matching row; a file whose every live row matches
+        drops as metadata.  In copy mode, a partially-matched file is
+        rewritten without its matching rows, and UPDATE instead
+        rewrites every touched file through a ``CASE WHEN match``
+        projection.  With ``use_dv`` the discovery scan checkpoints the
+        matched positions (plus the row values when assignments need
+        them): partially-matched files are re-added with a deletion
+        vector, and UPDATE's new rows project off the same checkpoint,
+        so the candidates are read once.  Rewritten and inserted rows
+        stage in one write and commit in one transaction.
+
+        Rules that ``read_changes`` and the tests depend on:
+        - UPDATE with ``use_dv`` always records ``mode =
+          "deletion_vector"``; DELETE and REPLACE WHERE record it (and
+          DELETE ``num_deletion_vectors``) only when they write a
+          sidecar;
+        - a DELETE that writes a sidecar does not auto-compact; every
+          other rewrite does;
+        - ``dry_run`` uses counting discovery and reports the would-be
+          commit without writing anything."""
+        cfg = snap.metadata.configuration
+        schema = StructType.fromJson(_json_loads(snap.schema_json))
+        params: dict[str, Any] = (
+            {"assignments": dict(assignments)} if assignments else {})
+        if predicate is not None:
+            params["predicate"] = predicate
+        if partition_dnf:
+            params["partition_filter"] = dnf_to_sql(partition_dnf)
+        match = self._scoped_condition(predicate, partition_dnf)
+        keep = None
+        if use_dv and not dry_run:
+            keep = ["*"] if assignments else ["__path", "__ri"]
+        candidates = self._dml_candidates(
+            snap, schema, predicate, partition_dnf)
+        hits, full, partial, matched = self._discover_matches(
+            snap, candidates, match, keep)
+        rows_key = "num_updated_rows" if assignments else "num_deleted_rows"
+        if not hits and (inserts is None or inserts.limit(1).head() is None):
+            # nothing to remove or insert: a commit would publish an
+            # empty REWRITE version that every incremental consumer
+            # must refuse or rebuild for
+            res = {"version": snap.version, rows_key: 0,
+                   "num_copied_rows": 0, "num_added_files": 0,
+                   "num_removed_files": 0}
+            if inserts is None:
+                res["rewritten_files"] = 0
+            else:
+                res["num_inserted_rows"] = 0
+            return {**res, "dry_run": True} if dry_run else res
+        sidecar = use_dv and bool(partial)
+        copied = sum(a.live_records - hits[a.log_key] for a in partial)
+        if dry_run:
+            return {
+                "version": snap.version,
+                "dry_run": True,
+                "num_deleted_rows": sum(hits.values()),
+                "num_copied_rows": copied,
+                "num_inserted_rows": inserts.count(),
+                "num_removed_files": len(full) + len(partial),
+                "full_file_drops": len(full),
+                "partial_rewrites": len(partial),
+                "mode": "deletion_vector" if sidecar else "copy",
+            }
+
+        rows: Optional[DataFrame] = None
+        if assignments:
+            # assigned values cast to the column type; generated
+            # columns recompute over the post-update projection of
+            # matched rows, unmatched rows keep theirs
+            src, cond = ((matched, F.lit(True)) if use_dv
+                         else (self._read_files(snap, full + partial), match))
+            rows = src.select(*[
+                F.when(cond, F.expr(assignments[f_.name]).cast(f_.dataType))
+                .otherwise(F.col(f_.name)).alias(f_.name)
+                if f_.name in assignments else F.col(f_.name)
+                for f_ in schema.fields
+            ], cond.alias("__m"))
+            dtypes = {f_.name: f_.dataType for f_ in schema.fields}
+            for gcol, gexpr in _generated_columns(cfg).items():
+                rows = rows.withColumn(
+                    gcol, F.when(F.col("__m"),
+                                 F.expr(gexpr).cast(dtypes[gcol]))
+                    .otherwise(F.col(gcol)))
+            rows = rows.drop("__m")
+            self._enforce_constraints(rows, cfg)
+        elif partial and not use_dv:
+            rows = self._read_files(snap, partial).where(~match)
+        if inserts is not None:
+            rows = inserts if rows is None else rows.unionByName(inserts)
+        dv_adds = (self._write_deletion_vector(partial, hits, matched)
+                   if sidecar else [])
+        staged = [] if rows is None else _stage_dataframe(
+            rows, self.table_uri, snap.partition_columns, schema,
+            _writer_options(writer_properties),
+            mapping=_column_mapping(cfg), bloom_spec=_bloom_columns(cfg))
+        metrics = {rows_key: sum(hits.values()),
+                   "num_copied_rows": 0 if use_dv else copied}
+        if inserts is not None:
+            metrics["num_inserted_rows"] = (
+                sum(a.num_records for a in staged)
+                - metrics["num_copied_rows"])
+        if use_dv and (assignments or sidecar):
+            params["mode"] = "deletion_vector"
+            if inserts is None:
+                metrics["num_deletion_vectors"] = len(dv_adds)
+        res = self._commit_rewrite(
+            snap, full + partial, dv_adds + staged, op,
+            operation_parameters=params, extra_metrics=metrics)
+        # a DV DELETE adds no data file, so there is nothing to compact
+        return res if sidecar and rows is None else self._dml_compacting(
+            res, cfg)
 
     def replace_where(
         self,
@@ -3130,12 +3172,12 @@ class DeltaSparkTable:
         both sides (SQL DELETE semantics, via the same null-safe
         condition DELETE/UPDATE use).
 
-        Scale shape = DELETE's: one discovery scan counts matches per
-        file; fully-matched files drop as metadata; only
-        partially-matched files rewrite their keep-rows
-        (``use_dv=True`` switches those to merge-on-read deletion
-        vectors — write cost ∝ replaced rows, zero old data copied).
-        The commit classifies as a REWRITE for incremental consumers
+        Scale shape = DELETE's (``_rewrite_matching``): one discovery
+        scan; fully-matched files drop as metadata; only
+        partially-matched files rewrite their keep-rows (``use_dv=True``
+        switches those to merge-on-read deletion vectors — write cost
+        ∝ replaced rows, zero old data copied).  The commit classifies
+        as a REWRITE for incremental consumers
         (tablelog.classify_commit), exactly like overwrite/MERGE.
 
         ``dry_run=True`` (mirrors vacuum's): run the FULL validation
@@ -3187,104 +3229,27 @@ class DeltaSparkTable:
         self._enforce_constraints(out, cfg)
         if gen_provided:
             self._enforce_generated(out, gen_provided)
-
-        match = self._scoped_condition(predicate, None)
-        rw_pos = None
-        if use_dv and not dry_run:
-            # same single-scan DV discovery as delete() (r15)
-            hits, full, partial, deleted, rw_pos = (
-                self._dml_discovery_positions(
-                    snap, self._dml_candidates(snap, schema, predicate),
-                    match))
-        else:
-            hits, full, partial, deleted = self._dml_discovery(
-                snap, self._dml_candidates(snap, schema, predicate), match)
-        if not full and not partial and out.limit(1).head() is None:
-            # nothing matched AND nothing to insert: committing would
-            # publish an empty REWRITE version that forces every
-            # incremental consumer to refuse/rebuild for a no-op
-            # (delete() guards the same way)
-            return {"version": snap.version, "num_deleted_rows": 0,
-                    "num_copied_rows": 0, "num_inserted_rows": 0,
-                    "num_added_files": 0, "num_removed_files": 0,
-                    **({"dry_run": True} if dry_run else {})}
-        if dry_run:
-            # full validation + discovery ran above; report the
-            # would-be commit without moving a byte
-            return {
-                "version": snap.version,
-                "dry_run": True,
-                "num_deleted_rows": deleted,
-                "num_copied_rows": sum(
-                    a.live_records for a in partial) - sum(
-                    hits.get(a.log_key, 0) for a in partial),
-                "num_inserted_rows": out.count(),
-                "num_removed_files": len(full) + len(partial),
-                "full_file_drops": len(full),
-                "partial_rewrites": len(partial),
-                "mode": ("deletion_vector" if partial and use_dv
-                         else "copy"),
-            }
-
-        adds: list[AddFile] = []
-        copied = 0
-        if partial and use_dv:
-            adds += self._write_deletion_vector(
-                snap, partial, match, hits, positions=rw_pos)
-        elif partial:
-            keep = self._read_files(snap, partial).where(~match)
-            keep_adds = _stage_dataframe(
-                keep, self.table_uri, snap.partition_columns, schema,
-                _writer_options(writer_properties),
-                mapping=_column_mapping(cfg),
-                bloom_spec=_bloom_columns(cfg),
-            )
-            copied = sum(a.num_records for a in keep_adds)
-            adds += keep_adds
-        new_adds = _stage_dataframe(
-            out, self.table_uri, snap.partition_columns, schema,
-            _writer_options(writer_properties),
-            mapping=_column_mapping(cfg),
-            bloom_spec=_bloom_columns(cfg),
-        )
-        adds += new_adds
-        params: dict[str, Any] = {"predicate": predicate}
-        if partial and use_dv:
-            params["mode"] = "deletion_vector"
-        return self._dml_compacting(
-            self._commit_rewrite(
-                snap, full + partial, adds, "REPLACE WHERE",
-                operation_parameters=params,
-                extra_metrics={
-                    "num_deleted_rows": deleted,
-                    "num_copied_rows": copied,
-                    "num_inserted_rows": sum(
-                        a.num_records for a in new_adds),
-                },
-            ),
-            cfg,
-        )
+        return self._rewrite_matching(
+            snap, "REPLACE WHERE", predicate, None, inserts=out,
+            use_dv=use_dv, writer_properties=writer_properties,
+            dry_run=dry_run)
 
     def _write_deletion_vector(
         self,
-        snap: Snapshot,
         partial: list[AddFile],
-        match,
         hits: dict[str, int],
-        positions: Optional[DataFrame] = None,
+        positions: DataFrame,
     ) -> list[AddFile]:
-        """Write ONE DV sidecar parquet for this delete and return the
+        """Write ONE DV sidecar parquet for this rewrite and return the
         re-add entries: each partially-matched file keeps its physical
         data untouched but points at the sidecar with an updated
         ``dv_count``.  Prior DV positions (local or cloned) are folded
         into the new sidecar so a file always has at most one live DV
         reference.
 
-        ``positions`` (r15): a pre-collected checkpointed
-        ``(__path, row_index)`` frame of the matched live positions
-        (from ``_dml_discovery_positions``) — skips the second scan of
-        the candidate files; rows belonging to non-partial files fall
-        out in the mapping join below."""
+        ``positions`` is the checkpointed discovery frame of matched
+        live rows (``__path``, ``__ri``); rows of fully-matched files
+        fall out in the mapping join below."""
         rel = os.path.join("_dv", f"dv-{uuid.uuid4().hex}")
         out_dir = os.path.join(self.table_uri, rel)
         # sidecar identity is (root, path) — clone-stable, see
@@ -3296,16 +3261,8 @@ class DeltaSparkTable:
              for a in partial],
             "root string, path string, __norm string",
         )
-        if positions is not None:
-            raw = positions
-        else:
-            # matched LIVE positions (the scan is DV-filtered, so
-            # already-masked rows cannot re-enter)
-            tgt = self._read_files(snap, partial, with_metadata=True)
-            raw = tgt.where(match).select(
-                "__path", F.col("__ri").alias("row_index"))
         doomed = (
-            raw
+            positions.select("__path", F.col("__ri").alias("row_index"))
             .withColumn(
                 "__norm",
                 F.expr("regexp_replace(url_decode(replace(__path, '+', "
@@ -3356,7 +3313,8 @@ class DeltaSparkTable:
         assigned values cast to the column's declared type.  Rows in
         scope (``predicate`` AND ``partition_dnf``; default all) are
         updated; only files containing a matching row are rewritten —
-        same touched-file-only shape as DELETE and MERGE.
+        same touched-file-only shape as DELETE and MERGE
+        (``_rewrite_matching``).
 
         ``use_dv=True`` = MERGE-ON-READ update (Delta's DV-based
         update): matched rows are MASKED in place via deletion vectors
@@ -3394,143 +3352,18 @@ class DeltaSparkTable:
         # write() computes absent columns in, so any constructible
         # config is dependency-ordered), and is idempotent for rows
         # whose derivation already held.
-        gencols = _generated_columns(snap.metadata.configuration)
-        gen_direct = sorted(set(assignments) & set(gencols))
+        gen_direct = sorted(
+            set(assignments)
+            & set(_generated_columns(snap.metadata.configuration)))
         if gen_direct:
             raise ValueError(
                 f"column(s) {gen_direct} are generated; UPDATE their "
                 "source columns instead — the generation expression "
                 "recomputes them")
-
-        candidates = self._dml_candidates(
-            snap, schema, predicate, partition_dnf)
-        if not candidates:
-            return {"version": snap.version, "num_updated_rows": 0,
-                    "num_copied_rows": 0, "num_added_files": 0,
-                    "num_removed_files": 0, "rewritten_files": 0}
-
-        match = self._scoped_condition(predicate, partition_dnf)
-        matched_full = None
-        if use_dv:
-            # r15 optimization: the DV update needs the matched rows'
-            # VALUES (the updated copies) and their POSITIONS (the
-            # mask) anyway, so ONE scan materializes the matched rows
-            # with their file metadata; hit counts, the updated-copy
-            # projection and the sidecar positions all derive from
-            # that checkpoint — was three scans of the candidates
-            # (count pass + value pass + position pass).  Checkpoint
-            # volume = updated rows, the quantity a DV update is
-            # sized by.
-            matched_full = (
-                self._read_files(snap, candidates, with_metadata=True)
-                .where(match)
-                .localCheckpoint()
-            )
-            hits = self._hits_from_frame(candidates, matched_full)
-        else:
-            hits = self._per_file_hits(snap, candidates, match)
-        touched = [a for a in candidates if hits.get(a.log_key, 0) > 0]
-        updated = sum(hits.values())
-        if not touched:
-            return {"version": snap.version, "num_updated_rows": 0,
-                    "num_copied_rows": 0, "num_added_files": 0,
-                    "num_removed_files": 0, "rewritten_files": 0}
-
-        params: dict[str, Any] = {
-            "assignments": dict(assignments)}
-        if predicate is not None:
-            params["predicate"] = predicate
-        if partition_dnf:
-            params["partition_filter"] = dnf_to_sql(partition_dnf)
-
-        if use_dv:
-            # merge-on-read: mask matched rows, append updated copies
-            # (both projected off the single discovery checkpoint)
-            upd_cols = [
-                F.expr(assignments[f_.name]).cast(f_.dataType)
-                .alias(f_.name)
-                if f_.name in assignments else F.col(f_.name)
-                for f_ in schema.fields
-            ]
-            new_rows = matched_full.select(*upd_cols)
-            dtypes = {f_.name: f_.dataType for f_ in schema.fields}
-            for gcol, gexpr in gencols.items():
-                # recompute over the POST-update projection
-                new_rows = new_rows.withColumn(
-                    gcol, F.expr(gexpr).cast(dtypes[gcol]))
-            self._enforce_constraints(new_rows, snap.metadata.configuration)
-            new_adds = _stage_dataframe(
-                new_rows, self.table_uri, snap.partition_columns, schema,
-                _writer_options(writer_properties),
-                mapping=_column_mapping(snap.metadata.configuration),
-                bloom_spec=_bloom_columns(snap.metadata.configuration),
-            )
-            rows_by_key = {a.log_key: a.live_records for a in touched}
-            full = [a for a in touched
-                    if hits[a.log_key] == rows_by_key[a.log_key]]
-            part_files = [a for a in touched
-                          if hits[a.log_key] < rows_by_key[a.log_key]]
-            dv_adds = (
-                self._write_deletion_vector(
-                    snap, part_files, match, hits,
-                    positions=matched_full.select(
-                        "__path", F.col("__ri").alias("row_index")))
-                if part_files else []
-            )
-            return self._dml_compacting(
-                self._commit_rewrite(
-                    snap, full + part_files, dv_adds + new_adds, "UPDATE",
-                    operation_parameters={**params,
-                                          "mode": "deletion_vector"},
-                    extra_metrics={
-                        "num_updated_rows": updated,
-                        "num_copied_rows": 0,
-                        "num_deletion_vectors": len(dv_adds),
-                    },
-                ),
-                snap.metadata.configuration,
-            )
-
-        src = self._read_files(snap, touched)
-        out_cols = []
-        for f_ in schema.fields:
-            if f_.name in assignments:
-                out_cols.append(
-                    F.when(match, F.expr(assignments[f_.name])
-                           .cast(f_.dataType))
-                    .otherwise(F.col(f_.name)).alias(f_.name))
-            else:
-                out_cols.append(F.col(f_.name))
-        updated_df = src.select(*out_cols, match.alias("__m"))
-        dtypes = {f_.name: f_.dataType for f_ in schema.fields}
-        for gcol, gexpr in gencols.items():
-            # matched rows recompute over the post-update projection;
-            # unmatched rows in the rewritten file keep their value
-            updated_df = updated_df.withColumn(
-                gcol,
-                F.when(F.col("__m"),
-                       F.expr(gexpr).cast(dtypes[gcol]))
-                .otherwise(F.col(gcol)))
-        updated_df = updated_df.drop("__m").select(
-            *[f_.name for f_ in schema.fields])
-        self._enforce_constraints(updated_df, snap.metadata.configuration)
-        adds = _stage_dataframe(
-            updated_df, self.table_uri,
-            snap.partition_columns, schema,
-            _writer_options(writer_properties),
-            mapping=_column_mapping(snap.metadata.configuration),
-            bloom_spec=_bloom_columns(snap.metadata.configuration),
-        )
-        copied = sum(a.num_records for a in adds) - updated
-        return self._dml_compacting(
-            self._commit_rewrite(
-                snap, touched, adds, "UPDATE",
-                operation_parameters=params,
-                extra_metrics={"num_updated_rows": updated,
-                               "num_copied_rows": copied},
-            ),
-            snap.metadata.configuration,
-        )
+        return self._rewrite_matching(
+            snap, "UPDATE", predicate, partition_dnf,
+            assignments=assignments, use_dv=use_dv,
+            writer_properties=writer_properties)
 
     def restore(self, version: Optional[int] = None, *,
                 timestamp_as_of=None) -> dict[str, Any]:

@@ -336,12 +336,12 @@ def test_sql_lit_renders_executable_typed_literals(spark):
     import decimal
     import math
 
-    from dagster_delta_spark.streaming.table_sink import _sql_lit
+    from dagster_delta_spark.plans.predicates import _sql_literal
 
     row = spark.sql(
         "SELECT "
         + ", ".join(
-            f"{_sql_lit(v)} AS c{i}"
+            f"{_sql_literal(v)} AS c{i}"
             for i, v in enumerate([
                 None, True, -7, 2.5, float("inf"), float("-inf"),
                 float("nan"), decimal.Decimal("12.3400"), "O'Brien\\x",
@@ -353,10 +353,10 @@ def test_sql_lit_renders_executable_typed_literals(spark):
     assert math.isinf(row[5]) and row[5] < 0 and math.isnan(row[6])
     assert float(row[7]) == 12.34 and row[8] == "O'Brien\\x"
     ts = spark.sql(
-        f"SELECT typeof({_sql_lit(datetime.date(2024, 2, 29))}) AS dt, "
-        f"CAST({_sql_lit(datetime.date(2024, 2, 29))} AS STRING) AS ds, "
-        f"typeof({_sql_lit(datetime.datetime(2024, 2, 29, 12, 30, 45, 123456))}) AS tt, "
-        f"CAST({_sql_lit(datetime.datetime(2024, 2, 29, 12, 30, 45, 123456))} AS STRING) AS tss"
+        f"SELECT typeof({_sql_literal(datetime.date(2024, 2, 29))}) AS dt, "
+        f"CAST({_sql_literal(datetime.date(2024, 2, 29))} AS STRING) AS ds, "
+        f"typeof({_sql_literal(datetime.datetime(2024, 2, 29, 12, 30, 45, 123456))}) AS tt, "
+        f"CAST({_sql_literal(datetime.datetime(2024, 2, 29, 12, 30, 45, 123456))} AS STRING) AS tss"
     ).head()
     assert ts["dt"] == "date" and ts["ds"] == "2024-02-29"
     assert ts["tt"] == "timestamp"
@@ -499,7 +499,7 @@ def test_sql_lit_string_roundtrip_property(spark):
     the wrong rows or fails the stream)."""
     from hypothesis import HealthCheck, given, settings, strategies as st
 
-    from dagster_delta_spark.streaming.table_sink import _sql_lit
+    from dagster_delta_spark.plans.predicates import _sql_literal
 
     cases = []
 
@@ -515,7 +515,7 @@ def test_sql_lit_string_roundtrip_property(spark):
     uniq = sorted(set(cases))
     row = spark.sql(
         "SELECT " + ", ".join(
-            f"{_sql_lit(s)} AS c{i}" for i, s in enumerate(uniq))
+            f"{_sql_literal(s)} AS c{i}" for i, s in enumerate(uniq))
     ).head()
     for i, s in enumerate(uniq):
         assert row[i] == s, repr(s)

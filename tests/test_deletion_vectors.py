@@ -190,10 +190,13 @@ def test_stats_report_live_records(spark, tmp_path):
 
 
 def test_dv_dml_single_scan(spark, tmp_path, monkeypatch):
-    """r15 optimization pin: DV-flavored DELETE and UPDATE read the
-    candidate files exactly ONCE — discovery positions, hit counts
-    and the sidecar all derive from the single checkpointed scan
-    (was 2 scans for delete, 3 for update)."""
+    """Scan and job traffic of every DML flavour, pinned.  A DV
+    flavour reads the candidate files exactly ONCE: discovery
+    positions, hit counts, the sidecar and UPDATE's new rows all
+    derive from one checkpointed scan.  A copy flavour reads them
+    twice: one counting discovery, one rewrite read of the touched
+    files.  Spark jobs are counted in the operation's own job group
+    and may only go down."""
     calls = []
     orig = DeltaSparkTable._read_files
 
@@ -202,20 +205,46 @@ def test_dv_dml_single_scan(spark, tmp_path, monkeypatch):
         return orig(self, snap, files, *a, **kw)
 
     monkeypatch.setattr(DeltaSparkTable, "_read_files", spy)
+    sc = spark.sparkContext
 
-    t = _t(spark, tmp_path, "a")
-    calls.clear()
-    t.delete("id % 5 = 1", use_dv=True)
-    assert len(calls) == 1, calls
+    def src(ids):
+        return spark.createDataFrame(
+            [(i, str(i % 4), -i) for i in ids], "id long, grp string, v long")
 
-    u = _t(spark, tmp_path, "b")
-    calls.clear()
-    u.update({"v": "v + 1"}, "id % 5 = 1", use_dv=True)
-    assert len(calls) == 1, calls
-
-    # results stay correct
-    assert sorted(r["id"] for r in t.read().collect()) == [
-        i for i in range(20) if i % 5 != 1]
-    got = {r["id"]: r["v"] for r in u.read().collect()}
-    assert got == {i: i * 10 + (1 if i % 5 == 1 else 0)
-                   for i in range(20)}
+    flavours = {
+        "delete": lambda t, dv: t.delete("id % 5 = 1", use_dv=dv),
+        "update": lambda t, dv: t.update(
+            {"v": "v + 1"}, "id % 5 = 1", use_dv=dv),
+        "replace_where": lambda t, dv: t.replace_where(
+            src([1, 6, 11, 16]), "id % 5 = 1", use_dv=dv),
+    }
+    # (_read_files calls, at most this many Spark jobs)
+    want = {("delete", False): (2, 3), ("delete", True): (1, 5),
+            ("update", False): (2, 3), ("update", True): (1, 6),
+            ("replace_where", False): (2, 8),
+            ("replace_where", True): (1, 10)}
+    for name, run in flavours.items():
+        for dv in (False, True):
+            t = _t(spark, tmp_path, f"{name}-{dv}")
+            group = f"dml-pin-{name}-{dv}"
+            calls.clear()
+            sc.setJobGroup(group, group)
+            try:
+                run(t, dv)
+            finally:
+                for key in ("spark.jobGroup.id", "spark.job.description",
+                            "spark.job.interruptOnCancel"):
+                    sc.setLocalProperty(key, None)
+            jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+            reads, max_jobs = want[(name, dv)]
+            assert len(calls) == reads, (name, dv, calls)
+            assert jobs <= max_jobs, (name, dv, jobs)
+            rows = {r["id"]: r["v"] for r in t.read().collect()}
+            hit = {1, 6, 11, 16}
+            if name == "delete":
+                assert rows == {i: i * 10 for i in range(20) if i not in hit}
+            elif name == "update":
+                assert rows == {i: i * 10 + (i in hit) for i in range(20)}
+            else:
+                assert rows == {i: -i if i in hit else i * 10
+                                for i in range(20)}

@@ -114,24 +114,16 @@ def _scattered(spark, n=8000, files=8):
 
 
 def _spy_candidates(monkeypatch, t):
-    """Record the candidate list every discovery scan sees — both the
-    counting discovery (copy DML) and the r15 single-scan position
-    discovery (DV DML)."""
+    """Record the candidate list every DML discovery scan sees, copy
+    and DV flavours alike: all go through ``_discover_matches``."""
     seen = []
-    orig = DeltaSparkTable._per_file_hits
-    orig_pos = DeltaSparkTable._dml_discovery_positions
+    orig = DeltaSparkTable._discover_matches
 
-    def spy(self, snap, candidates, match):
+    def spy(self, snap, candidates, *a, **kw):
         seen.append(list(candidates))
-        return orig(self, snap, candidates, match)
+        return orig(self, snap, candidates, *a, **kw)
 
-    def spy_pos(self, snap, candidates, match):
-        seen.append(list(candidates))
-        return orig_pos(self, snap, candidates, match)
-
-    monkeypatch.setattr(DeltaSparkTable, "_per_file_hits", spy)
-    monkeypatch.setattr(
-        DeltaSparkTable, "_dml_discovery_positions", spy_pos)
+    monkeypatch.setattr(DeltaSparkTable, "_discover_matches", spy)
     return seen
 
 

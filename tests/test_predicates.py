@@ -318,3 +318,19 @@ def test_dnf_to_column_supports_full_op_set(spark):
             dnf_to_column([("x", ">", 2), ("x", "<=", 5)])).collect()
     )
     assert got == [3, 4, 5]
+
+
+def test_read_with_infinite_float_bound(spark, tmp_table):
+    """A non-finite float bound renders as a Spark double literal, so
+    the read filter parses; bare ``inf`` resolved as a column name."""
+    from dagster_delta_spark import DeltaSparkTable, WriteMode
+
+    t = DeltaSparkTable(spark, tmp_table)
+    t.write(spark.createDataFrame(
+        [(1.0,), (-2.5,), (float("inf"),), (float("-inf"),)], "x double"),
+        WriteMode.error)
+    got = sorted(r.x for r in t.read(dnf=[("x", "<", float("inf"))]).collect())
+    assert got == [float("-inf"), -2.5, 1.0]
+    assert dnf_to_sql([("x", ">", float("-inf"))]) == (
+        "x > double('-infinity')")
+    assert t.read(dnf=[("x", ">", float("-inf"))]).count() == 3

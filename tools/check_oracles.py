@@ -8,9 +8,11 @@ Usage: python tools/check_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -29,7 +31,6 @@ def _correctness_payloads(root: str) -> list[str]:
     tolerates per-file read errors like the pre-r6 code did."""
     import fnmatch
     import glob
-    import os
     import subprocess
 
     try:
@@ -187,10 +188,7 @@ def main():
     # only (a targeted `check_oracles.py dir q` debug run shouldn't
     # gate).
     if not only:
-        import os
-
-        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        recorded = recorded_entries(root, set(oracles))
+        recorded = recorded_entries(ROOT, set(oracles))
         never_recorded = [
             n for n in list(qs)[50:] if n not in recorded
         ]

@@ -7,10 +7,12 @@ Usage: python tools/explain_audit.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 AUDITED = [
     "q1_pricing_summary",
@@ -204,7 +206,8 @@ def main() -> None:
         out.extend(lines[:30])
         out.append("```")
         out.append("")
-    with open("/root/repo/docs/PLANS.md", "w", encoding="utf-8") as f:
+    with open(os.path.join(ROOT, "docs", "PLANS.md"), "w",
+              encoding="utf-8") as f:
         f.write("\n".join(out))
     print(f"wrote docs/PLANS.md ({len(AUDITED)} queries)")
     spark.stop()

@@ -8,9 +8,11 @@ callable's docstring.  Regenerate after registry changes:
 from __future__ import annotations
 
 import inspect
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def first_sentence(doc: str | None) -> str:
@@ -59,7 +61,7 @@ def main() -> None:
             desc = desc[:177] + "..."
         lines.append(f"| {i} | `{name}` | {target_of(fn)} | {check} | {desc} |")
     lines.append("")
-    with open("/root/repo/docs/OPERATORS.md", "w") as f:
+    with open(os.path.join(ROOT, "docs", "OPERATORS.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote docs/OPERATORS.md ({len(qs)} entries, "
           f"{len(oracles & set(qs))} oracle-backed)")
