@@ -21,6 +21,11 @@ uses, dd/dagster_delta/handler.py:23-27 — and delta-spark):
   ``_last_checkpoint`` pointer) and V2 (UUID-named) checkpoints —
   JSON or parquet main files, ``checkpointMetadata`` verified,
   ``sidecar`` actions resolved under ``_sidecars/``.
+- **Log replay**: listing ``_delta_log``, choosing the segment that
+  reconstructs the head (JSON from version 0, or a checkpoint plus
+  its contiguous JSON tail), decoding each JSON commit once, and the
+  reader-protocol gate.  ``convert_from_delta`` and
+  ``read_delta_changes`` both read logs through these.
 
 Decoders VERIFY everything the spec lets them verify (magic, CRC,
 cardinality, version byte) and raise :class:`DeltaInteropError`
@@ -38,7 +43,7 @@ import re
 import struct
 import uuid
 import zlib
-from typing import Any, Optional
+from typing import Any, NamedTuple, Optional
 
 __all__ = [
     "DeltaInteropError",
@@ -52,6 +57,10 @@ __all__ = [
     "find_classic_checkpoint",
     "read_checkpoint_actions",
     "write_classic_checkpoint",
+    "READER_FEATURES",
+    "LogSegment",
+    "read_log_segment",
+    "check_reader_protocol",
 ]
 
 
@@ -624,6 +633,122 @@ def read_checkpoint_actions(
             "checkpointMetadata actions; the spec requires exactly "
             "one — truncated or corrupted checkpoint")
     return actions
+
+
+# ---------------------------------------------------------------------------
+# Log replay: listing, segment selection, commit decoding, reader gate
+# ---------------------------------------------------------------------------
+
+#: Reader features this engine decodes.  columnMapping and
+#: deletionVectors translate into the engine's own machinery;
+#: v2Checkpoint is a log format :func:`read_checkpoint_actions`
+#: replays; typeWidening is a no-op to honor, because reads use the
+#: explicit stored (widened) schema and Spark's parquet reader performs
+#: exactly the spec's promotions (int class, float->double, decimal
+#: widening).  Everything else refuses.
+READER_FEATURES = frozenset({"columnMapping", "deletionVectors",
+                             "v2Checkpoint", "typeWidening",
+                             "typeWidening-preview"})
+
+_JSON_COMMIT = re.compile(r"^(\d+)\.json$")
+
+
+class LogSegment(NamedTuple):
+    """The part of a ``_delta_log`` that reconstructs its head: either
+    every JSON commit from version 0 (``checkpoint`` is None), or the
+    actions of the checkpoint at version ``checkpoint`` followed by the
+    contiguous JSON commits after it.  ``commits`` holds each replayed
+    JSON commit's actions, decoded once, as ``(version, actions)`` in
+    version order; ``head`` is the version the segment reconstructs."""
+
+    head: int
+    checkpoint: Optional[int]
+    checkpoint_actions: list[dict[str, Any]]
+    commits: list[tuple[int, list[dict[str, Any]]]]
+
+
+def _read_commit(dlog: str, version: int) -> list[dict[str, Any]]:
+    """One JSON commit's actions (one JSON object per non-blank line)."""
+    with open(os.path.join(dlog, f"{version:020d}.json"),
+              encoding="utf-8") as f:
+        return [json.loads(line) for line in f if line.strip()]
+
+
+def read_log_segment(dlog: str) -> LogSegment:
+    """Choose and decode the segment that reconstructs the head of the
+    Delta log at ``dlog``: the full JSON log when it runs contiguously
+    from version 0, else the newest decodable checkpoint plus the
+    contiguous JSON tail after it (what a table looks like once log
+    cleanup aged out its early commits).
+
+    Even with contiguous JSON 0..N, anything checkpoint-shaped claiming
+    a version beyond N means the JSON understates the head (a
+    partially-copied log: cleanup cannot produce it, a botched copy
+    can), so the checkpoint path is taken, and a checkpoint claim that
+    checkpoint + tail cannot reach refuses rather than replaying a
+    stale state.  Junk checkpoints at or below the JSON head change
+    nothing."""
+    if not os.path.isdir(dlog):
+        raise FileNotFoundError(f"no Delta log at {dlog!r}")
+    versions = sorted(int(m.group(1)) for n in os.listdir(dlog)
+                      for m in [_JSON_COMMIT.match(n)] if m)
+    json_complete = bool(versions) and \
+        versions == list(range(len(versions)))
+    cp_hint = newest_checkpoint_hint(dlog)
+    if json_complete and (cp_hint is None or cp_hint <= versions[-1]):
+        return LogSegment(versions[-1], None, [],
+                          [(v, _read_commit(dlog, v)) for v in versions])
+    cp = find_classic_checkpoint(dlog)
+    if cp is None:
+        if json_complete:
+            raise DeltaInteropError(
+                f"Delta log under {dlog!r} claims a checkpoint at "
+                f"version {cp_hint} ahead of its JSON tail (head "
+                f"{versions[-1]}) but no decodable checkpoint exists; "
+                "the JSON understates the head state — refusing a "
+                "silently-stale replay (partially-copied log?)")
+        raise DeltaInteropError(
+            f"Delta log under {dlog!r} is neither a contiguous JSON "
+            f"tail from version 0 (found {versions[:3]}...) nor "
+            "checkpointed; cannot reconstruct the head state")
+    cpv, cppath = cp
+    tail = [v for v in versions if v > cpv]
+    if tail != list(range(cpv + 1, cpv + 1 + len(tail))):
+        raise DeltaInteropError(
+            f"JSON commits after checkpoint version {cpv} are not "
+            f"contiguous ({tail[:4]}...); the head state cannot be "
+            "reconstructed")
+    # stale JSON below the checkpoint may survive cleanup: the head is
+    # the max of both sources
+    head = max([cpv] + versions[-1:])
+    if cp_hint is not None and cp_hint > head:
+        raise DeltaInteropError(
+            f"Delta log under {dlog!r} claims a checkpoint at version "
+            f"{cp_hint} but checkpoint + JSON tail reconstruct only "
+            f"version {head}; refusing a silently-stale replay "
+            "(partially-copied log?)")
+    return LogSegment(head, cpv, read_checkpoint_actions(cppath, cpv),
+                      [(v, _read_commit(dlog, v)) for v in tail])
+
+
+def check_reader_protocol(protocol: dict[str, Any], root: str) -> None:
+    """Refuse a ``protocol`` action whose reader requirements lie
+    outside what this engine decodes (reader versions 1-3, features in
+    :data:`READER_FEATURES`; reader version 2 implies columnMapping)."""
+    mrv = int(protocol.get("minReaderVersion", 1))
+    features = set(protocol.get("readerFeatures") or [])
+    if mrv == 2:
+        features.add("columnMapping")
+    if mrv > 3:
+        raise DeltaInteropError(
+            f"Delta table at {root!r} requires minReaderVersion={mrv}; "
+            "this engine decodes reader versions 1-3 only")
+    unsupported = sorted(features - READER_FEATURES)
+    if unsupported:
+        raise DeltaInteropError(
+            f"Delta table at {root!r} requires reader feature(s) "
+            f"{unsupported} this engine does not decode; reading it "
+            "would misread the existing bytes")
 
 
 def write_classic_checkpoint(

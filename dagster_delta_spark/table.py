@@ -37,7 +37,7 @@ import uuid
 from datetime import date, datetime, timedelta, timezone
 from functools import lru_cache
 from decimal import Decimal
-from typing import Any, Callable, Iterable, Optional, Sequence
+from typing import Any, Callable, Iterable, NamedTuple, Optional, Sequence
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -177,19 +177,6 @@ def _coerce_dnf_literal(value: Any, dtype: DataType) -> Any:
 #: metadata commit, and concurrent writers stay consistent because
 #: they stage against physicals that no rename can move.
 _COLMAP_KEY = "dds.columnMapping"
-#: Delta reader features this engine can decode on convert_from_delta
-#: (columnMapping -> dds.columnMapping; deletionVectors -> sidecar
-#: masks via delta_interop).  Everything else refuses pointedly.
-#: typeWidening (r15): files written under a NARROWER type read
-#: under the widened schema — this engine reads with the explicit
-#: stored schema, and Spark's parquet reader performs exactly the
-#: spec's promotions (int class, float->double, decimal widening;
-#: verified empirically), so the feature is a no-op to honor.  The
-#: delta.typeWidening field-metadata bookkeeping is KEPT inert in the
-#: stored schema so the export direction can re-declare the feature.
-_DELTA_READER_FEATURES = {"columnMapping", "deletionVectors",
-                          "v2Checkpoint", "typeWidening",
-                          "typeWidening-preview"}
 #: types whose min/max stats BOTH engines render identically (the
 #: convert/export stats carry-over set — ONE constant so the two
 #: directions cannot silently diverge).  Dates are also identical
@@ -1201,20 +1188,16 @@ def _stage_dataframe(
         num_rows, stats = stats_by_path[src]
         if num_rows == 0:
             continue
-        part_values: dict[str, Optional[str]] = {}
-        if rel_dir:
-            for comp in rel_dir.split(os.sep):
-                k, _, v = comp.partition("=")
-                part_values[k] = None if v == HIVE_DEFAULT_PARTITION else unquote(v)
-        dest_dir = os.path.join(table_uri, rel_dir) if rel_dir else table_uri
+        rel = os.path.join(rel_dir, fn)
+        dest_dir = os.path.join(table_uri, rel_dir)
         os.makedirs(dest_dir, exist_ok=True)
         size = os.path.getsize(src)
-        os.replace(src, os.path.join(dest_dir, fn))
+        os.replace(src, os.path.join(table_uri, rel))
         adds.append(AddFile(
-            path=os.path.join(rel_dir, fn) if rel_dir else fn,
+            path=rel,
             size=size,
             num_records=num_rows,
-            partition_values=part_values,
+            partition_values=_hive_layout(rel),
             stats=stats,
             modification_time=now,
         ))
@@ -3206,6 +3189,17 @@ class DeltaSparkTable:
                 "replace_where on an identity table is not supported: "
                 "inserted rows need id allocation — use write(append) "
                 "or merge, which allocate from the high-water mark")
+        # write()'s type rule for every column the caller supplies:
+        # _conform only reorders and null-fills, so a mismatched input
+        # would stage files of another type inside the table
+        shared = [f.name for f in schema.fields if f.name in df.columns]
+        table_part = StructType([schema[c] for c in shared])
+        given = StructType([df.schema[c] for c in shared])
+        if not _schemas_equivalent(table_part, given):
+            raise SchemaMismatchError(
+                f"replace_where input types {given.simpleString()} != "
+                f"table types {table_part.simpleString()}; cast the "
+                "input to the table's types")
         gencols = _generated_columns(cfg)
         gen_provided: dict[str, str] = {}
         for c, gexpr in gencols.items():
@@ -4809,20 +4803,17 @@ def convert_to_table(
         raise ValueError(f"no parquet files under {root!r} to convert")
     rel_files.sort(key=lambda t: t[1])
 
-    # decode hive partition dirs with the staged-write rules
+    # decode hive partition dirs with the staged-write rules; every
+    # directory level must be one col=value component
     part_values_by_rel: dict[str, dict[str, Optional[str]]] = {}
     key_seqs = set()
     for _ab, rel in rel_files:
-        comps = rel.split(os.sep)[:-1]
-        pv: dict[str, Optional[str]] = {}
-        for comp in comps:
-            k, eq, v = comp.partition("=")
-            if not eq:
-                raise ValueError(
-                    f"non-hive subdirectory {comp!r} under {root!r} "
-                    "(expected col=value); move foreign files out or "
-                    "convert a clean directory")
-            pv[k] = None if v == HIVE_DEFAULT_PARTITION else unquote(v)
+        pv = _hive_layout(rel)
+        if len(pv) != rel.count(os.sep):
+            raise ValueError(
+                f"non-hive subdirectory in {os.path.dirname(rel)!r} "
+                f"under {root!r} (expected col=value at every level); "
+                "move foreign files out or convert a clean directory")
         part_values_by_rel[rel] = pv
         key_seqs.add(tuple(pv))
     if len(key_seqs) != 1:
@@ -4958,280 +4949,161 @@ def convert_to_table(
     }
 
 
-def convert_from_delta(
-    spark: SparkSession,
-    path: str,
-    *,
-    dry_run: bool = False,
-    preserve_history: bool = False,
-) -> dict[str, Any]:
-    """Onboard a REAL Delta Lake table (the public delta-io protocol's
-    ``_delta_log/`` JSON commits — what delta-rs, and therefore the
-    reference I/O manager (dd/dagster_delta/handler.py:23-27), writes)
-    into this engine's format IN PLACE: replay the Delta log's
-    protocol / metaData / add / remove / txn actions to the head
-    state, then publish ONE version-0 commit in OUR log referencing
-    the SAME data files — no bytes move.  The interop story: a user
-    of the reference can point this engine at their existing Delta
-    tables and keep querying.
+#: Spark types a column-mapped Delta column may have.  Physical names
+#: inside nested types would need per-level read aliasing, which this
+#: engine's top-level column mapping does not do.
+_DELTA_FLAT_TYPES = (ByteType, ShortType, IntegerType, LongType,
+                     FloatType, DoubleType, DecimalType, StringType,
+                     BooleanType, DateType, TimestampType, BinaryType)
+#: Delta writer features with an exact engine equivalent; any other
+#: declared feature refuses, because its guarantee would be silently
+#: dropped.  v2Checkpoint is a log-format capability, not a data
+#: guarantee: it describes how checkpoints in THEIR log are written,
+#: and a convert replaces that log wholesale.
+_DELTA_WRITER_FEATURES = frozenset({
+    "appendOnly", "checkConstraints", "invariants", "columnMapping",
+    "deletionVectors", "generatedColumns", "v2Checkpoint",
+    "typeWidening", "typeWidening-preview"})
 
-    r14 widened the decodable surface (delta_interop.py implements the
-    public spec bits): CLASSIC CHECKPOINT REPLAY (a log whose early
-    JSON commits aged out replays ``_last_checkpoint`` + the
-    checkpoint parquet + the contiguous JSON tail — the common aged
-    delta-rs table), DELETION VECTORS (the roaring-bitmap DV decodes
-    — Z85 inline and on-disk framings, CRC/cardinality verified —
-    into this engine's own sidecar masks; masked rows stay masked),
-    and COLUMN MAPPING mode=name (physical names translate into
-    ``dds.columnMapping``), plus date/timestamp stats re-rendering.
 
-    Honest scope (refusals are pointed, never silent):
+class _DeltaMetadata(NamedTuple):
+    """A Delta head's metaData translated into this engine's terms."""
 
-    - INCOMPLETE multi-part checkpoints and corrupted v2 checkpoints
-      (version mismatch / missing sidecar / unreadable parquet)
-      refuse; complete multi-part AND v2 (UUID-named, JSON or
-      parquet, sidecar-based) checkpoints replay.  A JSON tail that
-      is contiguous neither from version 0 nor from a checkpoint
-      refuses.
-    - ``minReaderVersion`` ≤ 3 with reader features ⊆ {columnMapping,
-      deletionVectors}; anything newer refuses.
-    - ``delta.columnMapping.mode='id'`` converts when every live
-      file's footer PROVES field-id and physical-name resolution
-      agree (what delta-spark actually writes; a diverging file
-      refuses — r15).  Column-mapped tables with partition columns
-      convert when the partition columns are un-renamed (physical ==
-      logical, the upgraded-table norm); RENAMED partition columns,
-      nested types, and physical-name field metadata without a
-      mapping mode still refuse.
-    - corrupted deletion vectors (bad magic / CRC / cardinality /
-      out-of-range row index) refuse.
-    - IDENTITY columns refuse (id-allocation strategies differ
-      between engines); per-field GENERATION EXPRESSIONS and
-      INVARIANTS translate instead (r14) — they are Spark SQL, which
-      this engine runs, so they land as ``dds.generatedColumns`` /
-      ``dds.constraints.invariant_<col>`` and keep enforcing.
-    - absolute/URI add paths (shallow clones) refuse; every relative
-      add must exist on disk under ``path``.
+    schema: StructType
+    pcols: list[str]
+    cfg: dict[str, str]
+    #: behaviour-claiming delta.* keys stripped from ``cfg``
+    dropped: dict[str, str]
+    #: delta.columnMapping.mode is 'name' or 'id'
+    colmap_mode: bool
+    #: (field id, physical name) per data column of an 'id'-mode table
+    id_fields: list[tuple[int, str]]
+    #: column type by PHYSICAL name, the key Delta stats use
+    stat_types: dict[str, DataType]
 
-    What carries over: the schema (Delta's ``schemaString`` IS the
-    Spark StructType JSON this engine stores), partition columns and
-    values, ``delta.appendOnly`` (mapped to ``dds.appendOnly``), the
-    remaining configuration keys verbatim (inert provenance) EXCEPT
-    behavior-claiming ones — ``delta.enableChangeDataFeed``,
-    ``delta.enableDeletionVectors``, ``delta.autoOptimize.*`` are
-    STRIPPED (this engine does not run that machinery; carrying the
-    claim would misdescribe the table) and reported in the result's
-    ``dropped_configuration``,
-    SetTransaction app versions (streaming exactly-once ledgers
-    resume), and per-file stats SANITIZED for pruning soundness:
-    numRecords and nullCount always; minValues/maxValues only for
-    integral / float / string / boolean columns — Delta renders
-    dates, timestamps and decimals differently than this engine's
-    harvester, and a rendering mismatch in ``_file_matches`` could
-    mis-prune (dropped entries merely cost skipping, never
-    correctness).
 
-    The original ``_delta_log`` stays untouched, but after
-    conversion THIS engine's log is the table: commits a Delta
-    writer makes afterwards are not reflected here.  ``dry_run``
-    reports without committing.
+def _delta_column_mapping(
+    schema: StructType, mode: Optional[str], pcols: Sequence[str],
+) -> tuple[StructType, dict[str, str], list[tuple[int, str]]]:
+    """Translate a Delta schema's column mapping.  Returns the schema
+    without ``delta.columnMapping.*`` field metadata, ``{logical:
+    physical}`` for the renamed columns (the ``dds.columnMapping``
+    shape), and (field id, physical name) per data column in 'id' mode.
 
-    ``preserve_history=True`` (r15) replays EVERY Delta JSON commit
-    as one native commit instead of folding to a single version-0
-    snapshot — time travel, ``read_changes`` and the SetTransaction
-    ledger then span the pre-convert history.  Operation names are
-    synthesized so this engine's classify_commit semantics hold by
-    construction (the original Delta operation rides in
-    operationParameters); per-version metaData carries that
-    version's schema with the head's translated configuration.
-    Scope (pointed refusals): full JSON from version 0 only (no
-    checkpoint reconstruction), every historical file still on disk,
-    no deletion vectors anywhere in the history, no column mapping,
-    no contract-carrying historical schemas, stable partition
-    layout.  The snapshot convert covers everything the replay
-    refuses."""
-    root = str(path)
-    dlog = os.path.join(root, "_delta_log")
-    if not os.path.isdir(dlog):
-        raise FileNotFoundError(f"no Delta log at {dlog!r}")
-    if tablelog.table_exists(root):
-        raise TableExistsError(
-            f"{root!r} already has a {tablelog.LOG_DIR} transaction "
-            "log; convert_from_delta only onboards tables not yet "
-            "converted")
-    versions = sorted(
-        int(n[:-5]) for n in os.listdir(dlog)
-        if n.endswith(".json") and n[:-5].isdigit())
-    json_complete = bool(versions) and versions[0] == 0 and \
-        versions == list(range(len(versions)))
-    # replay plan: either the full JSON log from version 0, or a
-    # classic single-part CHECKPOINT plus the contiguous JSON tail
-    # after it (what a delta-rs table looks like once log cleanup has
-    # aged out the early JSON commits — the common aged-table shape)
-    batches: list[list[dict[str, Any]]] = []
-    # even with contiguous JSON 0..N, a checkpoint AHEAD of the JSON
-    # tail (partially-copied log: cleanup can't produce it, a botched
-    # rsync can) means the JSON understates the head — every real
-    # Delta reader reconstructs from the checkpoint, so replaying the
-    # stale JSON would silently convert old data.  A light hint probe
-    # (no refusal semantics — junk checkpoints below the head stay
-    # inert) decides; anything checkpoint-shaped ahead routes through
-    # find_classic_checkpoint, which refuses pointedly when the ahead
-    # state is unreconstructable.
-    cp_hint = delta_interop.newest_checkpoint_hint(dlog)
-    if json_complete and (cp_hint is None or cp_hint <= versions[-1]):
-        replay_versions = versions
-        head_delta_version = versions[-1]
-    else:
-        cp = delta_interop.find_classic_checkpoint(dlog)
-        if cp is None:
-            if json_complete:
+    Refuses an unknown mode, a nested type under mode name or id, a
+    renamed partition column (this engine's partition machinery —
+    hive directories, partitionValues, pruning — is keyed by logical
+    name), an 'id'-mode data column without an id, and a physical name
+    that differs from the logical one while the mode is unset or
+    'none' (reading logical names against physically-named file
+    columns would return all-NULL data)."""
+    if mode and mode not in ("none", "name", "id"):
+        raise ValueError(
+            f"delta.columnMapping.mode={mode!r} is not a Delta column "
+            "mapping mode this engine decodes (spec modes: none, "
+            "name, id)")
+    mapped = mode in ("name", "id")
+    colmap: dict[str, str] = {}
+    id_fields: list[tuple[int, str]] = []
+    fields = []
+    for fld in schema.fields:
+        md = dict(fld.metadata or {})
+        phys = md.get("delta.columnMapping.physicalName")
+        renamed = bool(phys) and phys != fld.name
+        if not mapped:
+            if renamed:
                 raise ValueError(
-                    f"Delta log under {dlog!r} claims a checkpoint at "
-                    f"version {cp_hint} ahead of its JSON tail (head "
-                    f"{versions[-1]}) but no decodable checkpoint "
-                    "exists; the JSON understates the head state — "
-                    "refusing a silently-stale convert "
-                    "(partially-copied log?)")
+                    f"column {fld.name!r} carries physical name "
+                    f"{phys!r} but delta.columnMapping.mode is "
+                    f"{mode!r}; refusing an internally inconsistent "
+                    "log rather than reading the wrong columns")
+            fields.append(fld)
+            continue
+        if not isinstance(fld.dataType, _DELTA_FLAT_TYPES):
             raise ValueError(
-                f"Delta log under {dlog!r} is neither a contiguous "
-                f"JSON tail from version 0 (found {versions[:3]}...) "
-                "nor checkpointed; cannot reconstruct the head state")
-        cpv, cppath = cp
-        tail = [v for v in versions if v > cpv]
-        if tail != list(range(cpv + 1, cpv + 1 + len(tail))):
-            raise ValueError(
-                f"JSON commits after checkpoint version {cpv} are not "
-                f"contiguous ({tail[:4]}...); the head state cannot "
-                "be reconstructed")
-        batches.append(
-            delta_interop.read_checkpoint_actions(cppath, cpv))
-        replay_versions = tail
-        # stale JSON below the checkpoint may survive cleanup — the
-        # replayed head is the max of both sources, not versions[-1]
-        head_delta_version = max(
-            [cpv] + ([versions[-1]] if versions else []))
-        if cp_hint is not None and cp_hint > head_delta_version:
-            # something checkpoint-shaped (orphaned parts, a bare
-            # pointer) claims a version BEYOND what checkpoint +
-            # JSON tail reconstruct — replaying would silently
-            # convert a stale state (partially-copied log)
-            raise ValueError(
-                f"Delta log under {dlog!r} claims a checkpoint at "
-                f"version {cp_hint} but checkpoint + JSON tail "
-                f"reconstruct only version {head_delta_version}; "
-                "refusing a silently-stale convert "
-                "(partially-copied log?)")
-    for v in replay_versions:
-        with open(os.path.join(dlog, f"{v:020d}.json"),
-                  encoding="utf-8") as f:
-            batches.append([json.loads(line) for line in f
-                            if line.strip()])
+                f"column-mapped Delta log: column {fld.name!r} has "
+                f"nested type {fld.dataType.simpleString()}; physical "
+                "names inside nested types do not map to this "
+                "engine's top-level column mapping")
+        md.pop("delta.columnMapping.physicalName", None)
+        cid = md.pop("delta.columnMapping.id", None)
+        if fld.name in pcols:
+            if renamed:
+                raise ValueError(
+                    f"partition column {fld.name!r} carries physical "
+                    f"name {phys!r}: renamed partition columns do not "
+                    "decode (partition directories and partitionValues "
+                    "are keyed physical while this engine's partition "
+                    "machinery is logical)")
+        elif mode == "id":
+            if cid is None:
+                raise ValueError(
+                    f"delta.columnMapping.mode='id' but column "
+                    f"{fld.name!r} has no delta.columnMapping.id — "
+                    "internally inconsistent log, refusing")
+            id_fields.append((int(cid), str(phys or fld.name)))
+        if renamed:
+            colmap[fld.name] = str(phys)
+        fields.append(StructField(fld.name, fld.dataType, fld.nullable,
+                                  md))
+    return StructType(fields), colmap, id_fields
 
-    meta_action: Optional[dict[str, Any]] = None
+
+def _fold_delta_head(
+    root: str, log: delta_interop.LogSegment,
+) -> tuple[dict[str, Any], dict[str, dict[str, Any]], dict[str, int],
+           set[str]]:
+    """Convert stage 1: fold the segment's actions to the head state.
+    Returns the last metaData, the surviving add actions by URL-decoded
+    path, the SetTransaction ledger and the head's writer features.
+    Every protocol action passes the reader gate.  Adds are validated
+    later and over the surviving files only: a long-removed
+    absolute-path file must not refuse a table whose head converts."""
+    meta: Optional[dict[str, Any]] = None
     files: dict[str, dict[str, Any]] = {}
     app_versions: dict[str, int] = {}
     writer_features: set[str] = set()
-    for actions in batches:
+    for actions in [log.checkpoint_actions] + [a for _v, a in log.commits]:
         for action in actions:
             if "protocol" in action:
-                p = action["protocol"]
-                mrv = int(p.get("minReaderVersion", 1))
-                reader_features = set(p.get("readerFeatures") or [])
-                # legacy reader versions imply their feature
-                if mrv == 2:
-                    reader_features.add("columnMapping")
-                if mrv > 3:
-                    raise ValueError(
-                        f"Delta table at {root!r} requires "
-                        f"minReaderVersion={mrv}; this engine decodes "
-                        "reader versions 1-3 only")
-                unsupported_r = sorted(
-                    reader_features - _DELTA_READER_FEATURES)
-                if unsupported_r:
-                    raise ValueError(
-                        f"Delta table at {root!r} requires reader "
-                        f"feature(s) {unsupported_r} this engine does "
-                        "not decode; converting would misread the "
-                        "existing bytes")
-                writer_features = set(p.get("writerFeatures") or [])
+                delta_interop.check_reader_protocol(action["protocol"],
+                                                    root)
+                writer_features = set(
+                    action["protocol"].get("writerFeatures") or [])
             elif "metaData" in action:
-                meta_action = action["metaData"]
+                meta = action["metaData"]
             elif "add" in action:
-                # validation happens over the SURVIVING head state
-                # below, not per historical action — a long-removed
-                # absolute-path file must not refuse a table whose
-                # head is perfectly convertible
-                a = action["add"]
-                files[unquote(a["path"])] = a
+                files[unquote(action["add"]["path"])] = action["add"]
             elif "remove" in action:
                 files.pop(unquote(action["remove"]["path"]), None)
             elif "txn" in action:
                 t = action["txn"]
                 app_versions[t["appId"]] = max(
                     app_versions.get(t["appId"], -1), int(t["version"]))
-    if meta_action is None:
-        raise ValueError(f"Delta log under {dlog!r} has no metaData "
-                         "action — not a valid table")
-    dcfg = dict(meta_action.get("configuration") or {})
-    cm = dcfg.pop("delta.columnMapping.mode", None)
-    dcfg.pop("delta.columnMapping.maxColumnId", None)
-    if cm and cm not in ("none", "name", "id"):
+    if meta is None:
         raise ValueError(
-            f"delta.columnMapping.mode={cm!r} is not a Delta column "
-            "mapping mode this engine decodes (spec modes: none, "
-            "name, id)")
-    # 'id' mode resolves columns by parquet FIELD ID while this
-    # engine reads by (physical) name — it converts only when the two
-    # resolutions are PROVEN equivalent: every live file's footer
-    # must carry matching (field id, column name) pairs for every
-    # mapped column (verified below, over the head state).  That is
-    # what delta-spark actually writes, so real id-mode tables pass;
-    # a hand-mangled file where id- and name-resolution diverge
-    # refuses rather than silently reading different data.
-    colmap_mode = cm in ("name", "id")
-    # WRITER-side contracts must convert or refuse, never silently
-    # drop — the original table's writers enforced them and this
-    # engine's writers take over after conversion:
-    # (a) feature-protocol tables: only features with an exact
-    #     engine equivalent pass;
-    # (b) per-field GENERATION EXPRESSIONS and INVARIANTS are Spark
-    #     SQL — they TRANSLATE (r14) to dds.generatedColumns /
-    #     dds.constraints.invariant_<col>; IDENTITY specs refuse
-    #     (allocation strategies differ between engines);
-    # (c) delta.constraints.* MAP to dds.constraints.* (same
-    #     expression-per-key shape, enforced on every future write;
-    #     existing rows were checked by the Delta writer that
-    #     committed them).
-    # v2Checkpoint is a LOG-FORMAT capability, not a data guarantee —
-    # it describes how checkpoints in THEIR log are written, and this
-    # engine replaces that log wholesale on convert, so dropping it
-    # loses nothing a writer enforced
-    unmappable = sorted(writer_features
-                        - {"appendOnly", "checkConstraints",
-                           "invariants", "columnMapping",
-                           "deletionVectors", "generatedColumns",
-                           "v2Checkpoint", "typeWidening",
-                           "typeWidening-preview"})
-    if unmappable:
-        raise ValueError(
-            f"Delta table at {root!r} declares writer feature(s) "
-            f"{unmappable} this engine cannot honor; converting "
-            "would silently drop a guarantee its writers enforced")
-    schema = StructType.fromJson(_json_loads(meta_action["schemaString"]))
-    # per-field writer contracts: generation expressions and
-    # invariants are SPARK SQL expressions (delta-spark is the writer
-    # that produces them) — this engine runs Spark SQL, so they
-    # TRANSLATE losslessly into dds.generatedColumns /
-    # dds.constraints.* (r14; both enforce on every future write).
-    # Identity columns still refuse: the ALLOCATION strategy (Delta's
-    # sparse high-watermark vs this engine's dense prefix-sum) is
-    # writer-specific and a silent swap would change the ids a
-    # downstream join depends on.
+            f"Delta log under {os.path.join(root, '_delta_log')!r} has "
+            "no metaData action — not a valid table")
+    return meta, files, app_versions, writer_features
+
+
+def _delta_field_contracts(
+    schema: StructType,
+) -> tuple[StructType, dict[str, str], dict[str, str], list[str]]:
+    """Per-field writer contracts of a Delta schema, which this
+    engine's writers enforce once they take over.  Generation
+    expressions and invariants are Spark SQL (delta-spark writes them),
+    so they translate; nullable=false is Delta's NOT NULL invariant.
+    Returns the schema with those contracts stripped and every field
+    nullable (this engine's convention), the generation expressions,
+    the invariants as ``{constraint name: expression}``, and the NOT
+    NULL columns.  IDENTITY columns refuse: Delta's sparse
+    high-watermark and this engine's dense prefix-sum allocate
+    different ids, and a silent swap would change the ids a downstream
+    join depends on."""
     gen_exprs: dict[str, str] = {}
-    invariant_exprs: dict[str, str] = {}
-    stripped_fields = []
-    contract_md_seen = False
+    invariants: dict[str, str] = {}
+    fields = []
     for fld in schema.fields:
         md = dict(fld.metadata or {})
         if any(k.startswith("delta.identity.") for k in md):
@@ -5241,10 +5113,10 @@ def convert_from_delta(
                 "a silent swap would change future ids — drop the "
                 "identity contract with a Delta writer first")
         if "delta.typeWidening" in md:
-            # kept inert in the stored schema, but the recorded
-            # promotions must be ones this engine's reads perform
-            _validate_type_widening(fld.name,
-                                    md["delta.typeWidening"])
+            # kept inert in the stored schema (the export re-declares
+            # the feature from it), but the recorded promotions must be
+            # ones this engine's reads perform
+            _validate_type_widening(fld.name, md["delta.typeWidening"])
         gexpr = md.pop("delta.generationExpression", None)
         if gexpr is not None:
             try:
@@ -5255,7 +5127,6 @@ def convert_from_delta(
                     f"{gexpr!r} does not parse as Spark SQL: {e}"
                 ) from e
             gen_exprs[fld.name] = str(gexpr)
-            contract_md_seen = True
         inv = md.pop("delta.invariants", None)
         if inv is not None:
             try:
@@ -5270,22 +5141,31 @@ def convert_from_delta(
                 raise ValueError(
                     f"column {fld.name!r} invariant expression "
                     f"{expr!r} is not Spark SQL: {e}") from e
-            invariant_exprs[f"invariant_{fld.name}"] = str(expr)
-            contract_md_seen = True
-        stripped_fields.append(StructField(
-            fld.name, fld.dataType, fld.nullable, md))
-    if contract_md_seen:
-        schema = StructType(stripped_fields)
-    # nullable=false is Delta's NOT NULL invariant (writers enforce
-    # it) — translate to dds.notNullColumns (r14; enforced as a CHECK
-    # on every future write) and normalize the stored schema to this
-    # engine's all-nullable convention, same as native tables
-    delta_not_null = [f.name for f in schema.fields if not f.nullable]
-    if delta_not_null:
-        schema = StructType([
-            StructField(f.name, f.dataType, True, f.metadata)
-            for f in schema.fields])
-    pcols = list(meta_action.get("partitionColumns") or [])
+            invariants[f"invariant_{fld.name}"] = str(expr)
+        fields.append(StructField(fld.name, fld.dataType, True, md))
+    not_null = [f.name for f in schema.fields if not f.nullable]
+    return StructType(fields), gen_exprs, invariants, not_null
+
+
+def _translate_delta_metadata(
+    root: str, meta: dict[str, Any], writer_features: set[str],
+) -> _DeltaMetadata:
+    """Convert stage 2: the head metaData in this engine's terms —
+    writer features, field contracts, configuration and column
+    mapping.  Writer-side contracts convert or refuse, never silently
+    drop: the original table's writers enforced them."""
+    unmappable = sorted(writer_features - _DELTA_WRITER_FEATURES)
+    if unmappable:
+        raise ValueError(
+            f"Delta table at {root!r} declares writer feature(s) "
+            f"{unmappable} this engine cannot honor; converting "
+            "would silently drop a guarantee its writers enforced")
+    dcfg = dict(meta.get("configuration") or {})
+    mode = dcfg.pop("delta.columnMapping.mode", None)
+    dcfg.pop("delta.columnMapping.maxColumnId", None)
+    schema, gen_exprs, invariants, not_null = _delta_field_contracts(
+        StructType.fromJson(_json_loads(meta["schemaString"])))
+    pcols = list(meta.get("partitionColumns") or [])
     missing_pcols = [c for c in pcols
                      if c not in {f.name for f in schema.fields}]
     if missing_pcols:
@@ -5293,77 +5173,7 @@ def convert_from_delta(
             f"partitionColumns {missing_pcols} are not in the schema; "
             "the log is malformed and the converted table's partition "
             "reads would silently drop those columns")
-    # column mapping (mode=name or id): physical names live in schema
-    # field metadata — translate into this engine's frozen-physical-
-    # name colmap (dds.columnMapping, the o_column_mapping machinery)
-    # and strip the delta.columnMapping.* metadata from the stored
-    # schema.  Scope (r15): flat top-level mappings; partitioned
-    # tables convert when partition columns are UN-renamed (physical
-    # == logical — the upgraded-table norm; our own colmap refuses
-    # partition renames too); 'id' mode converts under the footer
-    # equivalence proof below.  Nested physical names would need
-    # per-level read aliasing this engine does not do — refuse.
-    delta_colmap: dict[str, str] = {}
-    if not colmap_mode:
-        # defensive: physical-name metadata with the mode unset (or
-        # 'none') means the log is internally inconsistent — reading
-        # logical names against physically-named file columns would
-        # return all-NULL data
-        for fld in schema.fields:
-            phys = (fld.metadata or {}).get(
-                "delta.columnMapping.physicalName")
-            if phys and phys != fld.name:
-                raise ValueError(
-                    f"column {fld.name!r} carries physical name "
-                    f"{phys!r} but delta.columnMapping.mode is "
-                    f"{cm!r}; refusing an internally inconsistent "
-                    "log rather than reading the wrong columns")
-    #: (field id, physical name) per DATA column — the id-mode
-    #: footer-equivalence proof runs over these (below, head state)
-    id_mode_fields: list[tuple[int, str]] = []
-    if colmap_mode:
-        new_fields = []
-        for fld in schema.fields:
-            if not isinstance(fld.dataType, (  # flat columns only
-                    ByteType, ShortType, IntegerType, LongType,
-                    FloatType, DoubleType, DecimalType, StringType,
-                    BooleanType, DateType, TimestampType, BinaryType)):
-                raise ValueError(
-                    f"column-mapped convert: column {fld.name!r} has "
-                    f"nested type {fld.dataType.simpleString()}; "
-                    "physical names inside nested types do not map "
-                    "to this engine's top-level column mapping")
-            md = dict(fld.metadata or {})
-            phys = md.pop("delta.columnMapping.physicalName", None)
-            cid = md.pop("delta.columnMapping.id", None)
-            if fld.name in pcols:
-                # partition machinery (hive dirs, partitionValues,
-                # pruning, staged writes) is LOGICAL-name-keyed end to
-                # end in this engine, and its own colmap refuses
-                # partition renames — a renamed partition column
-                # (physical dirs under a name no read resolves) has
-                # no sound translation; un-renamed ones align exactly
-                if phys and phys != fld.name:
-                    raise ValueError(
-                        f"partition column {fld.name!r} carries "
-                        f"physical name {phys!r}: renamed partition "
-                        "columns do not convert (partition directories "
-                        "and partitionValues are keyed physical while "
-                        "this engine's partition machinery is logical)"
-                    )
-            elif cm == "id":
-                if cid is None:
-                    raise ValueError(
-                        f"delta.columnMapping.mode='id' but column "
-                        f"{fld.name!r} has no delta.columnMapping.id "
-                        "— internally inconsistent log, refusing")
-                id_mode_fields.append(
-                    (int(cid), str(phys or fld.name)))
-            if phys and phys != fld.name:
-                delta_colmap[fld.name] = str(phys)
-            new_fields.append(StructField(
-                fld.name, fld.dataType, fld.nullable, md))
-        schema = StructType(new_fields)
+    schema, colmap, id_fields = _delta_column_mapping(schema, mode, pcols)
     foreign_dds = sorted(k for k in dcfg if k.startswith("dds."))
     if foreign_dds:
         raise ValueError(
@@ -5375,644 +5185,609 @@ def convert_from_delta(
     if "delta.appendOnly" in cfg:
         cfg[_APPEND_ONLY_KEY] = cfg.pop("delta.appendOnly")
         _append_only(cfg)  # malformed value fails NOW
+    # delta.constraints.* have the same expression-per-key shape;
+    # existing rows were checked by the Delta writer that committed them
     for k in [k for k in cfg if k.startswith("delta.constraints.")]:
         cfg[_CONSTRAINT_PREFIX + k[len("delta.constraints."):]] = \
             cfg.pop(k)
     if gen_exprs:
         cfg[_GENCOL_KEY] = json.dumps(gen_exprs, sort_keys=True)
-    if delta_not_null:
-        cfg[_NOTNULL_KEY] = json.dumps(delta_not_null)
-    for cname, cexpr in invariant_exprs.items():
+    if not_null:
+        cfg[_NOTNULL_KEY] = json.dumps(not_null)
+    for cname, cexpr in invariants.items():
         if _CONSTRAINT_PREFIX + cname in cfg:
             raise ValueError(
                 f"invariant name collision: {cname!r} exists both as "
                 "a field invariant and a table constraint")
         cfg[_CONSTRAINT_PREFIX + cname] = cexpr
-    # BEHAVIOR-CLAIMING delta.* keys describe machinery this engine
-    # does not run (no _change_data is written here, no Delta
-    # auto-optimize service fires) — carrying them verbatim would
-    # misdescribe the converted table's behavior to anyone reading
-    # describe_detail.  Strip them and report what was dropped; the
-    # engine's own equivalents (row-level CDC is always derivable,
-    # dds.autoCompact/dds.optimizeWrite) are opt-in via
-    # set_properties, which runs the right validation.  The PRE-
-    # convert CDF history enableChangeDataFeed described stays
-    # readable via read_delta_changes (r15) — the snapshot convert
-    # drops no consumable feed.
-    dropped_cfg = {
+    # behaviour-claiming keys describe machinery this engine does not
+    # run (no _change_data is written here, no Delta auto-optimize or
+    # widening-on-write fires): carrying them would misdescribe the
+    # table, and enableTypeWidening could export under a legacy
+    # protocol a spec-conformant writer rejects.  The pre-convert feed
+    # stays readable through read_delta_changes.
+    dropped = {
         k: cfg.pop(k) for k in sorted(cfg)
         if k in ("delta.enableChangeDataFeed",
                  "delta.enableDeletionVectors",
-                 # widening-on-write is Delta-writer machinery this
-                 # engine does not run (already-widened files READ
-                 # fine — the kept delta.typeWidening field metadata
-                 # is what records that); carrying the enable claim
-                 # could also export under a legacy protocol, which
-                 # a spec-conformant writer would reject
                  "delta.enableTypeWidening")
         or k.startswith("delta.autoOptimize.")
     }
-    if delta_colmap:
-        cfg[_COLMAP_KEY] = json.dumps(delta_colmap, sort_keys=True)
+    if colmap:
+        cfg[_COLMAP_KEY] = json.dumps(colmap, sort_keys=True)
+    return _DeltaMetadata(
+        schema, pcols, cfg, dropped, mode in ("name", "id"), id_fields,
+        {colmap.get(f.name, f.name): f.dataType for f in schema.fields})
 
-    # stats sanitation: min/max carry over where both engines render
-    # values identically (keyed on PHYSICAL names for column-mapped
-    # tables — this engine's stats convention too); date/timestamp
-    # values RE-RENDER from Delta's format to ours (r14 — recovers
-    # file skipping on time-partitioned converts): dates are
-    # format-identical, timestamps parse Delta's ISO/'Z' rendering and
-    # maxValues widen by 999 µs when millisecond-truncated (Delta
-    # writers may truncate — widening keeps pruning sound).
-    # Unparseable values drop (costs skipping, never correctness).
-    phys_of = {f.name: delta_colmap.get(f.name, f.name)
-               for f in schema.fields}
-    safe_minmax = {
-        phys_of[f.name] for f in schema.fields
-        if isinstance(f.dataType, _DELTA_SAFE_STATS_TYPES)
-    }
-    date_cols = {phys_of[f.name] for f in schema.fields
-                 if isinstance(f.dataType, DateType)}
-    ts_cols = {phys_of[f.name] for f in schema.fields
-               if isinstance(f.dataType, TimestampType)}
 
-    def _rerender_stat(col: str, val: Any, is_max: bool) -> Optional[Any]:
-        if col in safe_minmax:
-            return val
-        if col in date_cols:
-            try:
-                return date.fromisoformat(str(val)[:10]).isoformat()
-            except ValueError:
-                return None
-        if col in ts_cols:
-            s = str(val).replace("T", " ")
-            for suffix in ("Z", "+00:00"):
-                if s.endswith(suffix):
-                    s = s[: -len(suffix)]
-            for fmt in ("%Y-%m-%d %H:%M:%S.%f", "%Y-%m-%d %H:%M:%S",
-                        "%Y-%m-%d"):
-                try:
-                    ts = datetime.strptime(s, fmt)
-                    break
-                except ValueError:
-                    continue
-            else:
-                return None
-            # a max stat widens by the RENDERED precision's full gap —
-            # the writer may have truncated at that precision, and an
-            # under-widened bound mis-prunes rows later in the gap
-            # (e.g. a date-only ts max covers the whole day, not
-            # midnight+999µs).  ms-fraction values widen 999µs (the
-            # spec-norm ms truncation); exact-µs fractions are exact.
-            if is_max:
-                if fmt == "%Y-%m-%d":
-                    ts += timedelta(days=1) - timedelta(microseconds=1)
-                elif fmt == "%Y-%m-%d %H:%M:%S":
-                    ts += timedelta(microseconds=999_999)
-                elif ts.microsecond % 1000 == 0:
-                    ts += timedelta(microseconds=999)
-            return ts.isoformat(sep=" ")
-        return None
-    # ---- head-state validation (over SURVIVING files only) ----
-    # Delta deletion vectors DECODE into this engine's sidecar-mask
-    # format (delta_interop: Z85 + portable roaring bitmap, CRC and
-    # cardinality verified) — masked rows stay masked, OPTIMIZE
-    # compacts them away later like any native DV.  Decoding is
-    # STREAMED per file (r15): validate-then-write in two passes so
-    # driver memory is O(one file's mask), not O(total masked rows)
-    # — an adversarially mask-heavy log can no longer balloon the
-    # driver (positions are never accumulated across files).
-    dv_rels = [rel for rel in sorted(files)
-               if files[rel].get("deletionVector")]
-    for rel in sorted(files):
-        a = files[rel]
-        if "://" in a["path"] or os.path.isabs(rel):
+def _check_delta_file(root: str, add: dict[str, Any], pcols: Sequence[str],
+                      label: str, missing_hint: str) -> str:
+    """Convert stage 3: validate one Delta add action's data file and
+    return its URL-decoded relative path.  The file must be
+    table-relative, exist on disk, and sit in hive directories that
+    encode its partitionValues: reads recover partition columns from
+    the directory names while pruning uses partitionValues, and the
+    two must agree.  ``label`` and ``missing_hint`` word the errors."""
+    rel = unquote(add["path"])
+    if "://" in add["path"] or os.path.isabs(rel):
+        raise ValueError(
+            f"{label} add path {add['path']!r} is absolute (shallow "
+            "clone?); only table-relative files convert")
+    if not os.path.isfile(os.path.join(root, rel)):
+        # the spec URL-encodes add paths; a writer that stored raw
+        # paths with literal %XX sequences lands here
+        if rel != add["path"] and os.path.isfile(
+                os.path.join(root, add["path"])):
             raise ValueError(
-                f"live add path {a['path']!r} is absolute (shallow "
-                "clone?); only table-relative files convert")
-        if not os.path.isfile(os.path.join(root, rel)):
-            # the spec says add paths are URL-encoded (we unquote
-            # above); a nonconforming writer that stored raw paths
-            # with literal %XX sequences would land here — check the
-            # RAW path so the error names the actual cause instead
-            # of a misleading "vacuumed?"
-            if rel != a["path"] and os.path.isfile(
-                    os.path.join(root, a["path"])):
-                raise ValueError(
-                    f"add path {a['path']!r} exists on disk verbatim "
-                    "but not URL-decoded — the writer did not "
-                    "URL-encode its paths as the Delta spec requires; "
-                    "this engine cannot disambiguate literal %XX "
-                    "sequences, refuse rather than guess")
-            raise FileNotFoundError(
-                f"Delta log references {rel!r} but the file is gone "
-                f"(vacuumed?); the converted table would be unreadable")
-        # the read path recovers partition columns from HIVE directory
-        # names (basePath discovery), while pruning uses the log's
-        # partitionValues — the two must agree or a partitioned read
-        # returns NULL partition columns against non-NULL pruning
-        # values.  Delta writes hive layout by default; randomized /
-        # flat layouts refuse rather than silently misread.
-        pv = dict(a.get("partitionValues") or {})
-        layout = _hive_layout(rel)
-        if list(layout) != pcols or any(
-                layout.get(c) != pv.get(c) for c in pcols):
-            raise ValueError(
-                f"file {rel!r} does not encode its partition values "
-                f"{pv} as hive {'/'.join(c + '=...' for c in pcols)} "
-                "directories; this engine's reads recover partition "
-                "columns from the directory layout — rewrite through "
-                "a hive-layout writer first.  (If the values contain "
-                "literal %XX sequences, a non-URL-encoding writer may "
-                "be the cause — the spec requires encoded paths)")
+                f"add path {add['path']!r} exists on disk verbatim "
+                "but not URL-decoded — the writer did not URL-encode "
+                "its paths as the Delta spec requires; this engine "
+                "cannot disambiguate literal %XX sequences, refuse "
+                "rather than guess")
+        raise FileNotFoundError(
+            f"Delta log references {label} file {rel!r} but the file "
+            f"is gone (vacuumed?); {missing_hint}")
+    pv = dict(add.get("partitionValues") or {})
+    layout = _hive_layout(rel)
+    if list(layout) != list(pcols) or any(
+            layout.get(c) != pv.get(c) for c in pcols):
+        raise ValueError(
+            f"{label} file {rel!r} does not encode its partition values "
+            f"{pv} as hive {'/'.join(c + '=...' for c in pcols)} "
+            "directories; this engine's reads recover partition "
+            "columns from the directory layout — rewrite through "
+            "a hive-layout writer first.  (If the values contain "
+            "literal %XX sequences, a non-URL-encoding writer may "
+            "be the cause — the spec requires encoded paths)")
+    return rel
 
-    # ---- HISTORY-PRESERVING replay: validation (r15) ----
-    # preserve_history re-publishes every Delta JSON commit as one
-    # native commit, so time travel and read_changes span the
-    # pre-convert history.  Scope is the replayable surface —
-    # pointed refusals for everything whose per-version state this
-    # engine cannot reproduce faithfully.  All checks run BEFORE any
-    # mutation (the refusals-never-mutate rule).
-    hist_plan: Optional[list[dict[str, Any]]] = None
-    if preserve_history:
-        if not json_complete or (
-                cp_hint is not None and cp_hint > versions[-1]):
-            raise ValueError(
-                "preserve_history replays the JSON history from "
-                "version 0; this log is checkpoint-reconstructed or "
-                "incomplete — use the snapshot convert")
-        if colmap_mode or delta_colmap:
-            raise ValueError(
-                "column-mapped histories do not replay (per-version "
-                "schema translation); use the snapshot convert")
-        if dv_rels:
-            raise ValueError(
-                "deletion-vector-carrying histories do not replay "
-                "(per-version sidecar reconstruction); the snapshot "
-                "convert decodes head DVs instead")
-        hist_plan = []
-        for v, acts in enumerate(batches):
-            # data ops keep ACTION ORDER — the head fold applies
-            # add/remove in order, and an add-then-remove of one path
-            # within a commit must replay identically
-            pops: list[tuple[str, str, Optional[dict[str, Any]]]] = []
-            n_adds = n_removes = 0
-            ptxn: list[dict[str, Any]] = []
-            pmeta_schema: Optional[StructType] = None
-            pop = ""
-            pts: Optional[int] = None
-            all_nc = True  # all actions dataChange=false (compaction)
-            for action in acts:
-                if "commitInfo" in action:
-                    ci = action["commitInfo"]
-                    pop = ci.get("operation", "")
-                    if isinstance(ci.get("timestamp"), int):
-                        pts = ci["timestamp"]
-                elif "add" in action:
-                    a = action["add"]
-                    rel = unquote(a["path"])
-                    if a.get("deletionVector"):
+
+def _plan_delta_history(
+    root: str, log: delta_interop.LogSegment, meta: _DeltaMetadata,
+    files: dict[str, dict[str, Any]],
+) -> list[dict[str, Any]]:
+    """Convert stage 4 (``preserve_history``): one replay plan entry
+    per Delta JSON commit, every refusal raised before anything is
+    written.  The scope is what this engine reproduces per version:
+    JSON from version 0, no column mapping, no deletion vectors,
+    every historical file on disk in hive layout, no contract-carrying
+    historical schemas and a stable partition layout."""
+    if log.checkpoint is not None:
+        raise ValueError(
+            "preserve_history replays the JSON history from version 0; "
+            "this log is checkpoint-reconstructed or incomplete — use "
+            "the snapshot convert")
+    if meta.colmap_mode:
+        raise ValueError(
+            "column-mapped histories do not replay (per-version "
+            "schema translation); use the snapshot convert")
+    if any(a.get("deletionVector") for a in files.values()):
+        raise ValueError(
+            "deletion-vector-carrying histories do not replay "
+            "(per-version sidecar reconstruction); the snapshot "
+            "convert decodes head DVs instead")
+    plan = []
+    for v, actions in log.commits:
+        # data ops keep ACTION ORDER, as the head fold applies them
+        ops: list[tuple[str, str, Optional[dict[str, Any]]]] = []
+        n_adds = n_removes = 0
+        txns: list[dict[str, Any]] = []
+        schema: Optional[StructType] = None
+        op = ""
+        ts: Optional[int] = None
+        all_nc = True  # all actions dataChange=false (compaction)
+        for action in actions:
+            if "commitInfo" in action:
+                ci = action["commitInfo"]
+                op = ci.get("operation", "")
+                if isinstance(ci.get("timestamp"), int):
+                    ts = ci["timestamp"]
+            elif "add" in action:
+                a = action["add"]
+                if a.get("deletionVector"):
+                    raise ValueError(
+                        f"version {v} carries a deletion vector; DV "
+                        "histories do not replay — use the snapshot "
+                        "convert")
+                # time travel reads every historical file, not only
+                # the survivors the head check covered
+                rel = _check_delta_file(
+                    root, a, meta.pcols, "historical",
+                    "preserve_history needs every historical file — "
+                    "use the snapshot convert")
+                all_nc = all_nc and not a.get("dataChange", True)
+                ops.append(("add", rel, a))
+                n_adds += 1
+            elif "remove" in action:
+                r = action["remove"]
+                all_nc = all_nc and not r.get("dataChange", True)
+                ops.append(("remove", unquote(r["path"]), None))
+                n_removes += 1
+            elif "txn" in action:
+                txns.append(action["txn"])
+            elif "metaData" in action:
+                m = action["metaData"]
+                if list(m.get("partitionColumns") or []) != meta.pcols:
+                    raise ValueError(
+                        f"version {v} changes the partition layout; "
+                        "partition evolution does not replay")
+                schema = StructType.fromJson(
+                    _json_loads(m["schemaString"]))
+                for fld in schema.fields:
+                    if any(k.startswith("delta.")
+                           for k in (fld.metadata or {})):
                         raise ValueError(
-                            f"version {v} carries a deletion vector; "
-                            "DV histories do not replay — use the "
-                            "snapshot convert")
-                    if "://" in a["path"] or os.path.isabs(rel):
-                        raise ValueError(
-                            f"historical add {a['path']!r} is "
-                            "absolute; only table-relative files "
-                            "replay")
-                    if not os.path.isfile(os.path.join(root, rel)):
-                        raise FileNotFoundError(
-                            f"history references {rel!r} no longer "
-                            "on disk (vacuumed?); preserve_history "
-                            "needs every historical file — use the "
-                            "snapshot convert")
-                    # hive-layout agreement for EVERY historical file
-                    # (time travel reads them; the head loop only
-                    # checks survivors)
-                    pv = dict(a.get("partitionValues") or {})
-                    layout = _hive_layout(rel)
-                    if list(layout) != pcols or any(
-                            layout.get(c) != pv.get(c) for c in pcols):
-                        raise ValueError(
-                            f"historical file {rel!r} does not "
-                            f"encode its partition values {pv} as "
-                            "hive directories; time travel would "
-                            "misread it")
-                    if a.get("dataChange", True):
-                        all_nc = False
-                    pops.append(("add", rel, a))
-                    n_adds += 1
-                elif "remove" in action:
-                    r = action["remove"]
-                    if r.get("dataChange", True):
-                        all_nc = False
-                    pops.append(("remove", unquote(r["path"]), None))
-                    n_removes += 1
-                elif "txn" in action:
-                    ptxn.append(action["txn"])
-                elif "metaData" in action:
-                    pmeta = action["metaData"]
-                    if list(pmeta.get("partitionColumns")
-                            or []) != pcols:
-                        raise ValueError(
-                            f"version {v} changes the partition "
-                            "layout; partition evolution does not "
-                            "replay")
-                    pmeta_schema = StructType.fromJson(
-                        _json_loads(pmeta["schemaString"]))
-                    for fld in pmeta_schema.fields:
-                        if any(k.startswith("delta.")
-                               for k in (fld.metadata or {})):
-                            raise ValueError(
-                                f"version {v} schema carries delta.* "
-                                f"field metadata on {fld.name!r}; "
-                                "contract-carrying historical "
-                                "schemas do not replay — use the "
-                                "snapshot convert")
-            hist_plan.append({"ops": pops, "n_adds": n_adds,
-                              "n_removes": n_removes,
-                              "txns": ptxn,
-                              "meta_schema": pmeta_schema,
-                              "op": pop, "ts": pts,
-                              "compaction": all_nc
-                              and bool(pops)})
+                            f"version {v} schema carries delta.* field "
+                            f"metadata on {fld.name!r}; contract-"
+                            "carrying historical schemas do not replay "
+                            "— use the snapshot convert")
+        plan.append({"ops": ops, "n_adds": n_adds,
+                     "n_removes": n_removes, "txns": txns,
+                     "meta_schema": schema, "op": op, "ts": ts,
+                     "compaction": all_nc and bool(ops)})
+    return plan
 
-    # 'id'-mode equivalence proof: this engine reads by physical
-    # NAME, an id-mode reader resolves by parquet FIELD ID — the two
-    # agree iff every live file's footer binds each mapped field id
-    # to exactly the schema's physical name.  delta-spark writes both
-    # consistently, so real id-mode tables pass; a file where the
-    # resolutions diverge (or that lacks field ids while carrying a
-    # same-named column) would silently read DIFFERENT data under
-    # the two rules — refuse.
-    if id_mode_fields and files:
-        expected = list(id_mode_fields)
 
-        def _id_check(rel: str) -> Optional[str]:
-            import pyarrow.parquet as pq_
+def _id_mode_divergence(path: str,
+                        expected: list[tuple[int, str]]) -> Optional[str]:
+    """Where a parquet file's field-id and physical-name resolution of
+    ``expected`` (field id, physical name) pairs diverge, or None."""
+    import pyarrow.parquet as pq_
 
-            sch_ = pq_.ParquetFile(
-                os.path.join(root, rel)).schema_arrow
-            by_id: dict[int, str] = {}
-            for f_ in sch_:
-                fid = (f_.metadata or {}).get(b"PARQUET:field_id")
-                if fid is not None:
-                    by_id[int(fid)] = f_.name
-            names = set(sch_.names)
-            for cid, phys in expected:
-                if cid in by_id:
-                    if by_id[cid] != phys:
-                        return (
-                            f"field id {cid} names column "
-                            f"{by_id[cid]!r} but the schema maps it "
-                            f"to {phys!r}")
-                elif phys in names:
-                    return (
-                        f"column {phys!r} carries no field id {cid}; "
-                        "an id-mode reader would not resolve it while "
-                        "a name read would")
-                # absent entirely: schema evolution — both
-                # resolutions read NULL, equivalently
-            return None
+    sch = pq_.ParquetFile(path).schema_arrow
+    by_id = {int(fid): f.name for f in sch
+             if (fid := (f.metadata or {}).get(b"PARQUET:field_id"))
+             is not None}
+    for cid, phys in expected:
+        if cid in by_id:
+            if by_id[cid] != phys:
+                return (f"field id {cid} names column {by_id[cid]!r} "
+                        f"but the schema maps it to {phys!r}")
+        elif phys in sch.names:
+            return (f"column {phys!r} carries no field id {cid}; an "
+                    "id-mode reader would not resolve it while a name "
+                    "read would")
+        # absent entirely: schema evolution, both resolutions read NULL
+    return None
 
-        bad = [(rel, msg) for rel in sorted(files)
-               if (msg := _id_check(rel))]
-        if bad:
-            rel0, msg0 = bad[0]
-            raise ValueError(
-                f"delta.columnMapping.mode='id' table does not "
-                f"convert: {len(bad)} live file(s) where field-id and "
-                f"physical-name resolution diverge (e.g. {rel0!r}: "
-                f"{msg0}); this engine reads by name and would return "
-                "different data than an id-mode reader")
 
-    # numRecords: from the log's stats where present; files without
-    # stats fall back to a parquet footer read on the driver
-    def _raw_stats(a: dict[str, Any]) -> dict[str, Any]:
-        raw = a.get("stats")
-        return (_json_loads(raw) if isinstance(raw, str)
-                else (raw or {}))
+def _prove_delta_id_mode(root: str, rels: Sequence[str],
+                         id_fields: list[tuple[int, str]]) -> None:
+    """Convert stage 5: an 'id'-mode reader resolves columns by parquet
+    field id while this engine reads by physical name.  The two agree
+    iff every live file's footer binds each mapped field id to exactly
+    the schema's physical name, which is what delta-spark writes; a
+    file where they diverge would read different data — refuse."""
+    bad = [(rel, msg) for rel in rels
+           if (msg := _id_mode_divergence(os.path.join(root, rel),
+                                          id_fields))]
+    if bad:
+        rel0, msg0 = bad[0]
+        raise ValueError(
+            f"delta.columnMapping.mode='id' table does not convert: "
+            f"{len(bad)} live file(s) where field-id and physical-name "
+            f"resolution diverge (e.g. {rel0!r}: {msg0}); this engine "
+            "reads by name and would return different data than an "
+            "id-mode reader")
 
-    def _footer_rows(rel: str) -> int:
-        # shared by this pass and the history replay's footer pass
+
+def _delta_stats(add: dict[str, Any]) -> dict[str, Any]:
+    raw = add.get("stats")
+    return _json_loads(raw) if isinstance(raw, str) else (raw or {})
+
+
+def _delta_num_records(root: str, rel: str, add: dict[str, Any]) -> int:
+    """A Delta add's row count: its stats' numRecords, else the parquet
+    footer's."""
+    num = _delta_stats(add).get("numRecords")
+    if num is None:
         import pyarrow.parquet as pq_
 
-        return pq_.ParquetFile(os.path.join(root, rel)).metadata.num_rows
+        num = pq_.ParquetFile(os.path.join(root, rel)).metadata.num_rows
+    return int(num)
 
-    footer_counts = {
-        rel: _footer_rows(rel) for rel in files
-        if _raw_stats(files[rel]).get("numRecords") is None}
 
-    # DV validation BEFORE the sidecar write: a refused convert must
-    # never have mutated the source table directory (the sidecar
-    # lands inside it).  Pass 1 decodes each DV TRANSIENTLY —
-    # decodability + range check + cardinality recorded, positions
-    # discarded — so refusals cost no accumulation either.
-    def _file_rows(rel: str) -> int:
-        num = _raw_stats(files[rel]).get("numRecords")
-        return int(num if num is not None else footer_counts[rel])
+def _decode_delta_dv(root: str, rel: str, dv: dict[str, Any]) -> list[int]:
+    try:
+        return delta_interop.decode_deletion_vector(root, dv)
+    except delta_interop.DeltaInteropError as e:
+        raise ValueError(
+            f"cannot convert {root!r}: live file {rel!r} carries an "
+            f"undecodable deletion vector — {e}") from e
 
-    def _decode_dv(rel: str) -> list[int]:
-        try:
-            return delta_interop.decode_deletion_vector(
-                root, files[rel]["deletionVector"])
-        except delta_interop.DeltaInteropError as e:
-            raise ValueError(
-                f"cannot convert {root!r}: live file {rel!r} "
-                f"carries an undecodable deletion vector — {e}"
-            ) from e
 
-    dv_counts: dict[str, int] = {}
-    for rel in dv_rels:
-        masked_pos = _decode_dv(rel)
-        if masked_pos and masked_pos[-1] >= _file_rows(rel):
+def _delta_dv_counts(root: str, files: dict[str, dict[str, Any]],
+                     counts: dict[str, int]) -> dict[str, int]:
+    """Convert stage 6, first pass: decode and range-check every live
+    deletion vector BEFORE the sidecar write (a refused convert must
+    never have mutated the source directory, and the sidecar lands
+    inside it).  Returns the masked-row count per DV-carrying file.
+    Each decode is transient, so driver memory stays at one file's
+    mask, not the total of masked rows."""
+    out: dict[str, int] = {}
+    for rel in sorted(files):
+        dv = files[rel].get("deletionVector")
+        if not dv:
+            continue
+        masked = _decode_delta_dv(root, rel, dv)
+        if masked and masked[-1] >= counts[rel]:
             raise ValueError(
                 f"deletion vector of {rel!r} masks row index "
-                f"{masked_pos[-1]} but the file has only "
-                f"{_file_rows(rel)} rows — corrupted descriptor, "
-                "refusing to convert")
-        dv_counts[rel] = len(masked_pos)
+                f"{masked[-1]} but the file has only {counts[rel]} "
+                "rows — corrupted descriptor, refusing to convert")
+        out[rel] = len(masked)
+    return out
 
-    # decoded Delta DVs land in ONE sidecar parquet (same shape the
-    # engine's own DV deletes write: (root, path, row_index) sorted by
-    # file identity so positional probes prune to their row groups) —
-    # written only on a real convert, never dry_run.  Pass 2 decodes
-    # again (descriptors are cheap to re-read; inline ones are in
-    # memory already) and STREAMS batches into one ParquetWriter, so
-    # the sort order is preserved without ever holding the union.
-    dv_rel: Optional[str] = None
-    if dv_rels and not dry_run:
-        import pyarrow as pa
-        import pyarrow.parquet as pq_
 
-        dv_rel = os.path.join("_dv", f"dv-{uuid.uuid4().hex}")
-        os.makedirs(os.path.join(root, dv_rel))
-        aroot = os.path.abspath(root)
-        sidecar_schema = pa.schema([("root", pa.string()),
-                                    ("path", pa.string()),
-                                    ("row_index", pa.int64())])
-        writer = pq_.ParquetWriter(
-            os.path.join(root, dv_rel, "part-00000.parquet"),
-            sidecar_schema)
+def _write_delta_dv_sidecar(root: str, files: dict[str, dict[str, Any]],
+                            dv_rels: Sequence[str]) -> str:
+    """Convert stage 6, second pass: decode the DVs again and stream
+    them into ONE sidecar parquet of (root, path, row_index), the shape
+    the engine's own DV deletes write, in file order so positional
+    probes prune to their row groups.  Returns its relative dir."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq_
+
+    dv_rel = os.path.join("_dv", f"dv-{uuid.uuid4().hex}")
+    os.makedirs(os.path.join(root, dv_rel))
+    aroot = os.path.abspath(root)
+    schema = pa.schema([("root", pa.string()), ("path", pa.string()),
+                        ("row_index", pa.int64())])
+    paths: list[str] = []
+    ris: list[int] = []
+    with pq_.ParquetWriter(os.path.join(root, dv_rel, "part-00000.parquet"),
+                           schema) as writer:
+        for i, rel in enumerate(dv_rels):
+            masked = _decode_delta_dv(root, rel,
+                                      files[rel]["deletionVector"])
+            paths.extend([rel.replace(os.sep, "/")] * len(masked))
+            ris.extend(masked)
+            # ~1M-row row groups: bounded memory, and positional
+            # probes still prune to a file's contiguous groups
+            if ris and (len(ris) >= 1_048_576 or i == len(dv_rels) - 1):
+                writer.write_table(pa.table(
+                    {"root": pa.array([aroot] * len(ris), pa.string()),
+                     "path": pa.array(paths, pa.string()),
+                     "row_index": pa.array(ris, pa.int64())},
+                    schema=schema))
+                paths, ris = [], []
+    return dv_rel
+
+
+def _rerender_stat(dtype: Optional[DataType], val: Any,
+                   is_max: bool) -> Optional[Any]:
+    """A Delta min/max stat in this engine's rendering, or None to drop
+    it (a dropped stat costs file skipping, never correctness).  Types
+    both engines render alike carry over; dates validate; timestamps
+    parse Delta's ISO/'Z' rendering, and a max widens by the rendered
+    precision's full gap, because the writer may have truncated there
+    and an under-widened bound mis-prunes rows later in the gap."""
+    if isinstance(dtype, _DELTA_SAFE_STATS_TYPES):
+        return val
+    if isinstance(dtype, DateType):
         try:
-            buf_paths: list[str] = []
-            buf_ris: list[int] = []
-
-            def _flush() -> None:
-                if buf_ris:
-                    writer.write_table(pa.table(
-                        {"root": pa.array([aroot] * len(buf_ris),
-                                          pa.string()),
-                         "path": pa.array(buf_paths, pa.string()),
-                         "row_index": pa.array(buf_ris, pa.int64())},
-                        schema=sidecar_schema))
-                    buf_paths.clear()
-                    buf_ris.clear()
-
-            for rel in dv_rels:
-                masked_pos = _decode_dv(rel)
-                p = rel.replace(os.sep, "/")
-                buf_paths.extend([p] * len(masked_pos))
-                buf_ris.extend(masked_pos)
-                # ~1M-row row groups: bounded memory, and positional
-                # probes still prune to a file's contiguous groups
-                if len(buf_ris) >= 1_048_576:
-                    _flush()
-            _flush()
-        finally:
-            writer.close()
-
-    def _mk_addfile(a: dict[str, Any], rel: str, num: int,
-                    masked: int = 0,
-                    masked_rel: Optional[str] = None) -> AddFile:
-        """One sanitized native AddFile from a raw Delta add action —
-        shared by the snapshot path and the history replay."""
-        ab = os.path.join(root, rel)
-        st = _raw_stats(a)
-        stats: dict[str, Any] = {"numRecords": int(num)}
-        if st.get("nullCount"):
-            stats["nullCount"] = dict(st["nullCount"])
-        for key in ("minValues", "maxValues"):
-            kept = {}
-            for c, val in (st.get(key) or {}).items():
-                rv = _rerender_stat(c, val, key == "maxValues")
-                if rv is not None:
-                    kept[c] = rv
-            if kept:
-                stats[key] = kept
-        return AddFile(
-            path=rel.replace(os.sep, "/"),
-            size=int(a.get("size") or os.path.getsize(ab)),
-            num_records=int(num),
-            partition_values=dict(a.get("partitionValues") or {}),
-            stats=stats,
-            modification_time=int(a.get("modificationTime")
-                                  or os.stat(ab).st_mtime_ns
-                                  // 1_000_000),
-            dv_path=masked_rel if masked else None,
-            dv_count=masked,
-        )
-
-    adds: list[AddFile] = []
-    total_rows = 0
-    now = int(time.time() * 1000)
-    for rel in sorted(files):
-        a = files[rel]
-        st = _raw_stats(a)
-        num = st.get("numRecords")
-        if num is None:
-            num = footer_counts[rel]
-        masked = dv_counts.get(rel, 0)  # range-validated above
-        total_rows += int(num) - masked
-        adds.append(_mk_addfile(a, rel, int(num), masked, dv_rel))
-
-    if preserve_history:
-        assert hist_plan is not None
-        if dry_run:
-            # the report needs no footer I/O — keep the cheap
-            # should-I-convert probe cheap
-            return {
-                "dry_run": True,
-                "num_files": len(adds),
-                "num_rows": total_rows,
-                "partition_columns": pcols,
-                "delta_version": head_delta_version,
-                "history_preserved": True,
-                "num_versions": len(hist_plan),
-                "dropped_configuration": dropped_cfg,
-            }
-        # footer counts for stats-less HISTORICAL adds (the pass
-        # above covered only surviving files), same counter
-        footer_counts.update({rel: _footer_rows(rel) for rel in {
-            rel for pv_ in hist_plan
-            for kind, rel, a in pv_["ops"]
-            if kind == "add"
-            and _raw_stats(a).get("numRecords") is None
-        } - footer_counts.keys()})
-        # replay: one native commit per Delta version, staged into a
-        # SHADOW log and atomically renamed into place at the end — a
-        # crash or conflict mid-replay must never leave a valid-
-        # looking table at a silently stale head.  Operation names
-        # are SYNTHESIZED so this engine's own classify_commit
-        # semantics hold by construction (removes+adds = rewrite,
-        # removes-only = metadata DELETE whose row-level feed emits
-        # the dropped files' rows, adds-only = append, all-
-        # dataChange=false = compaction); the original Delta
-        # operation rides in operationParameters for provenance.
-        # Source commit TIMESTAMPS carry over (clamped monotone) so
-        # timestamp_as_of / restore(timestamp_as_of) address the
-        # pre-convert history.  Per-version metaData carries that
-        # version's schema (time travel reads under it) with the
-        # HEAD's translated configuration — contracts govern future
-        # writes, and re-deriving historical contract state would
-        # claim enforcement this engine never ran.
-        shadow = os.path.join(root, f".convert-replay-{uuid.uuid4().hex}")
-        os.makedirs(shadow)
-        # source commit timestamps, holes backfilled from the NEXT
-        # known one (earlier commits are at least as old), then
-        # clamped monotone non-decreasing so version_as_of's binary
-        # walk stays sound
-        ts_list: list[int] = []
-        nxt_ts = now
-        for pv_ in reversed(hist_plan):
-            if pv_["ts"] is not None:
-                nxt_ts = pv_["ts"]
-            ts_list.append(nxt_ts)
-        ts_list.reverse()
-        mono = 0
-        for i, tv in enumerate(ts_list):
-            mono = max(mono, tv)
-            ts_list[i] = mono
-        live: dict[str, AddFile] = {}
-        app_v: dict[str, int] = {}
-        proto: Optional[Any] = None
-        cur_meta = Metadata(schema_json=schema.json(),
-                            partition_columns=pcols,
-                            configuration=cfg)
+            return date.fromisoformat(str(val)[:10]).isoformat()
+        except ValueError:
+            return None
+    if not isinstance(dtype, TimestampType):
+        return None
+    s = str(val).replace("T", " ")
+    for suffix in ("Z", "+00:00"):
+        if s.endswith(suffix):
+            s = s[: -len(suffix)]
+    for fmt in ("%Y-%m-%d %H:%M:%S.%f", "%Y-%m-%d %H:%M:%S", "%Y-%m-%d"):
         try:
-            for v, pv_ in enumerate(hist_plan):
-                meta_changed = False
-                if pv_["meta_schema"] is not None:
-                    cur_meta = Metadata(
-                        schema_json=pv_["meta_schema"].json(),
-                        partition_columns=pcols,
-                        configuration=cfg,
-                        table_id=cur_meta.table_id,
-                    )
-                    meta_changed = True
-                ts_v = ts_list[v]
-                if v == 0:
-                    op = "CONVERT FROM DELTA"
-                elif pv_["compaction"]:
-                    op = "OPTIMIZE (replayed)"
-                elif pv_["n_removes"] and pv_["n_adds"]:
-                    op = "WRITE overwrite"
-                elif pv_["n_removes"]:
-                    op = "DELETE"
-                elif pv_["n_adds"]:
-                    op = "WRITE append"
+            ts = datetime.strptime(s, fmt)
+            break
+        except ValueError:
+            continue
+    else:
+        return None
+    if is_max:
+        # a date-only max covers the whole day; ms fractions widen
+        # 999µs (the spec-norm ms truncation); exact µs are exact
+        if fmt == "%Y-%m-%d":
+            ts += timedelta(days=1) - timedelta(microseconds=1)
+        elif fmt == "%Y-%m-%d %H:%M:%S":
+            ts += timedelta(microseconds=999_999)
+        elif ts.microsecond % 1000 == 0:
+            ts += timedelta(microseconds=999)
+    return ts.isoformat(sep=" ")
+
+
+def _delta_addfile(root: str, add: dict[str, Any], rel: str, num: int,
+                   stat_types: dict[str, DataType], masked: int = 0,
+                   dv_rel: Optional[str] = None) -> AddFile:
+    """Convert stage 7: one native AddFile from a Delta add action, its
+    stats sanitized for pruning soundness — numRecords and nullCount
+    always, min/max where :func:`_rerender_stat` keeps them (keyed by
+    physical name, this engine's convention too)."""
+    ab = os.path.join(root, rel)
+    st = _delta_stats(add)
+    stats: dict[str, Any] = {"numRecords": int(num)}
+    if st.get("nullCount"):
+        stats["nullCount"] = dict(st["nullCount"])
+    for key in ("minValues", "maxValues"):
+        kept = {c: rv for c, val in (st.get(key) or {}).items()
+                if (rv := _rerender_stat(stat_types.get(c), val,
+                                         key == "maxValues")) is not None}
+        if kept:
+            stats[key] = kept
+    return AddFile(
+        path=rel.replace(os.sep, "/"),
+        size=int(add.get("size") or os.path.getsize(ab)),
+        num_records=int(num),
+        partition_values=dict(add.get("partitionValues") or {}),
+        stats=stats,
+        modification_time=int(add.get("modificationTime")
+                              or os.stat(ab).st_mtime_ns // 1_000_000),
+        dv_path=dv_rel if masked else None,
+        dv_count=masked,
+    )
+
+
+def _replay_delta_history(root: str, plan: list[dict[str, Any]],
+                          meta: _DeltaMetadata,
+                          head_rels: Iterable[str]) -> list[AddFile]:
+    """Convert stage 8 (``preserve_history``): one native commit per
+    Delta version, staged into a SHADOW log and renamed into place at
+    the end, so a crash or conflict mid-replay never leaves a
+    valid-looking table at a stale head.  Returns the live files.
+
+    Operation names are synthesized so this engine's classify_commit
+    semantics hold (removes+adds = rewrite, removes only = metadata
+    DELETE, adds only = append, all dataChange=false = compaction);
+    the Delta operation rides in operationParameters.  Source commit
+    timestamps carry over, holes backfilled from the next known one
+    and clamped monotone so version_as_of's binary walk stays sound.
+    Each version's metaData carries that version's schema with the
+    HEAD's translated configuration: contracts govern future writes."""
+    ts_list: list[int] = []
+    nxt_ts = int(time.time() * 1000)
+    for entry in reversed(plan):
+        if entry["ts"] is not None:
+            nxt_ts = entry["ts"]
+        ts_list.append(nxt_ts)
+    ts_list.reverse()
+    mono = 0
+    for i, tv in enumerate(ts_list):
+        mono = max(mono, tv)
+        ts_list[i] = mono
+    shadow = os.path.join(root, f".convert-replay-{uuid.uuid4().hex}")
+    os.makedirs(shadow)
+    live: dict[str, AddFile] = {}
+    app_v: dict[str, int] = {}
+    proto: Optional[Any] = None
+    cur_meta = Metadata(schema_json=meta.schema.json(),
+                        partition_columns=meta.pcols,
+                        configuration=meta.cfg)
+    try:
+        for v, entry in enumerate(plan):
+            if entry["meta_schema"] is not None:
+                cur_meta = Metadata(
+                    schema_json=entry["meta_schema"].json(),
+                    partition_columns=meta.pcols,
+                    configuration=meta.cfg,
+                    table_id=cur_meta.table_id)
+            ts_v = ts_list[v]
+            if v == 0:
+                op = "CONVERT FROM DELTA"
+            elif entry["compaction"]:
+                op = "OPTIMIZE (replayed)"
+            elif entry["n_removes"] and entry["n_adds"]:
+                op = "WRITE overwrite"
+            elif entry["n_removes"]:
+                op = "DELETE"
+            elif entry["n_adds"]:
+                op = "WRITE append"
+            else:
+                op = "CONVERT REPLAY"
+            actions: list[dict[str, Any]] = [CommitInfo(
+                operation=op,
+                operation_parameters={"deltaVersion": v,
+                                      "deltaOperation": entry["op"]},
+                timestamp=ts_v,
+            ).to_action()]
+            if v == 0 or entry["meta_schema"] is not None:
+                actions.append(cur_meta.to_action())
+            for txn in entry["txns"]:
+                app_v[txn["appId"]] = max(app_v.get(txn["appId"], -1),
+                                          int(txn["version"]))
+                actions.append({"txn": {"appId": txn["appId"],
+                                        "version": int(txn["version"])}})
+            for kind, rel, a in entry["ops"]:
+                if kind == "remove":
+                    af = live.pop(rel.replace(os.sep, "/"), None)
+                    if af is not None:
+                        actions.append(af.remove_action(ts_v))
                 else:
-                    op = "CONVERT REPLAY"
-                acts_native: list[dict[str, Any]] = [CommitInfo(
-                    operation=op,
-                    operation_parameters={
-                        "deltaVersion": v,
-                        "deltaOperation": pv_["op"],
-                    },
-                    timestamp=ts_v,
-                ).to_action()]
-                if v == 0 or meta_changed:
-                    acts_native.append(cur_meta.to_action())
-                for txn in pv_["txns"]:
-                    app_v[txn["appId"]] = max(
-                        app_v.get(txn["appId"], -1),
-                        int(txn["version"]))
-                    acts_native.append({"txn": {
-                        "appId": txn["appId"],
-                        "version": int(txn["version"])}})
-                # data ops replay in ACTION ORDER — an add-then-
-                # remove of one path within a commit must fold
-                # exactly like the head pass did
-                for kind, rel, a in pv_["ops"]:
-                    if kind == "remove":
-                        af = live.pop(rel.replace(os.sep, "/"), None)
-                        if af is not None:
-                            acts_native.append(af.remove_action(ts_v))
-                    else:
-                        st_num = _raw_stats(a).get("numRecords")
-                        num = int(st_num if st_num is not None
-                                  else footer_counts[rel])
-                        af = _mk_addfile(a, rel, num)
-                        live[af.path] = af
-                        acts_native.append(af.to_action())
-                snap_v = Snapshot(v, cur_meta, list(live.values()),
-                                  ts_v, app_versions=dict(app_v))
-                if proto is not None:
-                    snap_v.protocol = proto
-                tablelog.commit(shadow, v, acts_native, snap_v)
-                proto = snap_v.protocol
-            # the replayed head must equal the directly-folded head —
-            # a divergence means the two replays disagree on the spec
-            # (checked BEFORE anything becomes visible at `root`)
-            if set(live) != {r.replace(os.sep, "/") for r in files}:
-                raise AssertionError(
-                    "history replay diverged from the folded head "
-                    f"state ({sorted(set(live))[:3]} vs "
-                    f"{sorted(files)[:3]}); refusing a wrong convert")
-            # ATOMIC publish: the whole replayed log appears at once
-            try:
-                os.rename(os.path.join(shadow, tablelog.LOG_DIR),
-                          os.path.join(root, tablelog.LOG_DIR))
-            except OSError as e:
-                raise TableExistsError(
-                    f"{root!r} grew a {tablelog.LOG_DIR} during the "
-                    "replay (concurrent convert?); refusing to "
-                    f"clobber it: {e}") from e
-        finally:
-            shutil.rmtree(shadow, ignore_errors=True)
-        # the shadow's cached snapshots die with its path; a cold
-        # load at `root` replays the renamed log (+ any interval
-        # checkpoints, which are path-relative)
-        return {
-            "dry_run": False,
-            "version": len(hist_plan) - 1,
-            "num_files": len(live),
-            "num_rows": sum(a.num_records for a in live.values()),
-            "partition_columns": pcols,
-            "delta_version": head_delta_version,
-            "history_preserved": True,
-            "dropped_configuration": dropped_cfg,
-        }
+                    af = _delta_addfile(root, a, rel,
+                                        _delta_num_records(root, rel, a),
+                                        meta.stat_types)
+                    live[af.path] = af
+                    actions.append(af.to_action())
+            # committed by hand, not through Transaction: Transaction
+            # folds removes before adds, while a Delta commit's
+            # add-then-remove of one path must replay in action order,
+            # with the replayed timestamp, into the shadow path
+            snap_v = Snapshot(v, cur_meta, list(live.values()), ts_v,
+                              app_versions=dict(app_v))
+            if proto is not None:
+                snap_v.protocol = proto
+            tablelog.commit(shadow, v, actions, snap_v)
+            proto = snap_v.protocol
+        # the replayed head must equal the folded head, checked before
+        # anything becomes visible at `root`
+        head = {r.replace(os.sep, "/") for r in head_rels}
+        if set(live) != head:
+            raise AssertionError(
+                "history replay diverged from the folded head state "
+                f"({sorted(live)[:3]} vs {sorted(head)[:3]}); refusing "
+                "a wrong convert")
+        try:
+            os.rename(os.path.join(shadow, tablelog.LOG_DIR),
+                      os.path.join(root, tablelog.LOG_DIR))
+        except OSError as e:
+            raise TableExistsError(
+                f"{root!r} grew a {tablelog.LOG_DIR} during the replay "
+                f"(concurrent convert?); refusing to clobber it: {e}"
+            ) from e
+    finally:
+        shutil.rmtree(shadow, ignore_errors=True)
+    return list(live.values())
 
-    if dry_run:
-        return {
-            "dry_run": True,
-            "num_files": len(adds),
-            "num_rows": total_rows,
-            "partition_columns": pcols,
-            "delta_version": head_delta_version,
-            "dropped_configuration": dropped_cfg,
-        }
-    txn = Transaction(root, None, "CONVERT FROM DELTA", {
-        "numFiles": len(adds), "deltaVersion": head_delta_version})
-    txn.checks.append(_table_absent(root, WriteMode.error))
-    # carried SetTransaction ledgers must live in the COMMIT, not just
-    # the cached snapshot — a cold-cache replay of version 0 would
-    # otherwise lose them and a resumed upstream stream would
-    # double-append
-    txn.commit(adds, metadata=Metadata(
-        schema_json=schema.json(), partition_columns=pcols,
-        configuration=cfg), metrics={"num_output_rows": total_rows},
-        txns=app_versions)
-    return {
-        "dry_run": False,
-        "version": 0,
+
+def _convert_result(adds: Sequence[AddFile], meta: _DeltaMetadata,
+                    delta_version: int, *, version: Optional[int] = None,
+                    history: Optional[list] = None) -> dict[str, Any]:
+    """Convert stage 9: the result dict; ``version`` is None on a dry
+    run, ``history`` the replay plan under ``preserve_history``."""
+    out: dict[str, Any] = {
+        "dry_run": version is None,
         "num_files": len(adds),
-        "num_rows": total_rows,
-        "partition_columns": pcols,
-        "delta_version": head_delta_version,
-        "dropped_configuration": dropped_cfg,
+        "num_rows": sum(a.live_records for a in adds),
+        "partition_columns": meta.pcols,
+        "delta_version": delta_version,
+        "dropped_configuration": meta.dropped,
     }
+    if version is not None:
+        out["version"] = version
+    if history is not None:
+        out["history_preserved"] = True
+        if version is None:
+            out["num_versions"] = len(history)
+    return out
+
+
+def convert_from_delta(
+    spark: SparkSession,
+    path: str,
+    *,
+    dry_run: bool = False,
+    preserve_history: bool = False,
+) -> dict[str, Any]:
+    """Onboard a REAL Delta Lake table (the public delta-io protocol's
+    ``_delta_log/`` — what delta-rs, and therefore the reference I/O
+    manager (dd/dagster_delta/handler.py:23-27), writes) into this
+    engine's format IN PLACE: replay the Delta log to its head state,
+    then publish ONE version-0 commit in OUR log referencing the SAME
+    data files — no bytes move.  A user of the reference can point
+    this engine at their existing Delta tables and keep querying.
+
+    The log is read through :func:`delta_interop.read_log_segment`:
+    the JSON commits from version 0, or a checkpoint (classic, complete
+    multi-part, or v2 with sidecars) plus its contiguous JSON tail.
+    Deletion vectors decode into this engine's sidecar masks (masked
+    rows stay masked); column mapping translates into
+    ``dds.columnMapping``; date/timestamp stats re-render.
+
+    Refusals are pointed, never silent:
+
+    - an incomplete multi-part or corrupted v2 checkpoint; a JSON tail
+      contiguous neither from version 0 nor from a checkpoint; a
+      checkpoint claiming a version beyond what the log reconstructs.
+    - ``minReaderVersion`` > 3, or reader features outside
+      :data:`delta_interop.READER_FEATURES`; writer features without an
+      engine equivalent.
+    - ``delta.columnMapping.mode='id'`` unless every live file's footer
+      PROVES field-id and physical-name resolution agree (what
+      delta-spark writes); renamed partition columns, nested types
+      under column mapping, and physical names without a mapping mode.
+    - corrupted deletion vectors (bad magic / CRC / cardinality /
+      out-of-range row index).
+    - IDENTITY columns (id-allocation strategies differ between
+      engines).  Generation expressions and invariants are Spark SQL
+      and translate to ``dds.generatedColumns`` /
+      ``dds.constraints.invariant_<col>``; NOT NULL fields to
+      ``dds.notNullColumns``.
+    - absolute/URI add paths (shallow clones), live files missing on
+      disk, and files whose hive directories disagree with their
+      partitionValues.
+
+    What carries over: the schema (Delta's ``schemaString`` IS the
+    Spark StructType JSON this engine stores), partition columns and
+    values, ``delta.appendOnly`` (as ``dds.appendOnly``),
+    ``delta.constraints.*`` (as ``dds.constraints.*``), the remaining
+    configuration verbatim EXCEPT behaviour-claiming keys
+    (``delta.enableChangeDataFeed``, ``delta.enableDeletionVectors``,
+    ``delta.enableTypeWidening``, ``delta.autoOptimize.*``), which are
+    stripped and reported in ``dropped_configuration``, SetTransaction
+    app versions, and per-file stats sanitized for pruning soundness.
+
+    The original ``_delta_log`` stays untouched, but after conversion
+    THIS engine's log is the table.  ``dry_run`` reports without
+    committing.
+
+    ``preserve_history=True`` replays EVERY Delta JSON commit as one
+    native commit instead of folding to a single version-0 snapshot,
+    so time travel, ``read_changes`` and the SetTransaction ledger
+    span the pre-convert history.  It needs the JSON from version 0,
+    every historical file on disk, no deletion vectors, no column
+    mapping, no contract-carrying historical schemas and a stable
+    partition layout; the snapshot convert covers everything the
+    replay refuses."""
+    root = str(path)
+    if tablelog.table_exists(root):
+        raise TableExistsError(
+            f"{root!r} already has a {tablelog.LOG_DIR} transaction "
+            "log; convert_from_delta only onboards tables not yet "
+            "converted")
+    log = delta_interop.read_log_segment(os.path.join(root, "_delta_log"))
+    meta_action, files, app_versions, writer_features = \
+        _fold_delta_head(root, log)
+    meta = _translate_delta_metadata(root, meta_action, writer_features)
+    for rel in sorted(files):
+        _check_delta_file(root, files[rel], meta.pcols, "live",
+                          "the converted table would be unreadable")
+    plan = (_plan_delta_history(root, log, meta, files)
+            if preserve_history else None)
+    if meta.id_fields and files:
+        _prove_delta_id_mode(root, sorted(files), meta.id_fields)
+    counts = {rel: _delta_num_records(root, rel, a)
+              for rel, a in files.items()}
+    dv_counts = _delta_dv_counts(root, files, counts)
+    dv_rel = (_write_delta_dv_sidecar(root, files, sorted(dv_counts))
+              if dv_counts and not dry_run else None)
+    adds = [_delta_addfile(root, files[rel], rel, counts[rel],
+                           meta.stat_types, dv_counts.get(rel, 0), dv_rel)
+            for rel in sorted(files)]
+    if dry_run:
+        return _convert_result(adds, meta, log.head, history=plan)
+    if plan is not None:
+        live = _replay_delta_history(root, plan, meta, files)
+        return _convert_result(live, meta, log.head,
+                               version=len(plan) - 1, history=plan)
+    txn = Transaction(root, None, "CONVERT FROM DELTA", {
+        "numFiles": len(adds), "deltaVersion": log.head})
+    txn.checks.append(_table_absent(root, WriteMode.error))
+    # the carried SetTransaction ledgers live in the COMMIT, so a
+    # cold replay of version 0 keeps them
+    txn.commit(adds, metadata=Metadata(
+        schema_json=meta.schema.json(), partition_columns=meta.pcols,
+        configuration=meta.cfg),
+        metrics={"num_output_rows": sum(a.live_records for a in adds)},
+        txns=app_versions)
+    return _convert_result(adds, meta, log.head, version=0)
 
 
 def read_delta_changes(
@@ -6047,74 +5822,50 @@ def read_delta_changes(
       vacuumed-sidecar rule);
     - ``dataChange=false`` actions (compaction) contribute nothing.
 
-    mode=name COLUMN-MAPPED feeds decode (r15): change/data files
-    carry physical column names — the feed reads under the physical
-    schema and aliases back to logical, same shape as the native
-    colmap read path (flat types, un-renamed partition columns).
+    The log is read with ``convert_from_delta``'s rules: the same
+    segment choice, reader-protocol gate and column-mapping
+    translation.  mode=name column-mapped feeds decode: change/data
+    files carry physical column names, read under the physical schema
+    and aliased back to logical.
 
-    Honest scope (pointed refusals): the JSON log must be contiguous
-    from version 0 (checkpoint-tail replay is a convert concern, not
-    a feed's); deletion-vector-carrying adds/removes in a commit
-    WITHOUT cdc files refuse (the writer should have emitted cdc
-    files; cross-version DV diffing of a foreign log is not
+    Honest scope (pointed refusals): the segment must be the JSON log
+    from version 0 (a checkpoint-reconstructed log, or one whose
+    checkpoint claims a version beyond its JSON tail, has no
+    replayable history); deletion-vector-carrying adds/removes in a
+    commit WITHOUT cdc files refuse (the writer should have emitted
+    cdc files; cross-version DV diffing of a foreign log is not
     attempted); mode='id' colmap refuses (the footer equivalence
     proof is a one-shot convert cost, not a per-read one); a schema-
     or partition-layout-changing ``metaData`` action INSIDE the
     window refuses (mid-feed evolution — resume past it with a
     fresh reader, the same rule the native streaming source
     enforces)."""
-    from urllib.parse import unquote
-
     root = str(path)
     dlog = os.path.join(root, "_delta_log")
-    if not os.path.isdir(dlog):
-        raise FileNotFoundError(f"no Delta log at {dlog!r}")
-    versions = sorted(
-        int(n[:-5]) for n in os.listdir(dlog)
-        if n.endswith(".json") and n[:-5].isdigit())
-    if not versions or versions[0] != 0 or \
-            versions != list(range(len(versions))):
+    log = delta_interop.read_log_segment(dlog)
+    if log.checkpoint is not None:
         raise ValueError(
-            f"Delta log under {dlog!r} is not a contiguous JSON tail "
-            f"from version 0 (found {versions[:4]}...); the change "
-            "feed replays JSON commits only — convert_from_delta "
-            "handles checkpointed logs (snapshot, not history)")
-    head = versions[-1]
+            f"Delta log under {dlog!r} replays from the checkpoint at "
+            f"version {log.checkpoint}, not a contiguous JSON tail from "
+            "version 0; the change feed replays JSON commits only — "
+            "convert_from_delta handles checkpointed logs (snapshot, "
+            "not history)")
+    head = log.head
     end = head if ending_version is None else ending_version
     if not (-1 <= starting_version <= end <= head):
         raise ValueError(
             f"need -1 <= starting_version <= ending_version <= "
             f"{head}, got ({starting_version}, {end})")
 
-    def _actions(v: int) -> list[dict[str, Any]]:
-        with open(os.path.join(dlog, f"{v:020d}.json"),
-                  encoding="utf-8") as f:
-            return [json.loads(line) for line in f if line.strip()]
-
-    # protocol gate + schema: replay metadata up to `end`, caching
-    # the WINDOW commits' action lists so the feed loop below never
-    # re-opens/re-parses the same JSON files (one driver pass per
-    # feed read).  The schema in force ENTERING the window is the
-    # feed's schema, and a schema- or layout-changing metaData inside
-    # the window refuses.
+    # protocol gate + schema over versions 0..end.  The schema in force
+    # ENTERING the window is the feed's schema, and a schema- or
+    # layout-changing metaData inside the window refuses.
     meta_entering: Optional[dict[str, Any]] = None
-    window_actions: dict[int, list[dict[str, Any]]] = {}
-    for v in range(0, end + 1):
-        acts = _actions(v)
-        if v > starting_version:
-            window_actions[v] = acts
+    for v, acts in log.commits[:end + 1]:
         for action in acts:
             if "protocol" in action:
-                p = action["protocol"]
-                mrv = int(p.get("minReaderVersion", 1))
-                feats = set(p.get("readerFeatures") or [])
-                if mrv == 2:
-                    feats.add("columnMapping")
-                if mrv > 3 or (feats - _DELTA_READER_FEATURES):
-                    raise ValueError(
-                        f"Delta table at {root!r} requires reader "
-                        f"version {mrv} / features {sorted(feats)}; "
-                        "outside this engine's decodable surface")
+                delta_interop.check_reader_protocol(action["protocol"],
+                                                    root)
             elif "metaData" in action:
                 m = action["metaData"]
                 # a metaData in the window's FIRST commit is the
@@ -6140,9 +5891,9 @@ def read_delta_changes(
     if meta_entering is None:
         raise ValueError(f"Delta log under {dlog!r} has no metaData "
                          "action — not a valid table")
-    mcfg = dict(meta_entering.get("configuration") or {})
-    cm_mode = mcfg.get("delta.columnMapping.mode")
-    if cm_mode == "id":
+    mode = (meta_entering.get("configuration") or {}).get(
+        "delta.columnMapping.mode")
+    if mode == "id":
         raise ValueError(
             "mode='id' column-mapped change feeds are not decoded "
             "(the footer field-id equivalence proof is a one-shot "
@@ -6151,40 +5902,7 @@ def read_delta_changes(
     schema = StructType.fromJson(
         _json_loads(meta_entering["schemaString"]))
     pcols = list(meta_entering.get("partitionColumns") or [])
-    # mode=name feeds decode (r15): change/data files carry PHYSICAL
-    # column names — read under the physical schema, alias back to
-    # logical at the end (the same shape _read_files uses for native
-    # colmap tables).  Scope mirrors the convert: flat types,
-    # un-renamed partition columns.
-    feed_map: dict[str, str] = {}  # logical -> physical
-    for f in schema.fields:
-        phys = (f.metadata or {}).get(
-            "delta.columnMapping.physicalName")
-        if cm_mode == "name":
-            if not isinstance(f.dataType, (
-                    ByteType, ShortType, IntegerType, LongType,
-                    FloatType, DoubleType, DecimalType, StringType,
-                    BooleanType, DateType, TimestampType,
-                    BinaryType)):
-                raise ValueError(
-                    f"column-mapped change feed: column {f.name!r} "
-                    f"has nested type {f.dataType.simpleString()}; "
-                    "physical names inside nested types do not "
-                    "alias")
-            if f.name in pcols and phys and phys != f.name:
-                raise ValueError(
-                    f"partition column {f.name!r} carries physical "
-                    f"name {phys!r}; renamed partition columns do "
-                    "not decode (directories and the feed's basePath "
-                    "discovery are keyed physical while this shape "
-                    "is logical)")
-            if phys and phys != f.name:
-                feed_map[f.name] = str(phys)
-        elif phys and phys != f.name:
-            raise ValueError(
-                f"column {f.name!r} carries physical name {phys!r} "
-                f"but delta.columnMapping.mode is {cm_mode!r}; "
-                "refusing an internally inconsistent log")
+    _, feed_map, _ = _delta_column_mapping(schema, mode, pcols)
     plain_fields = [
         StructField(feed_map.get(f.name, f.name), f.dataType, True)
         for f in schema.fields]
@@ -6208,12 +5926,12 @@ def read_delta_changes(
             *[os.path.join(root, p) for p in paths])
 
     parts: list[DataFrame] = []
-    for v in range(starting_version + 1, end + 1):
+    for v, acts in log.commits[starting_version + 1:end + 1]:
         cdc_paths: list[str] = []
         add_paths: list[str] = []
         remove_paths: list[str] = []
         dv_carrier = False
-        for action in window_actions[v]:
+        for action in acts:
             if "cdc" in action:
                 cdc_paths.append(unquote(action["cdc"]["path"]))
             elif "add" in action:

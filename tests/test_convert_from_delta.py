@@ -17,6 +17,7 @@ from dagster_delta_spark import (
     TableExistsError,
     WriteMode,
     convert_from_delta,
+    read_delta_changes,
 )
 
 
@@ -157,15 +158,7 @@ def test_append_only_maps_and_refusals(spark, tmp_path):
 
 
 @pytest.mark.parametrize("breaker,match", [
-    (lambda r, s: [_proto(mrv=4), _meta(s, _df(s, 0, 1)),
-                   _add(r, "f1.parquet", 4)], "minReaderVersion=4"),
-    # reader FEATURES outside the decodable set refuse
-    (lambda r, s: [{"protocol": {"minReaderVersion": 3,
-                                 "minWriterVersion": 7,
-                                 "readerFeatures": ["timestampNtz"],
-                                 "writerFeatures": ["timestampNtz"]}},
-                   _meta(s, _df(s, 0, 1)),
-                   _add(r, "f1.parquet", 4)], "reader"),
+    # reader-protocol refusals: test_convert_and_feed_share_refusals
     # 'id' mode with NO field metadata is internally inconsistent
     # (real id-mode converts since r15, see test_convert_id_mode)
     (lambda r, s: [_proto(mrv=2),
@@ -199,6 +192,73 @@ def test_refusals(spark, tmp_path, breaker, match):
     _write_log(root, [breaker(root, spark)])
     with pytest.raises(ValueError, match=match):
         convert_from_delta(spark, root)
+    assert not DeltaSparkTable(spark, root).exists()
+
+
+def _raw_add(rel, pv=None):
+    """An add action for a file that need not exist: every shared
+    refusal fires before the data files are looked at."""
+    return {"add": {"path": rel, "partitionValues": dict(pv or {}),
+                    "size": 1, "modificationTime": 1, "dataChange": True,
+                    "stats": json.dumps({"numRecords": 1})}}
+
+
+def _mapped_meta(fields, pcols=(), cfg=None):
+    """metaData whose fields carry column-mapping metadata, field i
+    mapped to physical name ``col-<i>``."""
+    from pyspark.sql.types import StructField, StructType
+
+    sch = StructType([
+        StructField(name, dtype, True, {
+            "delta.columnMapping.id": i + 1,
+            "delta.columnMapping.physicalName": f"col-{i + 1}"})
+        for i, (name, dtype) in enumerate(fields)])
+    return _entry._delta_meta_action(sch.json(), pcols, cfg)
+
+
+def _shared_refusal_log(spark, case):
+    from pyspark.sql.types import LongType, StringType, StructField, \
+        StructType
+
+    name_mode = {"delta.columnMapping.mode": "name"}
+    if case == "minReaderVersion=4":
+        return [_proto(mrv=4), _meta(spark, _df(spark, 0, 1)),
+                _raw_add("f1.parquet")]
+    if case == "reader feature":
+        return [{"protocol": {"minReaderVersion": 3,
+                              "minWriterVersion": 7,
+                              "readerFeatures": ["timestampNtz"],
+                              "writerFeatures": ["timestampNtz"]}},
+                _meta(spark, _df(spark, 0, 1)), _raw_add("f1.parquet")]
+    if case == "nested type":
+        nested = StructType([StructField("x", LongType())])
+        return [_proto(mrv=2, mwv=5),
+                _mapped_meta([("a", LongType()), ("st", nested)],
+                             cfg=name_mode),
+                _raw_add("f1.parquet")]
+    if case == "renamed partition":
+        return [_proto(mrv=2, mwv=5),
+                _mapped_meta([("a", LongType()), ("p", StringType())],
+                             pcols=["p"], cfg=name_mode),
+                _raw_add("col-2=1/f1.parquet", pv={"col-2": "1"})]
+    assert case == "inconsistent"  # physical names, mode unset
+    return [_proto(), _mapped_meta([("a", LongType())]),
+            _raw_add("f1.parquet")]
+
+
+@pytest.mark.parametrize("reader", [convert_from_delta, read_delta_changes],
+                         ids=["convert", "feed"])
+@pytest.mark.parametrize("case", [
+    "minReaderVersion=4", "reader feature", "nested type",
+    "renamed partition", "inconsistent"])
+def test_convert_and_feed_share_refusals(spark, tmp_path, case, reader):
+    """convert_from_delta and read_delta_changes read Delta logs
+    through one set of rules, so the same malformed log refuses on
+    both sides, with the same reason."""
+    root = str(tmp_path / "d")
+    _write_log(root, [_shared_refusal_log(spark, case)])
+    with pytest.raises(ValueError, match=case):
+        reader(spark, root)
     assert not DeltaSparkTable(spark, root).exists()
 
 

@@ -228,3 +228,36 @@ def test_cdf_column_mapping(spark, tmp_path):
     assert empty.columns == ["a", "s", "_change_type",
                              "_commit_version"]
     assert empty.count() == 0
+
+
+def test_cdf_refuses_checkpoint_ahead_of_json_tail(spark, tmp_path):
+    """JSON 0..2 plus a checkpoint pointer claiming version 5 (a
+    partially-copied log): the JSON understates the head, so the feed
+    refuses instead of silently ending at version 2."""
+    root = str(tmp_path / "d")
+    os.makedirs(root)
+    _stage(spark, _df(spark, 0, 2), root, "f1.parquet")
+    meta = _entry._delta_meta_action(_df(spark, 0, 1).schema.json())
+    _log(root, [[_entry._delta_protocol_action(), meta,
+                 _entry._delta_add_action(root, "f1.parquet", 2)],
+                [], []])
+    with open(os.path.join(root, "_delta_log", "_last_checkpoint"),
+              "w") as fh:
+        json.dump({"version": 5, "size": 3}, fh)
+    with pytest.raises(ValueError, match="ahead of its JSON tail"):
+        read_delta_changes(spark, root)
+
+
+def test_cdf_refuses_unknown_column_mapping_mode(spark, tmp_path):
+    """An unknown delta.columnMapping.mode refuses even when no field
+    carries a physical name, as convert_from_delta does."""
+    root = str(tmp_path / "d")
+    os.makedirs(root)
+    _stage(spark, _df(spark, 0, 2), root, "f1.parquet")
+    _log(root, [[_entry._delta_protocol_action(mrv=2, mwv=5),
+                 _entry._delta_meta_action(
+                     _df(spark, 0, 1).schema.json(),
+                     cfg={"delta.columnMapping.mode": "bogus"}),
+                 _entry._delta_add_action(root, "f1.parquet", 2)]])
+    with pytest.raises(ValueError, match="columnMapping.mode='bogus'"):
+        read_delta_changes(spark, root)

@@ -184,3 +184,25 @@ def test_replace_where_dry_run_still_validates(spark, tmp_table):
     assert res.get("dry_run") is True
     assert res["num_deleted_rows"] == 0
     assert t.version() == 0
+
+
+def test_replace_where_refuses_mistyped_input(spark, tmp_table):
+    """An input column whose type differs from the table's refuses,
+    in both modes, before anything is staged: ``int`` keys would
+    otherwise land as int32 files inside the ``bigint`` table."""
+    from dagster_delta_spark.table import SchemaMismatchError
+
+    t = _base(spark, tmp_table)
+    narrow = spark.createDataFrame([(1000, 1, -1.0)],
+                                   "k int, g bigint, v double")
+    for use_dv in (False, True):
+        with pytest.raises(SchemaMismatchError, match="k"):
+            t.replace_where(narrow, "g < 3", use_dv=use_dv)
+    with pytest.raises(SchemaMismatchError):
+        t.replace_where(spark.createDataFrame(
+            [(1000, "1")], "k bigint, g string"), "g < 3")
+    assert t.version() == 0
+    # matching types (and an omitted column, null-filled) still commit
+    t.replace_where(spark.createDataFrame([(1000, 1)], "k bigint, g bigint"),
+                    "g < 3")
+    assert t.version() == 1
